@@ -62,17 +62,20 @@ object AirQuality {
   val bronzeSchema: StructType =
     StructType(normalizedColumns.map(StructField(_, StringType, nullable = true)))
 
-  /** S5: semicolon CSV with UTF-8 BOM and a header row. We supply the
-    * normalized schema and skip the header line ourselves so no
-    * header-name mismatch can silently reorder columns. */
+  /** S5: semicolon CSV with UTF-8 BOM and a header row. The read
+    * schema carries the files' own raw headers, so Spark's per-file
+    * header check has nothing to warn about; the columns are then
+    * renamed positionally to [[normalizedColumns]]. Which files may be
+    * read at all is [[filesPassingHeaderGate]]'s decision. */
   def readBronzeCsv(spark: SparkSession, paths: Seq[String]): DataFrame =
     spark.read
       .option("sep", ";")
       .option("header", "true") // consume+discard the raw header line
       .option("encoding", "UTF-8")
       .option("mode", "PERMISSIVE")
-      .schema(bronzeSchema)
+      .schema(StructType(rawHeaders.map(StructField(_, StringType, nullable = true))))
       .csv(paths: _*)
+      .toDF(normalizedColumns: _*)
 
   /** O4: keep only input files whose normalized header matches the
     * expected schema (reference skips whole files on mismatch).
@@ -183,11 +186,18 @@ object AirQuality {
   }
 
   /** O5 + K5: whole-row distinct, then first-write-wins per
-    * (code_site, date_de_debut). */
-  def dedupSilver(df: DataFrame): DataFrame =
-    firstPerKey(df.distinct(), keyColumns)
+    * (code_site, date_de_debut), and per `pollutant` too when the frame
+    * has that column. One call over several pollutants' bronze then
+    * dedups each pollutant exactly as a call over its slice alone
+    * would: within a slice `pollutant` is constant. */
+  def dedupSilver(df: DataFrame): DataFrame = {
+    val keys =
+      if (df.columns.contains("pollutant")) "pollutant" +: keyColumns else keyColumns
+    firstPerKey(df.distinct(), keys)
+  }
 
-  /** Full silver stage for one pollutant's bronze slice. */
+  /** Full silver stage for one pollutant's bronze slice, or for several
+    * pollutants' bronze keyed by its `pollutant` column. */
   def silver(bronze: DataFrame): DataFrame =
     dedupSilver(castSilver(filterEmptyRows(bronze)))
 
@@ -258,23 +268,24 @@ object AirQuality {
     coalesce(f, b)
   }
 
-  /** O9 (+W3): for each `{t}_unite_de_mesure` column, fill missing
-    * units, map to a factor, and emit `{t}_valeur_g_par_L` /
-    * `{t}_valeur_brute_g_par_L`. The factor lookup is a literal map —
-    * a broadcast-free, codegen-friendly expression. */
+  /** O9 (+W3): forward/backward-fill every `{t}_unite_de_mesure`
+    * column in one projection, so all units share one Window operator,
+    * then emit `{t}_valeur_g_par_L` / `{t}_valeur_brute_g_par_L` as the
+    * value times the factor of the FILLED unit. The factor lookup is a
+    * literal map — a broadcast-free, codegen-friendly expression.
+    * Columns keep their order; the converted ones are appended. */
   def convertUnits(df: DataFrame): DataFrame = {
     val factorMap = typedlit(unitFactors)
-    df.columns.filter(_.endsWith("_unite_de_mesure")).foldLeft(df) { (acc, unitCol) =>
-      val prefix = unitCol.stripSuffix("_unite_de_mesure")
-      val filled = ffillBfill(col(unitCol))
-      val factor = element_at(factorMap, filled)
-      Seq("_valeur", "_valeur_brute").foldLeft(acc.withColumn(unitCol, filled)) { (a, suffix) =>
-        val valueCol = s"$prefix$suffix"
-        if (a.columns.contains(valueCol))
-          a.withColumn(s"${valueCol}_g_par_L", col(valueCol) * factor)
-        else a
-      }
-    }
+    val unitCols = df.columns.filter(_.endsWith("_unite_de_mesure"))
+    val filled = df.select(df.columns.toIndexedSeq.map(c =>
+      if (unitCols.contains(c)) ffillBfill(col(c)).as(c) else col(c)): _*)
+    val converted = for {
+      unitCol <- unitCols.toIndexedSeq
+      suffix <- Seq("_valeur", "_valeur_brute")
+      valueCol = unitCol.stripSuffix("_unite_de_mesure") + suffix
+      if df.columns.contains(valueCol)
+    } yield (col(valueCol) * element_at(factorMap, col(unitCol))).as(s"${valueCol}_g_par_L")
+    filled.select(col("*") +: converted: _*)
   }
 
   /** A3: NaN-skipping row-wise sum of the converted value columns.

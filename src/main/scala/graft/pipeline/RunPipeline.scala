@@ -26,13 +26,17 @@ import org.apache.spark.sql.functions._
   * Stages:
   *  bronze — gated CSV read, filename partition extraction, write
   *           parquet partitioned by (pollutant, file_date);
-  *  silver — per-configured-pollutant typed/deduped tables
-  *           (partition-pruned reads of the bronze lake), named by
-  *           normalized short name like the reference's;
+  *  silver — one query types and dedups every configured pollutant
+  *           present in bronze (a partition-pruned read of the bronze
+  *           lake) and writes one parquet table partitioned by
+  *           `table=<name>`, the reference's normalized short name;
+  *           gold reads each pollutant's table from its directory;
   *  gold   — prefix/join/impute/convert/total/lag analytics, one
   *           parquet table (+ optional JDBC serve).
   */
 object RunPipeline {
+
+  private val PollutantDir = "/pollutant=([^/]+)/".r
 
   def main(args: Array[String]): Unit = {
     val csvDir = args.headOption.getOrElse("/root/reference/test_files")
@@ -50,13 +54,23 @@ object RunPipeline {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val all = new java.io.File(csvDir).listFiles()
-      .map(_.getPath).filter(_.endsWith(".csv")).sorted.toSeq
+    val all = listCsvs(csvDir)
     val pollutants = sys.env.get("SPARK_GRAFT_POLLUTANTS")
       .map(Pollutants.load).getOrElse(Pollutants.default)
     run(spark, all.take(1), s"$outDir/batch1", "1-file", pollutants)
     run(spark, all, s"$outDir/batchAll", s"${all.size}-file", pollutants)
     spark.stop()
+  }
+
+  /** The `.csv` files directly under `csvDir`, sorted. A missing or
+    * unreadable directory is an error that names it, never an NPE or
+    * a silently empty corpus. */
+  def listCsvs(csvDir: String): Seq[String] = {
+    val files = new java.io.File(csvDir).listFiles()
+    if (files == null)
+      throw new IllegalArgumentException(
+        s"CSV directory $csvDir does not exist or cannot be read")
+    files.map(_.getPath).filter(_.endsWith(".csv")).sorted.toSeq
   }
 
   def run(spark: SparkSession, csvPaths: Seq[String], outDir: String,
@@ -118,24 +132,28 @@ object RunPipeline {
       val bronze = spark.read.parquet(s"$outDir/bronze")
         .withColumn("pollutant",
           lpad(col("pollutant").cast("string"), 2, "0"))
-      // tiny dimension-sized collect: which configured codes have data
-      val present = bronze.select("pollutant").distinct()
-        .collect().map(_.getString(0)).toSet
+      // the codes present are the bronze lake's pollutant= directories,
+      // which the file index has already listed: no Spark job needed
+      val present = bronze.inputFiles.flatMap(f =>
+        PollutantDir.findFirstMatchIn(f).map(_.group(1))).toSet
       val active = pollutants.filter(p => present(p.code))
       present.diff(active.map(_.code).toSet).toSeq.sorted.foreach { c =>
         println(s"[pipeline] $label skipping unconfigured pollutant code $c")
       }
-      active.foreach { p =>
-        // partition-pruned scan: the filter hits the pollutant= dir only
-        AirQuality.silver(bronze.where(col("pollutant") === p.code))
-          .write.mode(SaveMode.Overwrite).parquet(s"$outDir/silver/${p.tableName}")
-      }
+      // one query for every active pollutant: the filter prunes bronze
+      // to their pollutant= dirs, dedup keys on pollutant, and the
+      // write splits the result into one table= dir per pollutant
+      val tableOf = typedlit(active.map(p => p.code -> p.tableName).toMap)
+      AirQuality.silver(bronze.where(col("pollutant").isin(active.map(_.code): _*)))
+        .withColumn("table", element_at(tableOf, col("pollutant")))
+        .write.mode(SaveMode.Overwrite).partitionBy("table")
+        .parquet(s"$outDir/silver")
       active
     }
 
     timed("gold") {
       val silvers = active.map { p =>
-        p.tableName -> spark.read.parquet(s"$outDir/silver/${p.tableName}")
+        p.tableName -> spark.read.parquet(s"$outDir/silver/table=${p.tableName}")
       }.toMap
       // one-pass shape (r7 verdict item 8): the joined base writes to
       // the scratch dir once; the impute/convert/lag stages read it

@@ -111,15 +111,11 @@ object RunScheduled {
   def runSimulated(spark: SparkSession, csvDir: String, outDir: String,
       windowDays: Int = 3,
       pollutants: Seq[Pollutant] = Pollutants.default): Int = {
-    val files = allCsvs(csvDir)
+    val files = RunPipeline.listCsvs(csvDir)
     val dates = files.flatMap(fileDate).distinct.sorted
     dates.foreach(d => tick(spark, csvDir, outDir, d, windowDays, pollutants))
     dates.size
   }
-
-  private def allCsvs(csvDir: String): Seq[String] =
-    Option(new java.io.File(csvDir).listFiles()).map(_.toSeq).getOrElse(Nil)
-      .map(_.getPath).filter(_.endsWith(".csv")).sorted
 
   /** One scheduled run for `today`: land the trailing window into
     * bronze (dynamic partition overwrite), rebuild silver/gold from
@@ -129,7 +125,7 @@ object RunScheduled {
       today: java.time.LocalDate, windowDays: Int = 3,
       pollutants: Seq[Pollutant] = Pollutants.default): Unit = {
     val from = today.minusDays(windowDays - 1L)
-    val window = allCsvs(csvDir).filter(p => fileDate(p).exists(d =>
+    val window = RunPipeline.listCsvs(csvDir).filter(p => fileDate(p).exists(d =>
       !d.isBefore(from) && !d.isAfter(today)))
     val label = s"tick:$today"
     val t0 = System.nanoTime()
