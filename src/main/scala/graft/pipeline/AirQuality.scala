@@ -23,13 +23,13 @@ import org.apache.spark.sql.types._
   *  - A3 row-wise NaN-skipping total src/process_to_curated.py:71-95
   *  - W1/W2 lag-6 diff / pct change src/process_to_curated.py:109-157
   *
-  * Scale posture: the join and every window share one partitioning,
-  * `code_site` (hash for the join via both-sides shuffle on the
-  * composite key; windows partition by `code_site` alone and sort by
-  * `date_de_debut` within). At 100 TB the silver tables would be
-  * written bucketed by `code_site` so the gold join is shuffle-free;
-  * per-site row counts are bounded (hours per year), so window state
-  * never skews.
+  * Scale posture: [[goldFromSilver]] shuffles the one silver table
+  * once, by `code_site`, and that exchange serves both the keyed
+  * aggregate that stands in for the join and every window (windows
+  * partition by `code_site` alone and sort by `date_de_debut` within).
+  * At 100 TB silver would be written bucketed by `code_site` so gold
+  * is shuffle-free; per-site row counts are bounded (hours per year),
+  * so neither the aggregate nor the window state skews.
   *
   * Documented divergence (SURVEY §2.6): the reference's lag-6 is
   * positional over the whole merged frame; the *intent* (its own
@@ -140,7 +140,9 @@ object AirQuality {
 
   /** O2: empty->null, two-format timestamp parse (failure -> null), and
     * float casts (failure -> null). Spark's non-ANSI cast-to-null
-    * matches the reference's try/except->None exactly. */
+    * matches the reference's try/except->None exactly. The `+ 0.0`
+    * turns `-0.0` into `0.0` (IEEE identity for every other value), so
+    * a `-0`/`0` pair is one value before [[dedupSilver]] picks a row. */
   def castSilver(df: DataFrame): DataFrame = {
     val cols = df.columns.map { c =>
       val base = when(trim(col(c)) === "", lit(null)).otherwise(col(c))
@@ -148,7 +150,7 @@ object AirQuality {
         coalesce(
           try_to_timestamp(base, lit("yyyy/MM/dd HH:mm:ss")),
           try_to_timestamp(base, lit("yyyy/MM/dd"))).as(c)
-      else if (floatColumns(c)) base.try_cast("double").as(c)
+      else if (floatColumns(c)) (base.try_cast("double") + 0.0).as(c)
       else base.as(c)
     }
     df.select(cols.toIndexedSeq: _*)
@@ -185,15 +187,18 @@ object AirQuality {
     packed.select((keys.map(col) ++ others.map(c => col(s"__first.$c").as(c))).toIndexedSeq: _*)
   }
 
-  /** O5 + K5: whole-row distinct, then first-write-wins per
-    * (code_site, date_de_debut), and per `pollutant` too when the frame
-    * has that column. One call over several pollutants' bronze then
-    * dedups each pollutant exactly as a call over its slice alone
-    * would: within a slice `pollutant` is constant. */
+  /** O5 + K5: first-write-wins per (code_site, date_de_debut), and per
+    * `pollutant` too when the frame has that column, in one shuffle.
+    * [[firstPerKey]] orders by every non-key column, so rows that tie
+    * are identical and the reference's whole-row distinct would not
+    * change the survivor ([[castSilver]] already made `-0.0` and `0.0`
+    * one value). One call over several pollutants' bronze dedups each
+    * pollutant exactly as a call over its slice alone would: within a
+    * slice `pollutant` is constant. */
   def dedupSilver(df: DataFrame): DataFrame = {
     val keys =
       if (df.columns.contains("pollutant")) "pollutant" +: keyColumns else keyColumns
-    firstPerKey(df.distinct(), keys)
+    firstPerKey(df, keys)
   }
 
   /** Full silver stage for one pollutant's bronze slice, or for several
@@ -215,10 +220,12 @@ object AirQuality {
       .as[graft.core.Measurement]
   }
 
+  private val goldDropped = Seq("date_de_fin", "polluant", "pollutant", "file_date")
+
   /** O6/O7: drop `date_de_fin`/`polluant`, prefix non-key columns with
     * the pollutant table name. */
   def prefixColumns(df: DataFrame, table: String): DataFrame = {
-    val dropped = df.drop("date_de_fin", "polluant", "pollutant", "file_date")
+    val dropped = df.drop(goldDropped: _*)
     val cols = dropped.columns.map { c =>
       if (keyColumns.contains(c)) col(c) else col(c).as(s"${table}_$c")
     }
@@ -240,17 +247,24 @@ object AirQuality {
     * Columns whose mean is null (all-null columns) stay null, like
     * pandas fillna(NaN). */
   def imputeMeans(df: DataFrame): DataFrame = {
-    val numeric = df.schema.fields
+    val numeric = numericColumns(df)
+    if (numeric.isEmpty) df
+    else fillWithMeans(df, df.select(numeric.map(c => avg(col(c)).as(s"__mean_$c")): _*))
+  }
+
+  private def numericColumns(df: DataFrame): Seq[String] =
+    df.schema.fields.toSeq
       .filter(f => f.dataType == DoubleType || f.dataType == FloatType)
       .map(_.name)
-    if (numeric.isEmpty) df
-    else {
-      val means = df.select(numeric.map(c => avg(col(c)).as(s"__mean_$c")).toIndexedSeq: _*)
-      val out = df.columns.map { c =>
-        if (numeric.contains(c)) coalesce(col(c), col(s"__mean_$c")).as(c) else col(c)
-      }
-      df.crossJoin(broadcast(means)).select(out.toIndexedSeq: _*)
+
+  /** Each column `c` that the 1-row `means` has a `__mean_c` for,
+    * coalesced with it through a broadcast cross join. */
+  private def fillWithMeans(df: DataFrame, means: DataFrame): DataFrame = {
+    val filled = means.columns.toSet
+    val out = df.columns.toIndexedSeq.map { c =>
+      if (filled(s"__mean_$c")) coalesce(col(c), col(s"__mean_$c")).as(c) else col(c)
     }
+    df.crossJoin(broadcast(means)).select(out: _*)
   }
 
   /** Unit-string -> multiplicative factor (src/process_to_curated.py:35-39). */
@@ -356,23 +370,36 @@ object AirQuality {
     pctChange6(lagDiff6(totalValeur(convertUnits(imputeMeans(merged)))))
   }
 
-  /** [[gold]] with the N-way joined base MATERIALIZED to the lake
-    * before the analytic stages — the q08 one-pass lesson promoted
-    * into the pipeline (r7 verdict item 8): [[imputeMeans]] feeds
-    * `merged` into TWO plan branches (the 1-row means aggregate and
-    * the main projection), so with live lineage the join and every
-    * silver/bronze scan under it execute twice per gold action. With
-    * the base written once ([[graft.operators.Materialize.toLake]]),
-    * the upstream lineage runs exactly once — in the write job — and
-    * both branches re-read only the (column-pruned) merged parquet.
-    * At 100 TB that is one joined-table write instead of a second
-    * full join + source rescan. PlanAuditSpec asserts the final plan
-    * reads nothing but the scratch parquet. */
-  def goldViaLake(silverTables: Map[String, DataFrame],
-      scratchPath: String): DataFrame = {
-    val prefixed = silverTables.toSeq.sortBy(_._1).map { case (t, df) => prefixColumns(df, t) }
-    val merged = graft.operators.Materialize.toLake(goldJoin(prefixed), scratchPath)
-    pctChange6(lagDiff6(totalValeur(convertUnits(imputeMeans(merged)))))
+  /** [[gold]] of `tables` as one query over the single silver table
+    * that [[RunPipeline]] writes (a `table` column naming each row's
+    * pollutant table). The N-way join becomes one keyed aggregate:
+    * after [[dedupSilver]] each (table, key) has at most one row, so
+    * `first` per table over the rows of a (code_site, date_de_debut)
+    * group is the joined row. A null key never matches in the join,
+    * so such a row groups with its own table only. The means are a
+    * 1-row aggregate over silver: each silver row appears exactly once
+    * in the join, so they equal [[imputeMeans]]'s over the joined
+    * frame. The `code_site` repartition is the plan's one shuffle: the
+    * aggregate and every window reuse it. Columns and their order are
+    * [[gold]]'s. */
+  def goldFromSilver(silver: DataFrame, tables: Seq[String]): DataFrame = {
+    val rows = silver.withColumn("table", col("table").cast("string"))
+      .where(col("table").isin(tables: _*))
+      .drop(goldDropped: _*)
+    val values = rows.columns.toSeq.filterNot(c => keyColumns.contains(c) || c == "table")
+    val numeric = numericColumns(rows)
+    val sorted = tables.sorted
+    val own = when(col("code_site").isNull || col("date_de_debut").isNull, col("table"))
+    val firsts = sorted.map(t =>
+      first(when(col("table") === t, struct(values.map(col): _*)), ignoreNulls = true).as(s"__t_$t"))
+    val merged = rows.repartition(col("code_site"))
+      .groupBy(col("code_site"), col("date_de_debut"), own.as("__k"))
+      .agg(firsts.head, firsts.tail: _*)
+      .select(keyColumns.map(col) ++ sorted.flatMap(t =>
+        values.map(c => col(s"__t_$t").getField(c).as(s"${t}_$c"))): _*)
+    val means = rows.select(sorted.flatMap(t => numeric.map(c =>
+      avg(when(col("table") === t, col(c))).as(s"__mean_${t}_$c"))): _*)
+    pctChange6(lagDiff6(totalValeur(convertUnits(fillWithMeans(merged, means)))))
   }
 
   /** End-to-end: bronze CSV paths -> gold curated frame. The fan-out

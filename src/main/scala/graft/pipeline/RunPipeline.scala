@@ -30,9 +30,9 @@ import org.apache.spark.sql.functions._
   *           present in bronze (a partition-pruned read of the bronze
   *           lake) and writes one parquet table partitioned by
   *           `table=<name>`, the reference's normalized short name;
-  *           gold reads each pollutant's table from its directory;
-  *  gold   — prefix/join/impute/convert/total/lag analytics, one
-  *           parquet table (+ optional JDBC serve).
+  *  gold   — one query over `silver/` (the join as one keyed aggregate,
+  *           then impute/convert/total/lag analytics; no scratch copy),
+  *           one parquet table (+ optional JDBC serve).
   */
 object RunPipeline {
 
@@ -75,16 +75,9 @@ object RunPipeline {
 
   def run(spark: SparkSession, csvPaths: Seq[String], outDir: String,
       label: String, pollutants: Seq[Pollutant] = Pollutants.default): Unit = {
-    def timed[A](stage: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[pipeline] $label%-8s $stage%-7s ${(System.nanoTime() - t0) / 1e9}%8.3f s")
-      r
-    }
-
     val gated = AirQuality.filesPassingHeaderGate(spark, csvPaths)
 
-    timed("bronze") {
+    timed(label, "bronze") {
       AirQuality.withPartitionColumnsFromFilename(
           AirQuality.readBronzeCsv(spark, gated))
         .write.mode(SaveMode.Overwrite)
@@ -92,6 +85,13 @@ object RunPipeline {
         .parquet(s"$outDir/bronze")
     }
     silverGoldServe(spark, outDir, label, pollutants)
+  }
+
+  private def timed[A](label: String, stage: String)(f: => A): A = {
+    val t0 = System.nanoTime()
+    val r = f
+    println(f"[pipeline] $label%-8s $stage%-7s ${(System.nanoTime() - t0) / 1e9}%8.3f s")
+    r
   }
 
   /** Incremental bronze landing for a REPROCESSING-WINDOW tick
@@ -116,13 +116,7 @@ object RunPipeline {
     * entry point shares (one-shot run, scheduler tick). */
   def silverGoldServe(spark: SparkSession, outDir: String,
       label: String, pollutants: Seq[Pollutant] = Pollutants.default): Unit = {
-    def timed[A](stage: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[pipeline] $label%-8s $stage%-7s ${(System.nanoTime() - t0) / 1e9}%8.3f s")
-      r
-    }
-    val active = timed("silver") {
+    val active = timed(label, "silver") {
       // normalize the partition-read pollutant code to its zero-padded
       // string form: sessions WITHOUT partitionColumnTypeInference
       // disabled read the "01" dirs as INTEGER 1, and the pipeline
@@ -151,14 +145,8 @@ object RunPipeline {
       active
     }
 
-    timed("gold") {
-      val silvers = active.map { p =>
-        p.tableName -> spark.read.parquet(s"$outDir/silver/table=${p.tableName}")
-      }.toMap
-      // one-pass shape (r7 verdict item 8): the joined base writes to
-      // the scratch dir once; the impute/convert/lag stages read it
-      // back instead of re-running the N-way join per plan branch
-      AirQuality.goldViaLake(silvers, s"$outDir/scratch/gold_base")
+    timed(label, "gold") {
+      AirQuality.goldFromSilver(spark.read.parquet(s"$outDir/silver"), active.map(_.tableName))
         .write.mode(SaveMode.Overwrite).parquet(s"$outDir/gold")
     }
 
@@ -166,7 +154,7 @@ object RunPipeline {
     // K7: serve gold to the configured JDBC target (the reference's
     // PostgreSQL step — table "curated", replace semantics)
     sys.env.get("SPARK_GRAFT_JDBC_URL").foreach { url =>
-      timed("jdbc") {
+      timed(label, "jdbc") {
         val driver = sys.env.get("SPARK_GRAFT_JDBC_DRIVER")
         serveJdbc(gold, url, driver)
         // the write alone proved nothing end-to-end (r7 verdict: the
@@ -182,7 +170,7 @@ object RunPipeline {
     // STDIN — no JDBC driver jar needed), then reads it back through
     // COPY TO STDOUT and fails the run on any value drift
     sys.env.get("SPARK_GRAFT_PG").foreach { spec =>
-      timed("pgserve") {
+      timed(label, "pgserve") {
         val p = spec.split(":", 5)
         require(p.length >= 4,
           s"SPARK_GRAFT_PG must be host:port:db:user[:password], got $spec")

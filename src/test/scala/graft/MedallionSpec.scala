@@ -1,59 +1,18 @@
 package graft
 
+import graft.GeodairCorpus._
 import graft.pipeline.{AirQuality, Pollutants, RunPipeline, RunScheduled}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.Window
 import org.apache.spark.sql.functions._
 
-import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Path}
-
-/** The medallion pipeline on a tiny self-made GEODAIR-shaped corpus
-  * (FIXTURES.md §1): one-pass silver against per-slice silver, the
+/** The medallion pipeline on tiny self-made GEODAIR-shaped corpora
+  * ([[GeodairCorpus]]): one-pass silver against per-slice silver,
+  * silver's one-shuffle dedup against the whole-row-distinct formula,
+  * gold over the one silver table against the N-way join, the
   * one-window unit conversion against its per-column formula, and the
   * CSV listing's error for a missing directory. */
 class MedallionSpec extends SparkSpec {
-
-  private def tmp(prefix: String): Path = Files.createTempDirectory(prefix)
-
-  /** One data row in file order: the 23 FIXTURES.md §1 columns. */
-  private def row(site: Int, day: Int, hour: Int, short: String,
-      value: String, unit: String, kind: String = "moyenne horaire validée"): String = {
-    val t0 = java.time.LocalDateTime.of(2025, 3, 7 + day, hour, 0)
-    val fmt = java.time.format.DateTimeFormatter.ofPattern("yyyy/MM/dd HH:mm:ss")
-    Seq(t0.format(fmt), t0.plusHours(1).format(fmt), "ATMO SUD", "FR93ZAG01",
-      "ZAG MARSEILLE-AIX", s"FR0${2000 + site}", s"Station $site", "Urbaine",
-      short, "Fond", "A", "Oui", "mesures fixes", s"Auto $short", kind,
-      value, value, unit, "", "", "", "A", "1").mkString(";")
-  }
-
-  private def writeCsv(dir: Path, code: String, day: Int, rows: Seq[String]): Unit = {
-    val text = "﻿" + AirQuality.rawHeaders.mkString(";") + "\n" +
-      rows.map(_ + "\n").mkString
-    Files.write(dir.resolve(f"polluant-${code}_2025-03-${7 + day}%02d.csv"),
-      text.getBytes(UTF_8))
-  }
-
-  /** SO2 (01) and CO (04) over two days at two sites sharing every
-    * (site, hour) key; day 2 of SO2 repeats one day-1 row verbatim and
-    * revises another day-1 value; code 99 is not configured. */
-  private def corpus(): Path = {
-    val dir = tmp("medallion_csv")
-    def rows(day: Int, short: String, unit: String, scale: Double) = for {
-      site <- 0 to 1; hour <- 0 until 12
-    } yield row(site, day, hour, short,
-      String.format(java.util.Locale.ROOT, "%.3f", scale * (site * 100 + day * 24 + hour)),
-      if (hour == 3) "" else unit)
-    val repeated = rows(0, "SO2", "µg-m3", 1.0)(5)
-    val revised = row(1, 0, 7, "SO2", "999.500", "µg-m3", "moyenne horaire brute")
-    for (day <- 0 to 1) {
-      val extra = if (day == 0) Nil else Seq(repeated, revised)
-      writeCsv(dir, "01", day, extra ++ rows(day, "SO2", "µg-m3", 1.0))
-      writeCsv(dir, "04", day, rows(day, "CO", "mg-m3", 0.01))
-    }
-    writeCsv(dir, "99", 0, Seq(row(0, 0, 0, "XX", "1.000", "µg-m3")))
-    dir
-  }
 
   test("listCsvs: a missing CSV directory is a named IllegalArgumentException") {
     val missing = tmp("medallion_missing").resolve("absent").toString
@@ -87,6 +46,59 @@ class MedallionSpec extends SparkSpec {
     val so2 = spark.read.parquet(s"$out/silver/table=so2")
     assert(so2.count() == 2 * 2 * 12)
     assert(so2.groupBy("code_site", "date_de_debut").count().where(col("count") > 1).isEmpty)
+  }
+
+  test("silver dedups in one shuffle: equals the whole-row-distinct formula; -0 lands as 0.0") {
+    val dir = tmp("medallion_silver")
+    val rows = (0 to 5).map(h => row(0, 0, h, "SO2", s"${h + 1}.250", "µg-m3"))
+    val zeros = Seq(row(0, 0, 4, "SO2", "-0", "µg-m3"), row(0, 0, 4, "SO2", "0", "µg-m3"))
+    // SO2: hour 2 repeated verbatim, the -0/0 pair at hour 4, a lone -0
+    // at hour 5; CO: the pair in the other order
+    writeCsv(dir, "01", 0, Seq(rows(2)) ++ rows.take(4) ++ zeros :+ row(0, 0, 5, "SO2", "-0", "µg-m3"))
+    writeCsv(dir, "04", 0, zeros.reverse ++ rows.take(4).map(_.replace("SO2", "CO")))
+    val bronze = AirQuality.withPartitionColumnsFromFilename(
+      AirQuality.readBronzeCsv(spark, RunPipeline.listCsvs(dir.toString)))
+
+    val got = AirQuality.silver(bronze)
+    val expected = AirQuality.firstPerKey(
+      AirQuality.castSilver(AirQuality.filterEmptyRows(bronze)).distinct(),
+      "pollutant" +: AirQuality.keyColumns)
+    def rendered(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    assert(got.columns.toSeq == expected.columns.toSeq)
+    assert(rendered(got) == rendered(expected))
+    assert(got.count() == 6 + 5)
+    val zeroBits = got.where(col("valeur") === 0.0).select("valeur", "valeur_brute").collect()
+      .flatMap(r => Seq(r.getDouble(0), r.getDouble(1))).map(java.lang.Double.doubleToRawLongBits)
+    assert(zeroBits.length == 2 * 3 && zeroBits.forall(_ == 0L))
+  }
+
+  test("goldFromSilver over the one silver table equals gold over the N-way join, null keys included") {
+    val dir = tmp("medallion_nullkey")
+    def hours(site: Int, n: Int, short: String, value: Int => String) =
+      (0 until n).map(h => row(site, 0, h, short, value(site * 100 + h), "µg-m3"))
+    def num(x: Int) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(x * 1.7 + 0.123))
+    val badDate = Some("not a date")
+    // site 0: 4 hours plus an unparseable start in SO2 and CO (6 rows,
+    // fewer than the lag, so the two null-date rows' tie cannot show);
+    // site 1: SO2 only; site 2: all three, NO2 with every valeur empty
+    writeCsv(dir, "01", 0, hours(0, 4, "SO2", num) ++ hours(1, 12, "SO2", num) ++
+      hours(2, 12, "SO2", num) :+ row(0, 0, 4, "SO2", "5.500", "µg-m3", start = badDate))
+    writeCsv(dir, "04", 0, hours(0, 4, "CO", x => num(3 * x)) ++ hours(2, 12, "CO", x => num(3 * x)) :+
+      row(0, 0, 5, "CO", "7.250", "µg-m3", start = badDate))
+    writeCsv(dir, "03", 0, hours(2, 12, "NO2", _ => ""))
+    val out = tmp("medallion_nullkey_out").toString
+    RunPipeline.run(spark, RunPipeline.listCsvs(dir.toString), out, "spec")
+
+    val tables = Seq("so2", "no2", "co")
+    val got = AirQuality.goldFromSilver(spark.read.parquet(s"$out/silver"), tables)
+    val joined = AirQuality.gold(tables.map(t => t -> spark.read.parquet(s"$out/silver/table=$t")).toMap)
+    assert(got.columns.toSeq == joined.columns.toSeq)
+    assert(got.count() == 4 + 2 + 12 + 12 && joined.count() == got.count())
+    assert(got.exceptAll(joined).isEmpty && joined.exceptAll(got).isEmpty)
+    assert(RunPipeline.contentHash(got) == RunPipeline.contentHash(joined))
+    assert(got.where(col("date_de_debut").isNull).count() == 2)
+    assert(got.where(col("no2_valeur").isNotNull).isEmpty)
+    assert(RunPipeline.contentHash(spark.read.parquet(s"$out/gold")) == RunPipeline.contentHash(joined))
   }
 
   test("convertUnits fills every unit column in one Window; rows equal the per-column formula") {

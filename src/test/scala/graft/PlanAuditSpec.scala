@@ -392,39 +392,43 @@ class PlanAuditSpec extends SparkSpec {
     assert(plan.contains("__cell"), s"pair join must key on the cell id:\n$plan")
   }
 
-  test("pipeline gold via lake: the final plan reads only the materialized base, sources scanned once") {
-    import graft.pipeline.AirQuality
-    // the q08 lesson in the PIPELINE context (r7 verdict item 8):
-    // imputeMeans branches the merged join into the means aggregate
-    // AND the main projection — with live lineage every CSV under the
-    // silvers executes once per branch; via the lake the sources run
-    // exactly once (inside toLake's write) and the analytic stages
-    // read nothing but the scratch parquet
-    val files = new java.io.File("/root/reference/test_files")
-      .listFiles().map(_.getPath).filter(_.endsWith(".csv")).sorted.toSeq
-    val gated = AirQuality.filesPassingHeaderGate(spark, files)
-    val bronze = AirQuality.withPartitionColumnsFromFilename(
-      AirQuality.readBronzeCsv(spark, gated))
-    val silvers = Seq("04", "03").map { code =>
-      graft.pipeline.Pollutants.default.find(_.code == code).get.tableName ->
-        AirQuality.silver(bronze.where(col("pollutant") === code))
-    }.toMap
-    val scratch = java.nio.file.Files
-      .createTempDirectory("gold_base").toString + "/base"
-    val gold = AirQuality.goldViaLake(silvers, scratch)
-    val plan = gold.queryExecution.executedPlan.toString()
+  test("pipeline gold from silver: one query over the silver parquet, one code_site shuffle, no join shuffle") {
+    import graft.pipeline.{AirQuality, Pollutants, RunPipeline}
+    // gold reads the one silver table once per plan branch (the means
+    // aggregate and the main rows), never the CSV sources, and the
+    // N-way join is a keyed aggregate that shares the windows'
+    // code_site exchange
+    val csvs = RunPipeline.listCsvs(GeodairCorpus.corpus().toString)
+    val out = GeodairCorpus.tmp("gold_from_silver").toString
+    RunPipeline.run(spark, csvs, out, "plan")
+    val active = Pollutants.default.filter(p => Set("01", "04")(p.code))
+    val gold = AirQuality.goldFromSilver(
+      spark.read.parquet(s"$out/silver"), active.map(_.tableName))
+    val plan = finalPlan(gold).toString()
     assert(!plan.toLowerCase.contains("scan csv"),
-      s"analytic stages must not re-touch the CSV sources:\n$plan")
-    val parquetScans = "Scan parquet".r.findAllIn(plan).size
-    assert(parquetScans == 2, // means aggregate + main projection
-      s"gold must read exactly the materialized base twice, got $parquetScans:\n$plan")
-    assert(plan.contains("base"),
-      s"both scans must target the scratch path:\n$plan")
-    // and the result is the same table the live-lineage gold builds
-    val live = AirQuality.gold(silvers)
+      s"gold must not re-touch the CSV sources:\n$plan")
+    val scans = plan.linesIterator.filter(_.contains("Scan parquet")).toSeq
+    assert(scans.nonEmpty && scans.forall(_.contains(s"$out/silver")),
+      s"gold must scan only the silver parquet:\n$plan")
+    // AQE hides each Exchange inside a leaf query stage, so count from
+    // the rendered tree: the code_site exchange is the only one that
+    // moves silver rows; the means' per-partition partials meet in a
+    // SinglePartition exchange and the 1-row result is broadcast
+    val shuffles = plan.linesIterator.count(l =>
+      l.contains("Exchange") && !l.contains("BroadcastExchange") &&
+        !l.contains("ReusedExchange") && !l.contains("SinglePartition"))
+    assert(shuffles == 1, s"gold must shuffle exactly once:\n$plan")
+    assert(plan.contains("Exchange hashpartitioning(code_site"), plan)
+    assert(!plan.contains("SortMergeJoin"), s"gold must not join by shuffle:\n$plan")
+    // and the result is the table the live-lineage gold builds
+    val bronze = AirQuality.withPartitionColumnsFromFilename(
+      AirQuality.readBronzeCsv(spark, AirQuality.filesPassingHeaderGate(spark, csvs)))
+    val live = AirQuality.gold(active.map(p =>
+      p.tableName -> AirQuality.silver(bronze.where(col("pollutant") === p.code))).toMap)
+    assert(gold.columns.toSeq == live.columns.toSeq)
     assert(gold.count() == live.count() &&
-      gold.exceptAll(live).count() == 0 && live.exceptAll(gold).count() == 0,
-      "goldViaLake must be row-identical to gold")
+      gold.exceptAll(live).isEmpty && live.exceptAll(gold).isEmpty,
+      "goldFromSilver must be row-identical to gold")
   }
 
   test("x91: BPE training reads only the text column; rounds and audit are hash aggs, no join/window") {
