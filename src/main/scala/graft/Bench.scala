@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times the headline queries (Catalog.headlines) on
   * SPARK_GRAFT_SF_DIR and prints one JSON line. Each query is forced
@@ -23,18 +22,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = math.max(2, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "5").toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.sources.TxSparkExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     // one cheap action to absorb session/codegen warmup noise
     spark.read.parquet(s"$sfDir/region.parquet").count()
     // a query that throws must NOT record its time-to-throw as a (fast!)
@@ -57,8 +46,8 @@ object Bench {
     final case class Row(name: String, cold: Double, min: Double,
         med: Double, warm: Double, all: Seq[Double])
     // adjudication dev loop: SPARK_GRAFT_BENCH_ONLY=x88,q20 times a
-    // subset (prefix match) — the X42AB protocol's "min-of-5 of the
-    // suspect plus an untouched control in ONE session". Unset = all.
+    // subset (prefix match) — "min-of-5 of the suspect plus an
+    // untouched control in ONE session". Unset = all.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
     val rows = Catalog.headlines
       .filter(q => only.forall(_.exists(q.name.startsWith))).map { q =>

@@ -1,39 +1,26 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // reference semantics are permissive-cast (failure -> null), and
-      // the DuckDB oracles use TRY_CAST — match them.
+    val spark = Sessions.local(conf = Map(
       // SPARK_GRAFT_ANSI=1 flips the session to ANSI mode (Spark 4's
       // default): the conf-robustness audit — any query whose result
       // depends on permissive casts it didn't spell as try_cast shows
       // up as a failure/mismatch here instead of silently depending
       // on session conf
-      .config("spark.sql.ansi.enabled",
-        sys.env.get("SPARK_GRAFT_ANSI").contains("1").toString)
+      "spark.sql.ansi.enabled" ->
+        sys.env.get("SPARK_GRAFT_ANSI").contains("1").toString,
       // SPARK_GRAFT_STRICT_CODEGEN=1: janino compile errors fail the
       // query instead of silently falling back to interpreted — the
       // audit that catches codegen template bugs unit tests can miss
       // (small toDF plans constant-fold before codegen ever runs).
       // Strict mode keys on the VALUE being "1" — =0 or empty stays
       // non-strict (presence alone used to enable it, inverted contract)
-      .config("spark.sql.codegen.fallback",
-        (!sys.env.get("SPARK_GRAFT_STRICT_CODEGEN").contains("1")).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // SQL row-level DML on graft-tx tables (the x183 family)
-      .config("spark.sql.extensions", "graft.sources.TxSparkExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.sql.codegen.fallback" ->
+        (!sys.env.get("SPARK_GRAFT_STRICT_CODEGEN").contains("1")).toString))
     new java.io.File(outDir).mkdirs()
     // dev loop: SPARK_GRAFT_ONLY=q01,q02 runs a subset (unset = all)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)

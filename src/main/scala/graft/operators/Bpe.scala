@@ -248,7 +248,6 @@ object Bpe {
       session.conf.set("spark.sql.shuffle.partitions", target.toString)
       var exhausted = false
       while (found.size < merges && !exhausted) {
-        val __t0 = System.nanoTime()
         val top = state
           .select(symsOf(col("sym")).as("__s"), col("freq"))
           .where(size(col("__s")) >= 2)
@@ -260,10 +259,6 @@ object Bpe {
           .agg(sum(col("freq")).as("c"))
           .orderBy(col("c").desc, col("l").asc, col("r").asc)
           .limit(window).collect()
-        if (sys.env.contains("SPARK_GRAFT_BPE_DEBUG"))
-          Console.err.println(f"[bpe] round found=${found.size}%5d " +
-            f"${(System.nanoTime() - __t0) / 1e9}%7.3f s " +
-            f"candidates=${top.length}")
         // the agg above materialized `state`; its parent cache (two
         // rounds back) can no longer be read by anything — release it
         if (parent != null) parent.unpersist(blocking = false)

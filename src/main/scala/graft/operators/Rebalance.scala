@@ -21,33 +21,26 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * all ∝ partition count) with no extra data to amortize it. The target
   * is therefore derived from the input size (guide §2.2 "fewer, larger
   * partitions"; brief: partitioning must be scale-adaptive, not a
-  * constant tuned to the local core count): ceil(bytes / bytesPerTask)
-  * clamped to [1, defaultParallelism]. `bytesPerTask` is compressed
+  * constant tuned to the local core count): ceil(bytes / DefaultBytesPerTask)
+  * clamped to [1, defaultParallelism]. `DefaultBytesPerTask` is compressed
   * parquet bytes; the default is deliberately small (text expands 2–4×
   * on decode and the downstream stage is per-row compute, not scan), so
-  * any input above ~cores×bytesPerTask still fans out to every core —
-  * on a production cluster this knob is irrelevant because inputs that
+  * any input above ~cores×DefaultBytesPerTask still fans out to every core —
+  * on a production cluster this constant is irrelevant because inputs that
   * large arrive well-split and skip the shuffle entirely.
   */
 object Rebalance {
   /** Compressed input bytes per task for the fan-out target. Probed at
     * sf0.1 (see OPTIMIZATION_r18.md): per-task fixed cost dominates
-    * below ~100 KB/task; scan/tokenize parallelism wins above. Override
-    * with spark.graft.rebalance.bytesPerTask (session conf) or the
-    * GRAFT_REBALANCE_BYTES env for A/B probes. */
+    * below ~100 KB/task; scan/tokenize parallelism wins above. */
   private val DefaultBytesPerTask: Long = 128L * 1024
-
-  private def bytesPerTask(df: DataFrame): Long =
-    sys.env.get("GRAFT_REBALANCE_BYTES").map(_.toLong).getOrElse(
-      df.sparkSession.conf.get("spark.graft.rebalance.bytesPerTask",
-        DefaultBytesPerTask.toString).toLong)
 
   def apply(df: DataFrame): DataFrame = {
     val p = df.sparkSession.sparkContext.defaultParallelism
     narrowScanFacts(df) match {
       case Some((splits, bytes)) =>
-        val bpt = math.max(1L, bytesPerTask(df))
-        val want = math.min(p.toLong, math.max(1L, (bytes + bpt - 1) / bpt)).toInt
+        val want = math.min(p.toLong,
+          math.max(1L, (bytes + DefaultBytesPerTask - 1) / DefaultBytesPerTask)).toInt
         if (splits < want) df.repartition(want) else df
       case None =>
         // Post-shuffle or non-file input: partition count already governed

@@ -657,8 +657,8 @@ object Sampling {
 
   /** The original column-algebra form — the exact algebra the DuckDB
     * oracles replay (x97, x152-x154), kept as the equivalence
-    * REFERENCE for the native expression (FunctionsSpec + NbAB
-    * compare them row-for-row). */
+    * REFERENCE for the native expression (FunctionsSpec compares them
+    * row-for-row). */
   private[graft] def hashedNgramBucketsReference(text: Column, buckets: Int,
       salt: String): Column = {
     val toks = graft.operators.TextAnalysis.tokens(text)

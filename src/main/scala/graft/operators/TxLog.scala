@@ -1785,10 +1785,6 @@ object TxLog {
       batch: DataFrame, keyCol: String, deleteCol: Option[String],
       statsCols: Seq[String], txn: Option[(String, Long)])
       (beforeClaim: () => Unit): (Long, Boolean) = {
-    val __dbg = sys.env.contains("GRAFT_MERGE_TIMING")
-    var __t0 = System.nanoTime()
-    def __tick(l: String): Unit = if (__dbg) { val n = System.nanoTime()
-      Console.err.println(f"[mergetiming] $l%-16s ${(n - __t0) / 1e6}%.1f ms"); __t0 = n }
     // MATERIALIZE the change batch once (lazy localCheckpoint, freed in
     // the finally below): the validation aggregate, the hash-prune and
     // the rewrite each consume the batch, and each otherwise re-runs
@@ -1813,15 +1809,14 @@ object TxLog {
         "root — checkpoint blocks for this merge will not be freed")
     try {
     mergeCoreOn(spark, root, batchM, keyCol, deleteCol, statsCols,
-      txn, __tick)(beforeClaim)
+      txn)(beforeClaim)
     } finally batchRdd.foreach(_.unpersist(blocking = false))
   }
 
   /** [[mergeCore]]'s body over the already-materialized batch. */
   private def mergeCoreOn(spark: SparkSession, root: String,
       batch: DataFrame, keyCol: String, deleteCol: Option[String],
-      statsCols: Seq[String], txn: Option[(String, Long)],
-      __tick: String => Unit)
+      statsCols: Seq[String], txn: Option[(String, Long)])
       (beforeClaim: () => Unit): (Long, Boolean) = {
     val upserts = deleteCol match {
       case Some(d) => batch.where(!coalesce(col(d), lit(false))).drop(d)
@@ -1830,10 +1825,8 @@ object TxLog {
     val ddl = ddlOf(upserts)
     pinnedSchema(spark, root).foreach(p => require(p == ddl,
       s"merge: schema drift on $root — table pins [$p], batch is [$ddl]"))
-    __tick("pin-check")
     val stats = if (statsCols.isEmpty) Seq(keyCol) else statsCols
     val st0 = foldLog(spark, root, None)
-    __tick("foldLog")
     // ONE batch aggregate: size, null-key and unique-key contract, the
     // key span the prune + conflict checks read — AND (for hash-statted
     // keys over a boundedly-dirred table) the hash-stab itself, fused
@@ -1877,7 +1870,6 @@ object TxLog {
       countDistinct(col(keyCol)).as("nd"), min(k).as("mn"),
       max(k).as("mx")) ++ maskAggs
     val r = probe.agg(aggCols.head, aggCols.tail: _*).head()
-    __tick("batch-agg")
     require(r.getLong(0) > 0, s"merge: empty batch for $root")
     require(r.getLong(1) == r.getLong(0),
       s"merge: batch has null $keyCol keys")
@@ -1917,17 +1909,14 @@ object TxLog {
       } else
         hashAdmitted(spark, batch.select(col(keyCol)), keyCol,
           touchedBySpan)
-    __tick("hashAdmitted")
     val out =
       if (touched.isEmpty) upserts // nothing can hold a batch key
       else readMasked(spark, root, touched,
           pinnedSchemaAt(spark, root, v0), dvs0, st0.clones, st0.evos)
         .join(batch.select(col(keyCol)), Seq(keyCol), "left_anti")
         .unionByName(upserts)
-    __tick("plan-out")
     val add = writeDataDir(spark, root, out, stats, st0.constraints,
       effectiveBloomCols(st0, out))
-    __tick("writeDataDir")
     val removes = touched.map(_.dir)
     val bytes = renderManifest("merge", Seq(add), removes,
       stats.headOption, Some(ddl), txn)
@@ -2708,8 +2697,8 @@ object TxLog {
     * ~10 ms, saved ~160 ms), above it the per-row tax compounds with
     * table size while the saved job stays fixed (20k rows × 480 aggs
     * already doubles the write stage). On an object store the saved
-    * job also saves a listing round-trip, so production deployments
-    * may raise this; a 100 TB OPTIMIZE (trillions of rows) always
+    * job also saves a listing round-trip, so a deployment there may
+    * raise this constant; a 100 TB OPTIMIZE (trillions of rows) always
     * takes the fallback's codegen'd grouped aggregate, whose extra
     * scan is column-pruned to the stat columns. */
   private val FusedBucketStatsMaxRowAggs = 4L * 1000 * 1000
@@ -2735,10 +2724,8 @@ object TxLog {
       spark.conf.get("spark.graft.tx.fusedBucketStats", "true") == "true"
     val perBucket = 1L + specs.map(s => if (s.isSum) 1L else 2L).sum +
       bloomCols.size.toLong * bloomWords
-    val maxRowAggs = spark.conf
-      .get("spark.graft.tx.fusedBucketStats.maxRowAggs",
-        FusedBucketStatsMaxRowAggs.toString).toLong
-    if (wantsFusedBucketStats(enabled, nBuckets, perBucket, rows, maxRowAggs))
+    if (wantsFusedBucketStats(enabled, nBuckets, perBucket, rows,
+        FusedBucketStatsMaxRowAggs))
       Some(new FusedBucketStats(nBuckets.toInt, specs, bloomCols))
     else None
   }
@@ -2922,16 +2909,11 @@ object TxLog {
       buckets: Int, extraStats: Seq[String] = Seq.empty): Long = {
     require(buckets >= 1,
       s"optimizeHash: buckets must be >= 1, got $buckets")
-    val __dbg = sys.env.contains("GRAFT_MERGE_TIMING")
-    var __t0 = System.nanoTime()
-    def __tick(l: String): Unit = if (__dbg) { val n = System.nanoTime()
-      Console.err.println(f"[ohtiming] $l%-16s ${(n - __t0) / 1e6}%.1f ms"); __t0 = n }
     val st0 = foldLog(spark, root, None)
     val (v0, live0, dvs0) = (st0.version, st0.files, st0.dvs)
     require(live0.nonEmpty, s"optimizeHash: $root has no live data at v$v0")
     val snap = readMasked(spark, root, live0,
       pinnedSchemaAt(spark, root, v0), dvs0, st0.clones, st0.evos)
-    __tick("snap-build")
     val width = math.max(1L, (HashSpace + buckets - 1) / buckets)
     val bucket = (keyHash(col(keyCol)) / width).cast("long")
     val rel = s"data/${java.util.UUID.randomUUID()}"
@@ -2961,10 +2943,8 @@ object TxLog {
       .sortWithinPartitions(col("__b"), keyHash(col(keyCol)))
       .write.mode(SaveMode.ErrorIfExists)
       .partitionBy("__b").parquet(s"$root/$rel")
-    __tick("write")
     val stats = fused.map(_.result())
       .getOrElse(bucketStats(snap, bucket, specs, blooms))
-    __tick("bucketStats")
     val fs = rawFs(spark, root)
     val adds = fs.listStatus(new org.apache.hadoop.fs.Path(s"$root/$rel"))
       .filter(_.isDirectory).map(_.getPath.getName)
@@ -2975,9 +2955,7 @@ object TxLog {
     val removes = live0.map(_.dir)
     val bytes = renderManifest("rewrite", adds, removes, Some(keyCol),
       Some(ddlOf(snap)))
-    val rv = claimRewrite(spark, root, "optimizeHash", v0, removes.toSet, bytes)
-    __tick("claim")
-    rv
+    claimRewrite(spark, root, "optimizeHash", v0, removes.toSet, bytes)
   }
 
   /** COMPACT the small-dir tail (the published Delta OPTIMIZE

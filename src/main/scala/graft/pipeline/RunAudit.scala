@@ -98,16 +98,7 @@ object RunAudit {
     }
     val corpusDir = positional.headOption.getOrElse("/root/testdata/sf0.001")
     val outDir = positional.drop(1).headOption.getOrElse("/tmp/graft_audit")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "16"))
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
     val emb = {
       val p = new org.apache.hadoop.fs.Path(s"$corpusDir/embeddings.parquet")
       if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))

@@ -105,16 +105,7 @@ object RunCorpus {
     }
     val docsDir = positional.headOption.getOrElse("/root/testdata/sf0.001")
     val outDir = positional.drop(1).headOption.getOrElse("/tmp/graft_corpus")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "16"))
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
     val docs = spark.read.parquet(s"$docsDir/documents.parquet")
     val eval = evalPath.map(p => spark.read.parquet(p))
     run(spark, docs, outDir,

@@ -98,11 +98,7 @@ object RunGc {
       i += 1
     }
     val root = positional.headOption.getOrElse("/tmp/graft_intake")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
     val findings = run(spark, root, ageMinutes, maxFiles, apply,
       retainVersions = retainVersions, checkpointAfter = checkpointAfter,
       auditStats = auditStats, statsOverlapPpm = statsOverlapPpm,

@@ -139,16 +139,7 @@ object RunIntake {
     }
     val batchDir = positional.headOption.getOrElse("/root/testdata/sf0.001")
     val stateDir = positional.drop(1).headOption.getOrElse("/tmp/graft_intake")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "16"))
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
     val batch = spark.read.parquet(s"$batchDir/documents.parquet")
     val eval = evalPath.map(p =>
       (spark.read.parquet(p), "doc_id", "text"))

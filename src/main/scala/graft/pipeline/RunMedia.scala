@@ -47,16 +47,7 @@ object RunMedia {
     }
     val docsDir = positional.headOption.getOrElse("/root/testdata/sf0.001")
     val outDir = positional.drop(1).headOption.getOrElse("/tmp/graft_media")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "16"))
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
     val ids = spark.read.parquet(s"$docsDir/documents.parquet")
       .select("doc_id")
     run(spark, ids, outDir, batches)

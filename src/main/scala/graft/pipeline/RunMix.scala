@@ -117,16 +117,7 @@ object RunMix {
     }
     val docsDir = positional.headOption.getOrElse("/root/testdata/sf0.001")
     val outDir = positional.drop(1).headOption.getOrElse("/tmp/graft_mix")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "16"))
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
     require(targets.isEmpty == targetBudget.isEmpty,
       "--targets and --target-budget come together (the measured mixture)")
     // --accepted: docsDir is a RunIntake stateDir — mix the journey's

@@ -41,18 +41,9 @@ object RunPipeline {
   def main(args: Array[String]): Unit = {
     val csvDir = args.headOption.getOrElse("/root/reference/test_files")
     val outDir = args.drop(1).headOption.getOrElse("/tmp/graft_pipeline")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "16"))
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // keep pollutant codes as zero-padded strings ("01", not 1)
-      .config("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // keep pollutant codes as zero-padded strings ("01", not 1)
+    val spark = graft.Sessions.local(conf = Map(
+      "spark.sql.sources.partitionColumnTypeInference.enabled" -> "false"))
 
     val all = listCsvs(csvDir)
     val pollutants = sys.env.get("SPARK_GRAFT_POLLUTANTS")

@@ -51,16 +51,7 @@ object RunReplica {
       i += 1
     }
     require(positional.size == 2, "RunReplica needs srcRoot and dstRoot")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "16"))
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
     val (applied, head) = run(spark, positional(0), positional(1), key,
       appId, watchSeconds)
     println(s"[replica] applied=$applied head=$head dst=${positional(1)}")

@@ -74,17 +74,9 @@ object RunScheduled {
     }
     val csvDir = positional.headOption.getOrElse("/root/reference/test_files")
     val outDir = positional.drop(1).headOption.getOrElse("/tmp/graft_scheduled")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "16"))
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // keep pollutant codes as zero-padded strings ("01", not 1)
+    val spark = graft.Sessions.local(conf = Map(
+      "spark.sql.sources.partitionColumnTypeInference.enabled" -> "false"))
 
     if (intervalMinutes <= 0) {
       val n = runSimulated(spark, csvDir, outDir, windowDays)

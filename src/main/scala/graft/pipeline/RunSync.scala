@@ -70,16 +70,7 @@ object RunSync {
     val oldDir = positional(0)
     val newDir = positional(1)
     val stateDir = positional.drop(2).headOption.getOrElse("/tmp/graft_intake")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "16"))
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
     val vectors =
       if (semantic)
         Some((spark.read.parquet(s"$oldDir/embeddings.parquet"),

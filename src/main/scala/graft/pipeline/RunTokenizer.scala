@@ -52,16 +52,7 @@ object RunTokenizer {
     }
     val inDir = positional.headOption.getOrElse("/root/testdata/sf0.001")
     val outDir = positional.drop(1).headOption.getOrElse("/tmp/graft_tokenizer")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "16"))
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
     run(spark, inDir, outDir, merges, fromState)
       .foreach { case (k, v) => println(f"[tokenizer] $k%-20s $v") }
     spark.stop()

@@ -202,12 +202,18 @@ class BpeSpec extends SparkSpec {
     val s8 = Bpe.train(st, merges = 8)
     assert(s8.size === 8)
     assert(Bpe.trainBatched(st, merges = 8, batch = 1, window = 1) === s8)
+    // the state's partition layout never changes the merges
+    assert(Bpe.train(st.repartition(1), merges = 8) === s8)
+    assert(Bpe.train(st.repartition(7), merges = 8) === s8)
     // batched mode on real text: deterministic, right count, every
     // accepted pair's count exact under incremental re-symbolization
     // (cross-checked against a fresh full re-application of the chain)
     val b = Bpe.trainBatched(st, merges = 12, batch = 4, window = 16)
     assert(b.size === 12 && b.map(_.rank) === (1 to 12))
     assert(b === Bpe.trainBatched(st, merges = 12, batch = 4, window = 16))
+    // prefix stability: a smaller budget learns exactly the larger
+    // budget's first merges, so a vocabulary extends without retraining
+    assert(Bpe.trainBatched(st, merges = 6, batch = 4, window = 16) === b.take(6))
   }
 
   test("segmentCounts: chunked large-table application == one-projection reference") {

@@ -4,11 +4,12 @@ import graft.sources.{Ingest, LocalFileConnector, RateLimiter}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Connector-boundary semantics (S1/S2): polling retry, rate cap, and
-  * the local-file connector over the reference's real corpus. No Spark
-  * session — ingest is upstream of the engine. */
+  * the local-file connector over a GEODAIR-shaped corpus (BOM, French
+  * header, `polluant-{code}_{date}.csv` names). No Spark session —
+  * ingest is upstream of the engine. */
 class IngestSpec extends AnyFunSuite {
 
-  private val refDir = "/root/reference/test_files"
+  private val refDir = GeodairCorpus.corpus().toString
 
   test("fetchWithRetry: initial delay, then polls until ready") {
     val sleeps = scala.collection.mutable.ArrayBuffer[Long]()

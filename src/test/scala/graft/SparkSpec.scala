@@ -5,23 +5,13 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for suites (one per suite via lazy val). */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    // STRICT codegen in tests: a janino compile error in a generated
-    // expression normally falls back to interpreted execution with
-    // only a logged warning — correct results, silently interpreted
-    // hot paths. Tests must fail instead (caught a real line-leading
-    // "||" margin-stripping bug in FloatDot's template).
-    .config("spark.sql.codegen.fallback", "false")
-    .config("spark.sql.ansi.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    // the SQL-DML door for graft-tx tables (MERGE/UPDATE/DELETE) —
-    // active in every suite so the lowering rule rides the whole run
-    .config("spark.sql.extensions", "graft.sources.TxSparkExtensions")
-    .getOrCreate()
+  // STRICT codegen in tests: a janino compile error in a generated
+  // expression normally falls back to interpreted execution with only a
+  // logged warning — correct results, silently interpreted hot paths.
+  // Tests must fail instead (caught a real line-leading "||"
+  // margin-stripping bug in FloatDot's template).
+  lazy val spark: SparkSession =
+    Sessions.local(4, Map("spark.sql.codegen.fallback" -> "false"))
 
   def sf(name: String): String = s"/root/testdata/$name"
 }

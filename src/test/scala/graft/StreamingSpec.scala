@@ -44,11 +44,13 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming silver equals batch silver row count (K5 as watermarked dedup)") {
-    val coFiles = new java.io.File("/root/reference/test_files")
-      .listFiles().map(_.getPath).filter(_.contains("polluant-04")).sorted.toSeq
+    // the SO2 files carry a verbatim repeat and a revised value, so the
+    // watermarked dedup has work to do
+    val so2Files = GeodairCorpus.corpus().toFile
+      .listFiles().map(_.getPath).filter(_.contains("polluant-01")).sorted.toSeq
     val dir = java.nio.file.Files.createTempDirectory("aq-stream").toFile
     dir.deleteOnExit()
-    coFiles.foreach { f =>
+    so2Files.foreach { f =>
       java.nio.file.Files.copy(java.nio.file.Paths.get(f),
         java.nio.file.Paths.get(dir.getPath, new java.io.File(f).getName))
     }
@@ -58,7 +60,8 @@ class StreamingSpec extends SparkSpec {
     try { q.processAllAvailable() } finally q.stop()
     val streamed = spark.table("silver_out").count()
     val batch = graft.pipeline.AirQuality.silver(
-      graft.pipeline.AirQuality.readBronzeCsv(spark, coFiles)).count()
+      graft.pipeline.AirQuality.readBronzeCsv(spark, so2Files)).count()
+    assert(batch > 0)
     assert(streamed == batch)
   }
 

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.pipeline.RunPipeline
 
 /** REAL-POSTGRESQL serving round-trip, now THROUGH SPARK ITSELF
@@ -62,16 +60,8 @@ object PgServeProbe {
     try {
       Console.err.println(
         s"[pgserve] server: ${pgSql(port, "SELECT version()")}")
-      val spark = SparkSession.builder().master("local[16]")
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.sql.ansi.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.sources.partitionColumnTypeInference.enabled",
-          "false")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+      val spark = graft.Sessions.local(conf = Map(
+        "spark.sql.sources.partitionColumnTypeInference.enabled" -> "false"))
 
       // the real gold table, from the reference's own CSV corpus
       val csvs = new java.io.File("/root/reference/test_files")

@@ -3,8 +3,6 @@ package graft.tools
 import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, CyclicBarrier}
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.sql.SparkSession
-
 import graft.operators.TxLog
 import graft.sources.S3ConditionalPutStore
 
@@ -158,13 +156,7 @@ object S3ClaimProbe {
         "412s, winner bytes stored every time")
 
       // ---- act 2: the tx layer over the wire ------------------------
-      val spark = SparkSession.builder().master("local[16]")
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.sql.ansi.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+      val spark = graft.Sessions.local()
       import spark.implicits._
       val root = s"$work/table"
       TxLog.registerClaimer(root,
