@@ -36,14 +36,18 @@ import org.apache.spark.sql.functions._
   *
   * Concurrency semantics (optimistic, Delta's rules):
   *  - APPEND commits are blind adds of fresh directories — they
-  *    commute with everything, so a losing appender re-claims at the
-  *    next version unconditionally.
+  *    commute with everything but a schema-pin move or a new CHECK
+  *    constraint (the batch was validated against neither), so a
+  *    losing appender re-claims at the next version unless one of
+  *    those landed.
   *  - REWRITE commits (compaction, delete, filter) remove the exact
   *    live set they read. A losing rewriter re-validates: if any
   *    intervening commit removed one of its inputs, the rewrite
   *    ABORTS ([[TxConflictException]]) and its orphan data dir is
   *    reclaimed by [[vacuum]]; intervening appends are preserved (the
   *    rewrite removes only what it read, never the new adds).
+  * Every action claims through [[commit]], which states the claim rule
+  * these collisions rest on.
   *
   * Readers are snapshot-isolated for free: the log listing resolves a
   * version, the manifest fold names its complete immutable live set,
@@ -1400,8 +1404,8 @@ object TxLog {
     // CHECK constraints ride the write's own scan (every writer that
     // lands table rows funnels through here; a violation fails the
     // job before the commit exists). The SET is the caller's capture
-    // at snapshot time — its claim loop aborts if a new constraint
-    // lands in between (the constraint-vs-writer race)
+    // at snapshot time — its commit aborts if a new constraint lands
+    // in between ([[constraintAdded]], the constraint-vs-writer race)
     val checked = enforced(df, cs)
     val withHelpers = bloomCols.zipWithIndex.foldLeft(checked) {
       case (acc, (c, i)) =>
@@ -1437,6 +1441,132 @@ object TxLog {
 
   private val MaxClaimRetries = 1000
 
+  /** THE commit path: every versioned action claims its `commit`
+    * manifest here and nowhere else ([[checkpoint]] and [[cloneTable]]
+    * publish create-if-absent names that race no version).
+    *
+    * The claim rule: claim `base + 1`, where `base` is the version the
+    * writer validated against. Every commit that landed since then
+    * therefore collides, and the collision is where the conflict rules
+    * run — a claim at the head read AFTER the write would sail past a
+    * commit nobody validated. On each collision:
+    *  - more than [[MaxClaimRetries]] collisions is an IOException;
+    *  - with `txn` set, a replay of the same token that already landed
+    *    wins: `(its version, false)`, and this writer's data dir is a
+    *    vacuum-reclaimable orphan;
+    *  - the intervening commits `(base, head]` are listed once and
+    *    passed to `check`, which throws [[TxConflictException]] when
+    *    one of them invalidates this commit;
+    *  - the next claim is `max(head + 1, v + 1)`.
+    * Returns `(committed version, true)`. */
+  private def commit(spark: SparkSession, root: String, op: String,
+      base: Long, bytes: Array[Byte], txn: Option[(String, Long)] = None)
+      (check: Seq[TxCommit] => Unit): (Long, Boolean) = {
+    @annotation.tailrec
+    def claim(v: Long, lost: Int): (Long, Boolean) =
+      if (publishIfAbsent(spark, root, manifestName(v, "commit"), bytes))
+        (v, true)
+      else {
+        if (lost >= MaxClaimRetries) throw new java.io.IOException(
+          s"$op: could not claim a version after $MaxClaimRetries tries")
+        txnLanded(spark, root, txn) match {
+          case Some(tv) => (tv, false)
+          case None =>
+            val head = latestVersion(spark, root)
+            check(commitsInRange(spark, root, base, head))
+            claim(math.max(head + 1, v + 1), lost + 1)
+        }
+      }
+    claim(base + 1, 0)
+  }
+
+  /** A lost claim of a head-derived manifest (see [[commitDerived]]). */
+  private object StaleHead extends scala.util.control.ControlThrowable
+
+  /** [[commit]] for a manifest DERIVED from the head — its pin, stats
+    * column, Bloom declaration or validated rows: `derive` validates
+    * and renders it from the head state, and a lost claim re-runs
+    * `derive` on the new head instead of judging the intervening
+    * commits (any of them may change what `derive` read). Each re-run
+    * follows a commit another writer landed, so the table advances. */
+  @annotation.tailrec
+  private def commitDerived(spark: SparkSession, root: String, op: String)
+      (derive: LogState => Array[Byte]): Long = {
+    val st = foldLog(spark, root, None)
+    val bytes = derive(st)
+    val won =
+      try Some(commit(spark, root, op, st.version, bytes)(
+        _ => throw StaleHead)._1)
+      catch { case StaleHead => None }
+    won match {
+      case Some(v) => v
+      case None => commitDerived(spark, root, op)(derive)
+    }
+  }
+
+  // ---- the conflict rules [[commit]] checks run over `inter`, the
+  // commits that landed between a writer's snapshot and its claim ----
+
+  /** An intervening commit removed one of `inputs`, the dirs this
+    * writer read and replaces. */
+  private def inputsRemoved(op: String, root: String,
+      inter: Seq[TxCommit], inputs: Seq[String]): Unit = {
+    val mine = inputs.toSet
+    val hit = inter.filter(_.removes.exists(mine))
+    if (hit.nonEmpty) throw new TxConflictException(
+      s"$op of $root lost v${hit.map(_.version).min}: an intervening " +
+        "commit removed one of its inputs — retry on a fresh snapshot " +
+        "(orphan data dir reclaimed by vacuum)")
+  }
+
+  /** An intervening tombstone: this writer's output postdates it, so
+    * the mask would be erased for every row the writer read. */
+  private def tombstoneLanded(op: String, root: String,
+      inter: Seq[TxCommit]): Unit = {
+    val hit = inter.filter(_.dvs.nonEmpty)
+    if (hit.nonEmpty) throw new TxConflictException(
+      s"$op of $root lost v${hit.map(_.version).min}: an intervening " +
+        s"tombstone masks rows this $op read — retry on a fresh snapshot")
+  }
+
+  /** An intervening CHECK constraint: this writer's data was validated
+    * against the set at its snapshot, never against the new rule, so
+    * claiming past it could land violating rows under a live
+    * constraint. (Dropped constraints are harmless: removing a rule
+    * cannot make checked data violating.) */
+  private def constraintAdded(op: String, root: String,
+      inter: Seq[TxCommit]): Unit = {
+    val hit = inter.filter(_.constraints.nonEmpty)
+    if (hit.nonEmpty) throw new TxConflictException(
+      s"$op of $root lost v${hit.map(_.version).min}: an " +
+        "intervening commit added a CHECK constraint this writer's " +
+        "data was never validated against — retry on a fresh snapshot")
+  }
+
+  /** The pin moved off `pin`, the schema this writer validated against:
+    * its manifest re-pins `pin`, so claiming past the move would
+    * silently revert it. None (a legacy pin-less log) checks nothing. */
+  private def pinMoved(op: String, root: String, inter: Seq[TxCommit],
+      pin: Option[String]): Unit =
+    for (p0 <- pin; p <- inter.flatMap(_.schema).lastOption
+        if ddlNorm(p) != ddlNorm(p0))
+      throw new TxConflictException(
+        s"$op of $root lost to a concurrent schema change — table now " +
+          s"pins [$p], this $op validated against [$p0]; revalidate " +
+          "and retry")
+
+  /** The rules of every commit that REPLACES the dirs it read
+    * ([[rewrite]], the optimizes, predicate DML): appends and disjoint
+    * rewrites commute; input theft, a tombstone, a new constraint or a
+    * pin move abort. */
+  private def replacing(op: String, root: String, inputs: Seq[String],
+      pin: Option[String])(inter: Seq[TxCommit]): Unit = {
+    inputsRemoved(op, root, inter, inputs)
+    tombstoneLanded(op, root, inter)
+    constraintAdded(op, root, inter)
+    pinMoved(op, root, inter, pin)
+  }
+
   /** Dir-count bound for the fused merge hash-stab (the bitmask
     * aggregate in [[mergeCoreOn]]): up to this many hash-statted dirs
     * the interval tests ride the validation aggregate as `bit_or`
@@ -1446,12 +1576,14 @@ object TxLog {
   private val FusedStabMaxDirs = 512
 
   /** APPEND `df` as one commit. Blind adds commute with every other
-    * commit, so claim collisions simply retry at the new head — after
-    * re-checking the schema pin (a concurrent [[evolveSchema]] or
-    * [[rewrite]] may have changed it; landing an old-generation batch
-    * past an evolve would silently revert the pin). The batch must
-    * match the table's pinned schema (loud fail BEFORE any write — a
-    * drifted producer never lands a byte); [[rewrite]] and
+    * commit except the two that change what the batch was validated
+    * against: a schema change (landing an old-generation batch past an
+    * evolve would silently revert the pin) and a new CHECK constraint
+    * (the batch's rows were never checked against it) — either one
+    * landing during the write aborts the append
+    * ([[TxConflictException]]); anything else is claimed past. The
+    * batch must match the table's pinned schema (loud fail BEFORE any
+    * write — a drifted producer never lands a byte); [[rewrite]] and
     * [[evolveSchema]] are the sanctioned ways to change the schema.
     * Returns the committed version. */
   def append(spark: SparkSession, root: String, df: DataFrame,
@@ -1463,50 +1595,42 @@ object TxLog {
     * range reads can prune this dir on any of them
     * ([[snapshotRangeMulti]]). */
   def appendCols(spark: SparkSession, root: String, df: DataFrame,
-      statsCols: Seq[String], bloomCols: Seq[String] = Seq.empty): Long = {
+      statsCols: Seq[String], bloomCols: Seq[String] = Seq.empty): Long =
+    appendCore(spark, root, "append", df, statsCols.headOption, bloomCols,
+      None)(() => ()) { (st0, bl) =>
+      Seq(writeDataDir(spark, root, df, statsCols, st0.constraints, bl))
+    }._1
+
+  /** The append family's one path: resolve the head, return a token's
+    * earlier commit, hold the batch to the pin there, `write` its dirs
+    * (given the head state and the Bloom columns to record), run
+    * `beforeClaim`, and commit at that head + 1 under the append rules
+    * (pin moved, constraint added). */
+  private def appendCore(spark: SparkSession, root: String, op: String,
+      df: DataFrame, statsCol: Option[String], bloomCols: Seq[String],
+      txn: Option[(String, Long)])(beforeClaim: () => Unit)
+      (write: (LogState, Seq[String]) => Seq[AddFile]): (Long, Boolean) = {
     val ddl = ddlOf(df)
-    pinnedSchema(spark, root).foreach(p => require(p == ddl,
-      s"append: schema drift on $root — table pins [$p], batch is " +
+    val st0 = foldLog(spark, root, None)
+    // the token check AFTER the head it guards: a replay landing later
+    // collides with this claim, and commit re-checks the token there
+    txnLanded(spark, root, txn) match {
+      case Some(v) => return (v, false)
+      case None =>
+    }
+    pinnedSchemaAt(spark, root, st0.version).foreach(p => require(p == ddl,
+      s"$op: schema drift on $root — table pins [$p], batch is " +
         s"[$ddl]; an intentional change is a rewrite or evolveSchema, " +
         "not an append"))
-    val st0 = foldLog(spark, root, None)
     val bl = effectiveBloomCols(st0, df, bloomCols)
-    val add = writeDataDir(spark, root, df, statsCols, st0.constraints,
-      bl)
-    val bytes = renderManifest("append", Seq(add), Seq.empty,
-      statsCols.headOption, Some(ddl),
-      bloomColsDecl = Some(bl).filter(_.nonEmpty))
-    var attempt = 0
-    var v = latestVersion(spark, root) + 1
-    while (!publishIfAbsent(spark, root, manifestName(v, "commit"), bytes)) {
-      attempt += 1
-      if (attempt > MaxClaimRetries) throw new java.io.IOException(
-        s"append: could not claim a version after $MaxClaimRetries tries")
-      pinnedSchema(spark, root).foreach(p => if (p != ddl)
-        throw new TxConflictException(
-          s"append of $root lost to a concurrent schema change — table " +
-            s"now pins [$p], batch is [$ddl]; revalidate and retry"))
-      checkNoNewConstraints(spark, root, st0.version, "append")
-      v = math.max(latestVersion(spark, root) + 1, v + 1)
+    val adds = write(st0, bl)
+    val bytes = renderManifest("append", adds, Seq.empty, statsCol,
+      Some(ddl), txn, bloomColsDecl = Some(bl).filter(_.nonEmpty))
+    beforeClaim()
+    commit(spark, root, op, st0.version, bytes, txn) { inter =>
+      pinMoved(op, root, inter, Some(ddl))
+      constraintAdded(op, root, inter)
     }
-    v
-  }
-
-  /** The constraint-vs-writer race check every claim-collision loop
-    * runs: this writer's data was validated against the constraint set
-    * read at its snapshot (version `v0`) — if a NEW constraint landed
-    * since, the already-written data was never checked against it, and
-    * claiming past it could land violating rows at head+1 while the
-    * constraint reads as live. Abort instead (dropped constraints are
-    * harmless: removing a rule cannot make checked data violating). */
-  private def checkNoNewConstraints(spark: SparkSession, root: String,
-      v0: Long, op: String): Unit = {
-    val withCons = commitsInRange(spark, root, v0,
-      latestVersion(spark, root)).filter(_.constraints.nonEmpty)
-    if (withCons.nonEmpty) throw new TxConflictException(
-      s"$op of $root lost v${withCons.map(_.version).min}: an " +
-        "intervening commit added a CHECK constraint this writer's " +
-        "data was never validated against — retry on a fresh snapshot")
   }
 
   /** The version that committed `(appId, batchId)`, if any — scans
@@ -1520,6 +1644,11 @@ object TxLog {
       .map(readManifest(spark, root, _))
       .collectFirst {
         case c if c.txn.contains((appId, batchId)) => c.version }
+
+  /** [[txnVersion]] of an optional `(appId, batchId)` token. */
+  private def txnLanded(spark: SparkSession, root: String,
+      txn: Option[(String, Long)]): Option[Long] =
+    txn.flatMap { case (a, b) => txnVersion(spark, root, a, b) }
 
   /** The producer `appId`'s HIGH-WATER batch id in this table's log —
     * the replay cursor an idempotent consumer resumes from (the
@@ -1553,12 +1682,11 @@ object TxLog {
     * returns the original version with `false` and its already-written
     * data dir is left as a vacuum-reclaimable orphan.
     *
-    * Race-closed by the validate-then-claim-head+1 loop: the token
-    * check is valid for the head it observed, and the claim targets
-    * exactly head+1 — a concurrent commit of the same token either
-    * lands at ≤ head (seen by the check) or takes head+1 itself (our
-    * claim fails → revalidate). Versions only ever land at head+1, so
-    * no same-token commit can slip past both. */
+    * Race-closed by [[commit]]'s claim rule: the token check is valid
+    * for the head it resolved, and the claim targets exactly that
+    * head + 1 — a concurrent commit of the same token either lands at
+    * or below that head (seen by the check) or collides with the claim
+    * (re-checked there). Same conflict rules as [[append]]. */
   def appendIdempotent(spark: SparkSession, root: String, df: DataFrame,
       appId: String, batchId: Long,
       statsCol: Option[String] = None): (Long, Boolean) =
@@ -1573,44 +1701,10 @@ object TxLog {
       statsCol: Option[String])(beforeClaim: () => Unit): (Long, Boolean) = {
     require(!appId.contains('|') && !appId.contains('\n'),
       s"appendIdempotent: appId must not contain '|' or newlines: $appId")
-    txnVersion(spark, root, appId, batchId) match {
-      case Some(v) => return (v, false)
-      case None =>
+    appendCore(spark, root, "appendIdempotent", df, statsCol, Seq.empty,
+      Some((appId, batchId)))(beforeClaim) { (st0, bl) =>
+      Seq(writeDataDir(spark, root, df, statsCol.toSeq, st0.constraints, bl))
     }
-    val ddl = ddlOf(df)
-    pinnedSchema(spark, root).foreach(p => require(p == ddl,
-      s"appendIdempotent: schema drift on $root — table pins [$p], " +
-        s"batch is [$ddl]"))
-    val st0 = foldLog(spark, root, None)
-    val add = writeDataDir(spark, root, df, statsCol.toSeq, st0.constraints,
-      effectiveBloomCols(st0, df))
-    val bytes = renderManifest("append", Seq(add), Seq.empty, statsCol,
-      Some(ddl), Some((appId, batchId)))
-    beforeClaim()
-    var attempt = 0
-    while (true) {
-      val head = latestVersion(spark, root)
-      txnVersion(spark, root, appId, batchId) match {
-        case Some(v) => return (v, false) // replay lost the race; dir -> vacuum
-        case None =>
-      }
-      // collision revalidation, same rules as append: a concurrent
-      // evolveSchema/rewrite must not be sailed past (landing an
-      // old-generation batch would silently revert the pin), and a
-      // concurrent addConstraint never validated this batch's rows
-      pinnedSchema(spark, root).foreach(p => if (p != ddl)
-        throw new TxConflictException(
-          s"appendIdempotent of $root lost to a concurrent schema " +
-            s"change — table now pins [$p], batch is [$ddl]"))
-      checkNoNewConstraints(spark, root, st0.version, "appendIdempotent")
-      if (publishIfAbsent(spark, root, manifestName(head + 1, "commit"),
-          bytes))
-        return (head + 1, true)
-      attempt += 1
-      if (attempt > MaxClaimRetries) throw new java.io.IOException(
-        s"appendIdempotent: no claim after $MaxClaimRetries tries")
-    }
-    throw new IllegalStateException("unreachable")
   }
 
   /** Run `body` (one full optimistic attempt: resolve snapshot, write,
@@ -1631,8 +1725,10 @@ object TxLog {
     * `transform(snapshot)` as fresh dirs, commit a manifest that
     * removes exactly the inputs read. Validation on claim collision:
     * intervening APPENDS survive (only the read inputs are removed);
-    * an intervening commit that removed one of our inputs aborts with
-    * [[TxConflictException]] (the orphan dir is left for [[vacuum]]).
+    * an intervening commit that removed one of our inputs, published a
+    * tombstone, added a CHECK constraint or moved the schema pin
+    * aborts with [[TxConflictException]] (the orphan dir is left for
+    * [[vacuum]]).
     * `conflictRetries` > 0 re-resolves a fresh snapshot and re-runs
     * the whole rewrite (transform included) that many times before
     * the conflict propagates. Returns the committed version. */
@@ -1643,8 +1739,9 @@ object TxLog {
       val st0 = foldLog(spark, root, None)
       val (v0, live0, dvs0) = (st0.version, st0.files, st0.dvs)
       require(live0.nonEmpty, s"rewrite: $root has no live data at v$v0")
-      val snap = readMasked(spark, root, live0,
-        pinnedSchemaAt(spark, root, v0), dvs0, st0.clones, st0.evos)
+      val pin = pinnedSchemaAt(spark, root, v0)
+      val snap = readMasked(spark, root, live0, pin, dvs0, st0.clones,
+        st0.evos)
       val out = transform(snap)
       val add = writeDataDir(spark, root, out, statsCol.toSeq,
         st0.constraints, effectiveBloomCols(st0, out))
@@ -1653,7 +1750,8 @@ object TxLog {
       // (the sanctioned schema-change path — Delta's overwriteSchema)
       val bytes = renderManifest("rewrite", Seq(add), removes, statsCol,
         Some(ddlOf(out)))
-      claimRewrite(spark, root, "rewrite", v0, removes.toSet, bytes)
+      commit(spark, root, "rewrite", v0, bytes)(
+        replacing("rewrite", root, removes, pin))._1
     }
 
   /** Keyed MERGE (upsert) — apply a change batch to the table by key:
@@ -1715,9 +1813,8 @@ object TxLog {
     * double-delete): a merge identified by `(appId, batchId)` commits
     * AT MOST ONCE. Returns (version, committedNow); a replay returns
     * the original version with `false` (its pre-written output dir is
-    * a vacuum-reclaimable orphan). Same validate-then-claim-head+1
-    * race closure as appendIdempotent, same conflict rules as
-    * [[merge]]. */
+    * a vacuum-reclaimable orphan). Same race closure as
+    * [[appendIdempotent]], same conflict rules as [[merge]]. */
   def mergeIdempotent(spark: SparkSession, root: String, batch: DataFrame,
       keyCol: String, appId: String, batchId: Long,
       deleteCol: Option[String] = None,
@@ -1725,12 +1822,9 @@ object TxLog {
       conflictRetries: Int = 0): (Long, Boolean) = {
     require(!appId.contains('|') && !appId.contains('\n'),
       s"mergeIdempotent: appId must not contain '|' or newlines: $appId")
-    txnVersion(spark, root, appId, batchId) match {
-      case Some(v) => (v, false)
-      case None => withConflictRetry(conflictRetries) {
-        mergeCore(spark, root, batch, keyCol, deleteCol, statsCols,
-          Some((appId, batchId)))(() => ())
-      }
+    withConflictRetry(conflictRetries) {
+      mergeCore(spark, root, batch, keyCol, deleteCol, statsCols,
+        Some((appId, batchId)))(() => ())
     }
   }
 
@@ -1823,10 +1917,15 @@ object TxLog {
       case None => batch
     }
     val ddl = ddlOf(upserts)
-    pinnedSchema(spark, root).foreach(p => require(p == ddl,
+    val st0 = foldLog(spark, root, None)
+    // the token check AFTER the head it guards (appendCore's rule)
+    txnLanded(spark, root, txn) match {
+      case Some(v) => return (v, false)
+      case None =>
+    }
+    pinnedSchemaAt(spark, root, st0.version).foreach(p => require(p == ddl,
       s"merge: schema drift on $root — table pins [$p], batch is [$ddl]"))
     val stats = if (statsCols.isEmpty) Seq(keyCol) else statsCols
-    val st0 = foldLog(spark, root, None)
     // ONE batch aggregate: size, null-key and unique-key contract, the
     // key span the prune + conflict checks read — AND (for hash-statted
     // keys over a boundedly-dirred table) the hash-stab itself, fused
@@ -1921,32 +2020,8 @@ object TxLog {
     val bytes = renderManifest("merge", Seq(add), removes,
       stats.headOption, Some(ddl), txn)
     beforeClaim()
-    var attempt = 0
-    // claims START at v0+1 (the claimRewrite rule): every commit that
-    // landed since snapshot resolution forces a collision, and the
-    // collision path is where the conflict rules run — starting at the
-    // current head would sail past unvalidated commits
-    var v = v0 + 1
-    while (!publishIfAbsent(spark, root, manifestName(v, "commit"), bytes)) {
-      attempt += 1
-      if (attempt > MaxClaimRetries) throw new java.io.IOException(
-        s"merge: could not claim a version after $MaxClaimRetries tries")
-      txn.foreach { case (appId, batchId) =>
-        // a concurrent replay of the SAME token may have landed it —
-        // then this attempt is the duplicate and must not commit
-        txnVersion(spark, root, appId, batchId) match {
-          case Some(tv) => return (tv, false) // dir -> vacuum
-          case None =>
-        }
-      }
-      val head = latestVersion(spark, root)
-      val inter = commitsInRange(spark, root, v0, head)
-      val mine = removes.toSet
-      val stolen = inter.filter(_.removes.exists(mine))
-      if (stolen.nonEmpty) throw new TxConflictException(
-        s"merge of $root lost v${stolen.map(_.version).min}: an " +
-          "intervening commit removed one of its touched dirs — retry " +
-          "on a fresh snapshot")
+    commit(spark, root, "merge", v0, bytes, txn) { inter =>
+      inputsRemoved("merge", root, inter, removes)
       val overlapBySpan = inter.filter(_.adds.exists(a =>
         admits(a, keyCol, bmn, hiEx)))
       // string keys: re-judge the span-suspect adds by hash — an
@@ -1993,13 +2068,9 @@ object TxLog {
             "would rewrite past it (resurrection) — retry on a fresh " +
             "snapshot")
       }
-      checkNoNewConstraints(spark, root, v0, "merge")
-      pinnedSchema(spark, root).foreach(p => if (p != ddl)
-        throw new TxConflictException(
-          s"merge of $root lost to a concurrent schema change"))
-      v = math.max(head + 1, v + 1)
+      constraintAdded("merge", root, inter)
+      pinMoved("merge", root, inter, Some(ddl))
     }
-    (v, true)
   }
 
   /** Thrown by a write whose rows violate a table CHECK constraint —
@@ -2052,27 +2123,17 @@ object TxLog {
     require(!name.contains('|') && !name.contains('\n') &&
       !exprSql.contains('\n'),
       s"addConstraint: name must not contain '|'; no newlines: $name")
-    var attempt = 0
-    while (true) {
-      val st = foldLog(spark, root, None)
+    commitDerived(spark, root, "addConstraint") { st =>
       require(st.version > 0, s"addConstraint: $root has no commits")
       val snap = snapshot(spark, root, Some(st.version))
       val bad = snap.where(!coalesce(expr(exprSql), lit(true))).count()
       if (bad > 0) throw new TxConstraintException(
         s"addConstraint '$name' on $root: $bad existing rows violate " +
           s"[$exprSql] — clean the data (merge/rewrite) before pinning")
-      val bytes = renderManifest("constrain", Seq.empty, Seq.empty, None,
+      renderManifest("constrain", Seq.empty, Seq.empty, None,
         pinnedSchemaAt(spark, root, st.version),
         constraints = Seq((name, exprSql)))
-      if (publishIfAbsent(spark, root,
-          manifestName(st.version + 1, "commit"), bytes))
-        return st.version + 1
-      attempt += 1
-      if (attempt > MaxClaimRetries) throw new java.io.IOException(
-        s"addConstraint: no claim after $MaxClaimRetries tries")
-      // loop: re-validate against whatever landed meanwhile
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** DROP a CHECK constraint by name (metadata commit). */
@@ -2082,18 +2143,11 @@ object TxLog {
     require(st.constraints.exists(_._1 == name),
       s"dropConstraint: no constraint '$name' on $root " +
         s"(live: ${st.constraints.map(_._1).mkString(", ")})")
+    val pin = pinnedSchemaAt(spark, root, st.version)
     val bytes = renderManifest("constrain", Seq.empty, Seq.empty, None,
-      pinnedSchemaAt(spark, root, st.version),
-      dropConstraints = Seq(name))
-    var attempt = 0
-    var v = st.version + 1
-    while (!publishIfAbsent(spark, root, manifestName(v, "commit"), bytes)) {
-      attempt += 1
-      if (attempt > MaxClaimRetries) throw new java.io.IOException(
-        s"dropConstraint: no claim after $MaxClaimRetries tries")
-      v = math.max(latestVersion(spark, root) + 1, v + 1)
-    }
-    v
+      pin, dropConstraints = Seq(name))
+    commit(spark, root, "dropConstraint", st.version, bytes)(
+      pinMoved("dropConstraint", root, _, pin))._1
   }
 
   /** Keyed DELETE — [[merge]]'s delete-only form from a KEYS-ONLY
@@ -2206,21 +2260,7 @@ object TxLog {
       val adds = if (add.rows == 0L) Seq.empty else Seq(add)
       val bytes = renderManifest(action, adds, removes,
         statsCols.headOption, pin)
-      var attempt = 0
-      var v = st0.version + 1
-      while (!publishIfAbsent(spark, root, manifestName(v, "commit"),
-          bytes)) {
-        attempt += 1
-        if (attempt > MaxClaimRetries) throw new java.io.IOException(
-          s"$action: could not claim a version after $MaxClaimRetries tries")
-        val head = latestVersion(spark, root)
-        val inter = commitsInRange(spark, root, st0.version, head)
-        val mine = removes.toSet
-        val stolen = inter.filter(_.removes.exists(mine))
-        if (stolen.nonEmpty) throw new TxConflictException(
-          s"$action of $root lost v${stolen.map(_.version).min}: an " +
-            "intervening commit removed one of its touched dirs — " +
-            "retry on a fresh snapshot")
+      commit(spark, root, action, st0.version, bytes) { inter =>
         // rows added since the snapshot were never filtered/updated;
         // committing past an add the bounds admit would silently skip
         // them (this commit serializes AFTER the add)
@@ -2229,21 +2269,8 @@ object TxLog {
           s"$action of $root lost v${overlapping.map(_.version).min}: " +
             "an intervening commit added data inside the predicate's " +
             "bounds — retry on a fresh snapshot")
-        // an intervening tombstone's mask would be erased for the
-        // touched dirs (this output postdates it) — same rule as
-        // rewrite/merge
-        val tomb = inter.filter(_.dvs.nonEmpty)
-        if (tomb.nonEmpty) throw new TxConflictException(
-          s"$action of $root lost v${tomb.map(_.version).min}: an " +
-            s"intervening tombstone masks rows this $action read — " +
-            "retry on a fresh snapshot")
-        checkNoNewConstraints(spark, root, st0.version, action)
-        pinnedSchemaAt(spark, root, head).foreach(p =>
-          if (pin.exists(_ != p)) throw new TxConflictException(
-            s"$action of $root lost to a concurrent schema change"))
-        v = math.max(head + 1, v + 1)
-      }
-      v
+        replacing(action, root, removes, pin)(inter)
+      }._1
     }
 
   /** Key TOMBSTONE (deletion vector) — the takedown write path that
@@ -2270,7 +2297,7 @@ object TxLog {
       keyCol: String): Long = {
     val head = latestVersion(spark, root)
     require(head > 0, s"tombstone: $root has no commits")
-    val pin = pinnedSchema(spark, root)
+    val pin = pinnedSchemaAt(spark, root, head)
     require(pin.isDefined,
       s"tombstone: $root has no schema pin (legacy log) — rewrite once " +
         "to establish one")
@@ -2288,18 +2315,8 @@ object TxLog {
         "key dir is left as a vacuum-reclaimable orphan)")
     val bytes = renderManifest("tombstone", Seq.empty, Seq.empty, None,
       pin, None, Seq(Tombstone(rel, keyCol, 0L)))
-    var attempt = 0
-    var v = head + 1
-    while (!publishIfAbsent(spark, root, manifestName(v, "commit"), bytes)) {
-      attempt += 1
-      if (attempt > MaxClaimRetries) throw new java.io.IOException(
-        s"tombstone: no claim after $MaxClaimRetries tries")
-      pinnedSchema(spark, root).foreach(p => if (!pin.contains(p))
-        throw new TxConflictException(
-          s"tombstone of $root lost to a concurrent schema change"))
-      v = math.max(latestVersion(spark, root) + 1, v + 1)
-    }
-    v
+    commit(spark, root, "tombstone", head, bytes)(
+      pinMoved("tombstone", root, _, pin))._1
   }
 
   /** EVOLVE the table schema — the explicit, additive half of the
@@ -2331,7 +2348,7 @@ object TxLog {
     val head = latestVersion(spark, root)
     require(head > 0,
       s"evolveSchema: $root has no commits — the founding append pins")
-    val oldDdl = pinnedSchema(spark, root).getOrElse(
+    val oldDdl = pinnedSchemaAt(spark, root, head).getOrElse(
       throw new IllegalStateException(
         s"evolveSchema: $root has no schema pin (legacy log) — rewrite " +
           "once to establish one"))
@@ -2350,19 +2367,8 @@ object TxLog {
     }
     val bytes = renderManifest("evolve", Seq.empty, Seq.empty, None,
       Some(norm))
-    var attempt = 0
-    var v = head + 1
-    while (!publishIfAbsent(spark, root, manifestName(v, "commit"), bytes)) {
-      attempt += 1
-      if (attempt > MaxClaimRetries) throw new java.io.IOException(
-        s"evolveSchema: no claim after $MaxClaimRetries tries")
-      pinnedSchema(spark, root).foreach(p => if (ddlNorm(p) != ddlNorm(oldDdl))
-        throw new TxConflictException(
-          s"evolveSchema of $root lost to a concurrent schema change — " +
-            s"pin is now [$p]; revalidate the evolution against it"))
-      v = math.max(latestVersion(spark, root) + 1, v + 1)
-    }
-    v
+    commit(spark, root, "evolveSchema", head, bytes)(
+      pinMoved("evolveSchema", root, _, Some(oldDdl)))._1
   }
 
   /** RENAME a column — METADATA ONLY, no data bytes move (the Delta
@@ -2384,11 +2390,9 @@ object TxLog {
     require(from != to, s"renameColumn: '$from' to itself")
     require(!Seq(from, to).exists(c => c.contains('|') || c.contains('\n')),
       "renameColumn: names must not contain '|' or newlines")
-    var attempt = 0
-    while (true) {
-      val head = latestVersion(spark, root)
-      require(head > 0, s"renameColumn: $root has no commits")
-      val pin = pinnedSchema(spark, root).getOrElse(
+    commitDerived(spark, root, "renameColumn") { st =>
+      require(st.version > 0, s"renameColumn: $root has no commits")
+      val pin = pinnedSchemaAt(spark, root, st.version).getOrElse(
         throw new IllegalStateException(
           s"renameColumn: $root has no schema pin (legacy log)"))
       val oldT = StructType.fromDDL(pin)
@@ -2396,35 +2400,23 @@ object TxLog {
         s"renameColumn: no column '$from' in [$pin]")
       require(!oldT.fieldNames.contains(to),
         s"renameColumn: '$to' already exists in [$pin]")
-      constraintMentions(spark, root, from).foreach(n =>
+      constraintMentions(st.constraints, from).foreach(n =>
         throw new IllegalArgumentException(
           s"renameColumn: constraint '$n' references '$from' — drop or " +
             "re-state the constraint first"))
       val newT = StructType(oldT.fields.map(f =>
         if (f.name == from) f.copy(name = to) else f))
-      val newStats = statsColumn(spark, root)
+      val newStats = statsColumnAt(spark, root, st.version)
         .map(c => if (c == from) to else c)
       // the sticky Bloom declaration follows the rename (filters
       // recorded under the OLD name stop answering — conservative —
       // but NEW writes keep recording under the new name instead of
       // the declaration silently detaching)
-      val bl = foldLog(spark, root, None).bloomCols
-      val bytes = renderManifest("rename", Seq.empty, Seq.empty, newStats,
+      renderManifest("rename", Seq.empty, Seq.empty, newStats,
         Some(ddlNorm(newT.toDDL)), evos = Seq((0L, "rename", from, to)),
-        bloomColsDecl = Some(bl.map(c => if (c == from) to else c))
+        bloomColsDecl = Some(st.bloomCols.map(c => if (c == from) to else c))
           .filter(_.nonEmpty))
-      if (publishIfAbsent(spark, root, manifestName(head + 1, "commit"),
-          bytes))
-        return head + 1
-      attempt += 1
-      if (attempt > MaxClaimRetries) throw new java.io.IOException(
-        s"renameColumn: no claim after $MaxClaimRetries tries")
-      pinnedSchema(spark, root).foreach(p => if (ddlNorm(p) != ddlNorm(pin))
-        throw new TxConflictException(
-          s"renameColumn of $root lost to a concurrent schema change — " +
-            s"pin is now [$p]"))
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** DROP a column — METADATA ONLY: the commit re-pins the narrower
@@ -2438,11 +2430,9 @@ object TxLog {
     import org.apache.spark.sql.types._
     require(!name.contains('|') && !name.contains('\n'),
       "dropColumn: name must not contain '|' or newlines")
-    var attempt = 0
-    while (true) {
-      val head = latestVersion(spark, root)
-      require(head > 0, s"dropColumn: $root has no commits")
-      val pin = pinnedSchema(spark, root).getOrElse(
+    commitDerived(spark, root, "dropColumn") { st =>
+      require(st.version > 0, s"dropColumn: $root has no commits")
+      val pin = pinnedSchemaAt(spark, root, st.version).getOrElse(
         throw new IllegalStateException(
           s"dropColumn: $root has no schema pin (legacy log)"))
       val oldT = StructType.fromDDL(pin)
@@ -2450,7 +2440,7 @@ object TxLog {
         s"dropColumn: no column '$name' in [$pin]")
       require(oldT.fields.length > 1,
         s"dropColumn: '$name' is the only column of $root")
-      constraintMentions(spark, root, name).foreach(n =>
+      constraintMentions(st.constraints, name).foreach(n =>
         throw new IllegalArgumentException(
           s"dropColumn: constraint '$n' references '$name' — drop the " +
             "constraint first"))
@@ -2463,9 +2453,8 @@ object TxLog {
       // reads NULL over old generations — silently losing the takedown
       // mask, a compliance hole. Materializing the mask first makes
       // the tombstone inert and the drop safe.
-      val stDv = foldLog(spark, root, None)
-      stDv.dvs.find(dv =>
-          lineage(stDv.evos, dv.version, dv.keyCol).contains(name))
+      st.dvs.find(dv =>
+          lineage(st.evos, dv.version, dv.keyCol).contains(name))
         .foreach(dv => throw new IllegalArgumentException(
           s"dropColumn: a live tombstone (v${dv.version}, key " +
             s"'${dv.keyCol}') masks rows by '$name' — dropping the " +
@@ -2473,36 +2462,25 @@ object TxLog {
             "would silently lose the takedown). Materialize the mask " +
             "first (rewrite/optimizeCompact/optimizeRange), then drop."))
       val newT = StructType(oldT.fields.filterNot(_.name == name))
-      val newStats = statsColumn(spark, root).filterNot(_ == name)
+      val newStats = statsColumnAt(spark, root, st.version)
+        .filterNot(_ == name)
       // a dropped column leaves the sticky Bloom declaration too
-      val blDrop = foldLog(spark, root, None).bloomCols
-      val bytes = renderManifest("dropcol", Seq.empty, Seq.empty, newStats,
+      renderManifest("dropcol", Seq.empty, Seq.empty, newStats,
         Some(ddlNorm(newT.toDDL)), evos = Seq((0L, "drop", name, "")),
-        bloomColsDecl = Some(blDrop.filterNot(_ == name))
-          .filter(_ => blDrop.contains(name)))
-      if (publishIfAbsent(spark, root, manifestName(head + 1, "commit"),
-          bytes))
-        return head + 1
-      attempt += 1
-      if (attempt > MaxClaimRetries) throw new java.io.IOException(
-        s"dropColumn: no claim after $MaxClaimRetries tries")
-      pinnedSchema(spark, root).foreach(p => if (ddlNorm(p) != ddlNorm(pin))
-        throw new TxConflictException(
-          s"dropColumn of $root lost to a concurrent schema change — " +
-            s"pin is now [$p]"))
+        bloomColsDecl = Some(st.bloomCols.filterNot(_ == name))
+          .filter(_ => st.bloomCols.contains(name)))
     }
-    throw new IllegalStateException("unreachable")
   }
 
-  /** The live CHECK constraints whose expression TEXT mentions
+  /** The first CHECK constraint of `cs` whose expression TEXT mentions
     * `column` as a word — the conservative guard rename/drop use (a
     * false positive refuses and asks the operator to re-state; a miss
     * would silently decouple the constraint from its data). */
-  private def constraintMentions(spark: SparkSession, root: String,
+  private def constraintMentions(cs: Seq[(String, String)],
       column: String): Option[String] = {
     val re = ("(?<![A-Za-z0-9_`])" + java.util.regex.Pattern.quote(column) +
       "(?![A-Za-z0-9_`])").r
-    constraints(spark, root).collectFirst {
+    cs.collectFirst {
       case (n, e) if re.findFirstIn(e).isDefined => n
     }
   }
@@ -2526,63 +2504,45 @@ object TxLog {
       extraStats: Seq[String] = Seq.empty): Long = {
     require(buckets >= 1,
       s"appendPartitioned: buckets must be >= 1, got $buckets")
-    val ddl = ddlOf(df)
-    pinnedSchema(spark, root).foreach(p => require(p == ddl,
-      s"appendPartitioned: schema drift on $root — table pins [$p], " +
-        s"batch is [$ddl]"))
-    val r = df.agg(min(col(keyCol).try_cast("long")),
-      max(col(keyCol).try_cast("long")), count(lit(1))).head()
-    require(r.getLong(2) > 0, s"appendPartitioned: empty batch for $root")
-    val bucket =
-      if (r.isNullAt(0)) {
-        // no value span (string ids) — fixed-width hash ranges; null
-        // keys hash as the empty draw and cluster together
-        val width = math.max(1L, (HashSpace + buckets - 1) / buckets)
-        (keyHash(col(keyCol)) / width).cast("long")
-      } else {
-        val (mn, mx) = (r.getLong(0), r.getLong(1))
-        val width = math.max(1L, (mx - mn + buckets) / buckets)
-        coalesce(
-          ((col(keyCol).try_cast("long") - mn) / width).cast("long"), lit(0L))
+    appendCore(spark, root, "appendPartitioned", df, Some(keyCol),
+      Seq.empty, None)(() => ()) { (st0, bl) =>
+      val r = df.agg(min(col(keyCol).try_cast("long")),
+        max(col(keyCol).try_cast("long")), count(lit(1))).head()
+      require(r.getLong(2) > 0, s"appendPartitioned: empty batch for $root")
+      val bucket =
+        if (r.isNullAt(0)) {
+          // no value span (string ids) — fixed-width hash ranges; null
+          // keys hash as the empty draw and cluster together
+          val width = math.max(1L, (HashSpace + buckets - 1) / buckets)
+          (keyHash(col(keyCol)) / width).cast("long")
+        } else {
+          val (mn, mx) = (r.getLong(0), r.getLong(1))
+          val width = math.max(1L, (mx - mn + buckets) / buckets)
+          coalesce(
+            ((col(keyCol).try_cast("long") - mn) / width).cast("long"),
+            lit(0L))
+        }
+      val rel = s"data/${java.util.UUID.randomUUID()}"
+      val specs = statSpecs(df, keyCol +: extraStats)
+      val fused = fuseBucketStats(spark, buckets, specs, bl,
+        rows = r.getLong(2))
+      checkingConstraints {
+        val base = enforced(df, st0.constraints).withColumn("__b", bucket)
+        fused.fold(base)(_.attach(base))
+          .repartition(col("__b"))
+          .write.mode(SaveMode.ErrorIfExists)
+          .partitionBy("__b").parquet(s"$root/$rel")
       }
-    val rel = s"data/${java.util.UUID.randomUUID()}"
-    val st0 = foldLog(spark, root, None)
-    val specsA = statSpecs(df, keyCol +: extraStats)
-    val bloomsA = effectiveBloomCols(st0, df)
-    val fused = fuseBucketStats(spark, buckets, specsA, bloomsA,
-      rows = r.getLong(2))
-    checkingConstraints {
-      val base = enforced(df, st0.constraints).withColumn("__b", bucket)
-      fused.fold(base)(_.attach(base))
-        .repartition(col("__b"))
-        .write.mode(SaveMode.ErrorIfExists)
-        .partitionBy("__b").parquet(s"$root/$rel")
-    }
-    val stats = fused.map(_.result())
-      .getOrElse(bucketStats(df, bucket, specsA, bloomsA))
-    val fs = rawFs(spark, root)
-    val adds = fs.listStatus(new org.apache.hadoop.fs.Path(s"$root/$rel"))
-      .filter(_.isDirectory).map(_.getPath.getName)
-      .filter(_.startsWith("__b=")).sorted.toSeq.map { sub =>
-        val (n, cs, bl) = stats(sub.stripPrefix("__b=").toLong)
-        AddFile(s"$rel/$sub", n, cs, blooms = bl)
-      }
-    val bytes = renderManifest("append", adds, Seq.empty, Some(keyCol),
-      Some(ddl))
-    var attempt = 0
-    var v = latestVersion(spark, root) + 1
-    while (!publishIfAbsent(spark, root, manifestName(v, "commit"), bytes)) {
-      attempt += 1
-      if (attempt > MaxClaimRetries) throw new java.io.IOException(
-        s"appendPartitioned: no claim after $MaxClaimRetries tries")
-      pinnedSchema(spark, root).foreach(p => if (p != ddl)
-        throw new TxConflictException(
-          s"appendPartitioned of $root lost to a concurrent schema " +
-            s"change — table now pins [$p], batch is [$ddl]"))
-      checkNoNewConstraints(spark, root, st0.version, "appendPartitioned")
-      v = math.max(latestVersion(spark, root) + 1, v + 1)
-    }
-    v
+      val stats = fused.map(_.result())
+        .getOrElse(bucketStats(df, bucket, specs, bl))
+      val fs = rawFs(spark, root)
+      fs.listStatus(new org.apache.hadoop.fs.Path(s"$root/$rel"))
+        .filter(_.isDirectory).map(_.getPath.getName)
+        .filter(_.startsWith("__b=")).sorted.toSeq.map { sub =>
+          val (n, cs, bls) = stats(sub.stripPrefix("__b=").toLong)
+          AddFile(s"$rel/$sub", n, cs, blooms = bls)
+        }
+    }._1
   }
 
   /** Aggregate-column budget for [[fuseBucketStats]]: up to this many
@@ -2795,8 +2755,9 @@ object TxLog {
     val st0 = foldLog(spark, root, None)
     val (v0, live0, dvs0) = (st0.version, st0.files, st0.dvs)
     require(live0.nonEmpty, s"optimizeRange: $root has no live data at v$v0")
-    val snap = readMasked(spark, root, live0,
-      pinnedSchemaAt(spark, root, v0), dvs0, st0.clones, st0.evos)
+    val pin = pinnedSchemaAt(spark, root, v0)
+    val snap = readMasked(spark, root, live0, pin, dvs0, st0.clones,
+      st0.evos)
     val r = snap.agg(min(col(keyCol).try_cast("long")),
       max(col(keyCol).try_cast("long"))).head()
     require(!r.isNullAt(0),
@@ -2831,7 +2792,8 @@ object TxLog {
     val removes = live0.map(_.dir)
     val bytes = renderManifest("rewrite", adds, removes, Some(keyCol),
       Some(ddlOf(snap)))
-    claimRewrite(spark, root, "optimizeRange", v0, removes.toSet, bytes)
+    commit(spark, root, "optimizeRange", v0, bytes)(
+      replacing("optimizeRange", root, removes, pin))._1
   }
 
   /** OPTIMIZE with Z-ORDER clustering — the TWO-dimensional
@@ -2855,8 +2817,9 @@ object TxLog {
     val st0 = foldLog(spark, root, None)
     val (v0, live0, dvs0) = (st0.version, st0.files, st0.dvs)
     require(live0.nonEmpty, s"optimizeZOrder: $root has no live data at v$v0")
-    val snap = readMasked(spark, root, live0,
-      pinnedSchemaAt(spark, root, v0), dvs0, st0.clones, st0.evos)
+    val pin = pinnedSchemaAt(spark, root, v0)
+    val snap = readMasked(spark, root, live0, pin, dvs0, st0.clones,
+      st0.evos)
     val zc = ZOrder.interleave16(col(xCol), col(yCol))
     val r = snap.agg(min(zc), max(zc)).head()
     require(!r.isNullAt(0),
@@ -2887,7 +2850,8 @@ object TxLog {
     val removes = live0.map(_.dir)
     val bytes = renderManifest("rewrite", adds, removes, Some(xCol),
       Some(ddlOf(snap)))
-    claimRewrite(spark, root, "optimizeZOrder", v0, removes.toSet, bytes)
+    commit(spark, root, "optimizeZOrder", v0, bytes)(
+      replacing("optimizeZOrder", root, removes, pin))._1
   }
 
   /** OPTIMIZE with HASH clustering — what makes STRING-keyed merges
@@ -2912,8 +2876,9 @@ object TxLog {
     val st0 = foldLog(spark, root, None)
     val (v0, live0, dvs0) = (st0.version, st0.files, st0.dvs)
     require(live0.nonEmpty, s"optimizeHash: $root has no live data at v$v0")
-    val snap = readMasked(spark, root, live0,
-      pinnedSchemaAt(spark, root, v0), dvs0, st0.clones, st0.evos)
+    val pin = pinnedSchemaAt(spark, root, v0)
+    val snap = readMasked(spark, root, live0, pin, dvs0, st0.clones,
+      st0.evos)
     val width = math.max(1L, (HashSpace + buckets - 1) / buckets)
     val bucket = (keyHash(col(keyCol)) / width).cast("long")
     val rel = s"data/${java.util.UUID.randomUUID()}"
@@ -2955,7 +2920,8 @@ object TxLog {
     val removes = live0.map(_.dir)
     val bytes = renderManifest("rewrite", adds, removes, Some(keyCol),
       Some(ddlOf(snap)))
-    claimRewrite(spark, root, "optimizeHash", v0, removes.toSet, bytes)
+    commit(spark, root, "optimizeHash", v0, bytes)(
+      replacing("optimizeHash", root, removes, pin))._1
   }
 
   /** COMPACT the small-dir tail (the published Delta OPTIMIZE
@@ -2977,10 +2943,10 @@ object TxLog {
     * bakes in; the mask stays live for untouched dirs). Fewer than 2
     * qualifying dirs is a NO-OP returning the current version — a
     * maintenance daemon can call this idly. Same optimistic
-    * validation as [[rewrite]] ([[claimRewrite]] over just the
-    * compacted inputs: appends and disjoint rewrites survive, input
-    * theft or an intervening tombstone aborts), with Delta's bounded
-    * auto-retry via `conflictRetries`. */
+    * validation as [[rewrite]] (over just the compacted inputs:
+    * appends and disjoint rewrites survive, input theft or an
+    * intervening tombstone aborts), with Delta's bounded auto-retry
+    * via `conflictRetries`. */
   def optimizeCompact(spark: SparkSession, root: String,
       targetRows: Long, extraStats: Seq[String] = Seq.empty,
       conflictRetries: Int = 0): Long = {
@@ -2991,8 +2957,9 @@ object TxLog {
       val (v0, live0, dvs0) = (st0.version, st0.files, st0.dvs)
       val small = live0.filter(_.rows < targetRows)
       if (small.size < 2) v0 else {
-      val snap = readMasked(spark, root, small,
-        pinnedSchemaAt(spark, root, v0), dvs0, st0.clones, st0.evos)
+      val pin = pinnedSchemaAt(spark, root, v0)
+      val snap = readMasked(spark, root, small, pin, dvs0, st0.clones,
+        st0.evos)
       val keyColOpt = statsColumn(spark, root)
         .filter(snap.columns.contains)
       // bucket count from the PRE-mask row sum (masked rows only
@@ -3041,42 +3008,10 @@ object TxLog {
       val removes = small.map(_.dir)
       val bytes = renderManifest("compact", adds, removes, keyColOpt,
         Some(ddlOf(snap)))
-      claimRewrite(spark, root, "optimizeCompact", v0, removes.toSet, bytes)
+      commit(spark, root, "optimizeCompact", v0, bytes)(
+        replacing("optimizeCompact", root, removes, pin))._1
       }
     }
-  }
-
-  /** The rewrite-family claim loop: claim the next version, and on
-    * collision abort iff an intervening commit removed one of this
-    * rewrite's inputs (appends and disjoint rewrites survive). */
-  private def claimRewrite(spark: SparkSession, root: String, op: String,
-      v0: Long, mine: Set[String], bytes: Array[Byte]): Long = {
-    var attempt = 0
-    var v = v0 + 1
-    while (!publishIfAbsent(spark, root, manifestName(v, "commit"), bytes)) {
-      attempt += 1
-      if (attempt > MaxClaimRetries) throw new java.io.IOException(
-        s"$op: could not claim a version after $MaxClaimRetries tries")
-      val head = latestVersion(spark, root)
-      val inter = commitsInRange(spark, root, v0, head)
-      val conflicting = inter.filter(_.removes.exists(mine))
-      if (conflicting.nonEmpty) throw new TxConflictException(
-        s"$op of $root lost v${conflicting.map(_.version).min}: " +
-          "an intervening commit removed one of its inputs — retry on " +
-          "a fresh snapshot (orphan data dir reclaimed by vacuum)")
-      // an intervening tombstone's mask would be LOST by this rewrite
-      // (its output postdates the tombstone, making it inert) — abort
-      val tomb = inter.filter(_.dvs.nonEmpty)
-      if (tomb.nonEmpty) throw new TxConflictException(
-        s"$op of $root lost v${tomb.map(_.version).min}: an intervening " +
-          "tombstone masks rows this rewrite read — retry on a fresh " +
-          "snapshot")
-      // a rewrite replaces the table wholesale, so a constraint that
-      // landed since the snapshot never validated this output either
-      checkNoNewConstraints(spark, root, v0, op)
-      v = math.max(head + 1, v + 1)
-    }
-    v
   }
 
   /** Write a CHECKPOINT of the live set at the current head, so later
@@ -3266,22 +3201,13 @@ object TxLog {
     val bytes = renderManifest("restore", adds, removes, statsCol,
       pinT, constraints = stT.constraints, dropConstraints = dropCons)
     beforeClaim()
-    var attempt = 0
-    var v = st0.version + 1
-    while (!publishIfAbsent(spark, root, manifestName(v, "commit"),
-        bytes)) {
-      attempt += 1
-      if (attempt > MaxClaimRetries) throw new java.io.IOException(
-        s"restore: could not claim a version after $MaxClaimRetries tries")
-      if (latestVersion(spark, root) > st0.version)
-        throw new TxConflictException(
-          s"restore of $root to v$toVersion lost: the diff was exact " +
-            s"against head v${st0.version} and an intervening commit " +
-            "landed — retry on a fresh snapshot (orphan dir reclaimed " +
-            "by vacuum)")
-      v += 1
-    }
-    v
+    commit(spark, root, "restore", st0.version, bytes) { inter =>
+      if (inter.nonEmpty) throw new TxConflictException(
+        s"restore of $root to v$toVersion lost: the diff was exact " +
+          s"against head v${st0.version} and an intervening commit " +
+          "landed — retry on a fresh snapshot (orphan dir reclaimed " +
+          "by vacuum)")
+    }._1
   }
 
   /** ZERO-COPY SHALLOW CLONE — fork a table without moving a data
@@ -4030,15 +3956,8 @@ object TxLog {
     if (doomed.exists(wasReferenced)) {
       val bytes = renderManifest("gc", Seq.empty, Seq.empty, None,
         gc = Some((horizon, retainVersions.toLong)))
-      var attempt = 0
-      var v = latestVersion(spark, root) + 1
-      while (!publishIfAbsent(spark, root, manifestName(v, "commit"),
-          bytes)) {
-        attempt += 1
-        if (attempt > MaxClaimRetries) throw new java.io.IOException(
-          s"vacuum: no gc-record claim after $MaxClaimRetries tries")
-        v = math.max(latestVersion(spark, root) + 1, v + 1)
-      }
+      commit(spark, root, "vacuum", latestVersion(spark, root), bytes)(
+        _ => ())
     }
     doomed
   }

@@ -62,20 +62,24 @@ object AirQuality {
   val bronzeSchema: StructType =
     StructType(normalizedColumns.map(StructField(_, StringType, nullable = true)))
 
-  /** S5: semicolon CSV with UTF-8 BOM and a header row. The read
-    * schema carries the files' own raw headers, so Spark's per-file
-    * header check has nothing to warn about; the columns are then
-    * renamed positionally to [[normalizedColumns]]. Which files may be
-    * read at all is [[filesPassingHeaderGate]]'s decision. */
+  /** S5: semicolon CSV with UTF-8 BOM and a header row, read
+    * positionally under [[bronzeSchema]]'s normalized names. Which
+    * files may be read at all is [[filesPassingHeaderGate]]'s decision,
+    * so Spark's own per-file header check (a WARN naming the raw
+    * header) says nothing new. No renaming Project sits over the scan:
+    * under a union of two reads, a rename over the pushed-down
+    * [[filterEmptyRows]] predicate (which names every column) made
+    * the optimizer's constraint propagation copy that predicate once
+    * per subset of renamed columns — 2^23 copies, and the JVM heap
+    * ran out. */
   def readBronzeCsv(spark: SparkSession, paths: Seq[String]): DataFrame =
     spark.read
       .option("sep", ";")
       .option("header", "true") // consume+discard the raw header line
       .option("encoding", "UTF-8")
       .option("mode", "PERMISSIVE")
-      .schema(StructType(rawHeaders.map(StructField(_, StringType, nullable = true))))
+      .schema(bronzeSchema)
       .csv(paths: _*)
-      .toDF(normalizedColumns: _*)
 
   /** O4: keep only input files whose normalized header matches the
     * expected schema (reference skips whole files on mismatch).

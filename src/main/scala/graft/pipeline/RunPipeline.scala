@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
   * 1-file batch against the full batch — reference:
   * src/main.py:111-116, stage timers in the four stage scripts).
   *
-  * Usage: runMain graft.pipeline.RunPipeline [csvDir] [outDir]
-  * Defaults: /root/reference/test_files -> /tmp/graft_pipeline.
+  * Usage: runMain graft.pipeline.RunPipeline <csvDir> [outDir]
+  * `csvDir` is required; `outDir` defaults to /tmp/graft_pipeline.
   *
   * Env knobs:
   *  - SPARK_GRAFT_POLLUTANTS: path to a pollutants config in the
@@ -38,8 +38,11 @@ object RunPipeline {
 
   private val PollutantDir = "/pollutant=([^/]+)/".r
 
+  private val Usage = "runMain graft.pipeline.RunPipeline <csvDir> [outDir]"
+
   def main(args: Array[String]): Unit = {
-    val csvDir = args.headOption.getOrElse("/root/reference/test_files")
+    val csvDir = args.headOption.getOrElse(throw new IllegalArgumentException(
+      s"missing the CSV directory argument (csvDir); usage: $Usage"))
     val outDir = args.drop(1).headOption.getOrElse("/tmp/graft_pipeline")
     // keep pollutant codes as zero-padded strings ("01", not 1)
     val spark = graft.Sessions.local(conf = Map(

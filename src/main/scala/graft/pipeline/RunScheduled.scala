@@ -44,8 +44,9 @@ import org.apache.spark.sql.SparkSession
   * (tick date, files landed, per-stage millis, gold rows) — the run
   * history the reference kept as Airflow task logs.
   *
-  * Usage: runMain graft.pipeline.RunScheduled [csvDir] [outDir]
+  * Usage: runMain graft.pipeline.RunScheduled <csvDir> [outDir]
   *          [--window-days N] [--interval-minutes M] [--ticks K]
+  * `csvDir` is required; `outDir` defaults to /tmp/graft_scheduled.
   */
 object RunScheduled {
 
@@ -56,6 +57,9 @@ object RunScheduled {
     else name.stripSuffix(".csv").split("_").lastOption.flatMap(d =>
       scala.util.Try(java.time.LocalDate.parse(d)).toOption)
   }
+
+  private val Usage = "runMain graft.pipeline.RunScheduled <csvDir> [outDir] " +
+    "[--window-days N] [--interval-minutes M] [--ticks K]"
 
   def main(args: Array[String]): Unit = {
     var windowDays = 3
@@ -72,7 +76,9 @@ object RunScheduled {
       }
       i += 1
     }
-    val csvDir = positional.headOption.getOrElse("/root/reference/test_files")
+    val csvDir = positional.headOption.getOrElse(
+      throw new IllegalArgumentException(
+        s"missing the CSV directory argument (csvDir); usage: $Usage"))
     val outDir = positional.drop(1).headOption.getOrElse("/tmp/graft_scheduled")
     // keep pollutant codes as zero-padded strings ("01", not 1)
     val spark = graft.Sessions.local(conf = Map(

@@ -1,7 +1,10 @@
 package graft
 
 import graft.operators.TxLog
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import java.util.concurrent.{CountDownLatch, TimeUnit}
 
 /** The transactional commit-log table ([[TxLog]]): multi-writer
   * commits over plain parquet — the piece the Lease + `_current`
@@ -1077,4 +1080,103 @@ class TxLogSpec extends SparkSpec {
     assert(!TxLog.wantsFusedBucketStats(enabled = false, nBuckets = 16,
       perBucketAggs = 6, rows = 2200, maxRowAggs = maxRA))
   }
+
+  /** Run `write` on `frame` while its rows are held: a nondeterministic
+    * UDF parks the frame's one task on [[TxLogSpec.go]] after signalling
+    * [[TxLogSpec.started]], so `meanwhile` commits on this thread while
+    * the write job is open. Returns the write's outcome. */
+  private def whileWriting[A](frame: DataFrame)(write: DataFrame => A)
+      (meanwhile: => Unit): scala.util.Try[A] = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    TxLogSpec.started = new CountDownLatch(1)
+    TxLogSpec.go = new CountDownLatch(1)
+    val hold = udf { (id: Long) =>
+      TxLogSpec.started.countDown()
+      TxLogSpec.go.await()
+      id
+    }.asNondeterministic()
+    val held = frame.coalesce(1).withColumn("id", hold(col("id")))
+    val f = Future(write(held))(scala.concurrent.ExecutionContext.global)
+    try {
+      assert(TxLogSpec.started.await(120, TimeUnit.SECONDS),
+        "the write never reached its rows")
+      meanwhile
+    } finally TxLogSpec.go.countDown()
+    scala.util.Try(Await.result(f, 5.minutes))
+  }
+
+  private val evolvedDdl = org.apache.spark.sql.types.StructType
+    .fromDDL("id BIGINT, text STRING, lang STRING").toDDL
+
+  test("append vs evolveSchema landing during its write: the claim " +
+      "collides and the old-shape batch aborts; the evolve stays") {
+    val root = freshRoot("raceevo")
+    TxLog.append(spark, root, docs(0, 10), Some("id"))
+    val out = whileWriting(docs(10, 20))(
+      TxLog.append(spark, root, _, Some("id")))(
+      TxLog.evolveSchema(spark, root, evolvedDdl))
+    val e = intercept[TxLog.TxConflictException](out.get)
+    assert(e.getMessage.contains("lost to a concurrent schema change"),
+      e.getMessage)
+    assert(TxLog.pinnedSchema(spark, root).contains(evolvedDdl))
+    assert(TxLog.latestVersion(spark, root) === 2)
+  }
+
+  test("append vs addConstraint landing during its write: the claim " +
+      "collides and no unvalidated row goes live under the constraint") {
+    val root = freshRoot("racecons")
+    TxLog.append(spark, root, docs(0, 10), Some("id"))
+    val out = whileWriting(docs(98, 102))(
+      TxLog.append(spark, root, _, Some("id")))(
+      TxLog.addConstraint(spark, root, "small", "id < 100"))
+    val e = intercept[TxLog.TxConflictException](out.get)
+    assert(e.getMessage.contains("CHECK constraint"), e.getMessage)
+    assert(TxLog.constraints(spark, root).map(_._1) === Seq("small"))
+    assert(TxLog.snapshot(spark, root).where(col("id") >= 100).count() === 0)
+  }
+
+  test("appendPartitioned vs evolveSchema landing during its write: the " +
+      "claim collides and the old-shape batch aborts; the evolve stays") {
+    val root = freshRoot("racepart")
+    TxLog.append(spark, root, docs(0, 10), Some("id"))
+    val out = whileWriting(docs(10, 20))(
+      TxLog.appendPartitioned(spark, root, _, "id", buckets = 2))(
+      TxLog.evolveSchema(spark, root, evolvedDdl))
+    val e = intercept[TxLog.TxConflictException](out.get)
+    assert(e.getMessage.contains("lost to a concurrent schema change"),
+      e.getMessage)
+    assert(TxLog.pinnedSchema(spark, root).contains(evolvedDdl))
+    assert(TxLog.latestVersion(spark, root) === 2)
+  }
+
+  test("one claim loop: only commit claims a version; checkpoint and " +
+      "cloneTable publish create-if-absent names") {
+    val src = java.nio.file.Paths.get(
+      "src/main/scala/graft/operators/TxLog.scala")
+    require(java.nio.file.Files.isRegularFile(src),
+      s"$src not found: the suite runs from the repository root")
+    val lines = scala.io.Source.fromFile(src.toFile, "UTF-8")
+      .getLines().toVector
+    // the enclosing top-level member of each line: the last `def`/`val`
+    // at two-space indent above it
+    val member = """^  (?:private(?:\[\w+\])? )?(?:def|val|lazy val) (\w+)""".r
+    val owners = lines.scanLeft("")((cur, l) =>
+      member.findFirstMatchIn(l).map(_.group(1)).getOrElse(cur)).tail
+    def usersOf(token: String): Set[String] = lines.zip(owners).collect {
+      case (l, o) if l.contains(token) && !l.trim.startsWith("*") &&
+          !l.trim.startsWith("//") => o
+    }.toSet
+    assert(usersOf("MaxClaimRetries") === Set("MaxClaimRetries", "commit"))
+    assert(usersOf("publishIfAbsent(") ===
+      Set("publishIfAbsent", "commit", "checkpoint", "cloneTable"))
+    assert(!lines.exists(_.contains("while (!publishIfAbsent")))
+  }
+}
+
+object TxLogSpec {
+  // the write-hold gate of `whileWriting`: static, so the UDF reaches it
+  // without serializing the latches into its closure
+  @volatile var started = new CountDownLatch(0)
+  @volatile var go = new CountDownLatch(0)
 }

@@ -63,9 +63,8 @@ object PgServeProbe {
       val spark = graft.Sessions.local(conf = Map(
         "spark.sql.sources.partitionColumnTypeInference.enabled" -> "false"))
 
-      // the real gold table, from the reference's own CSV corpus
-      val csvs = new java.io.File("/root/reference/test_files")
-        .listFiles().map(_.getPath).filter(_.endsWith(".csv")).sorted.toSeq
+      // a real gold table, from the in-repo GEODAIR-shaped corpus
+      val csvs = RunPipeline.listCsvs(graft.GeodairCorpus.corpus().toString)
       RunPipeline.run(spark, csvs, s"$pgRoot/pipeline", "pgserve")
       val gold = spark.read.parquet(s"$pgRoot/pipeline/gold")
 
