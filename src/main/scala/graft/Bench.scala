@@ -33,11 +33,9 @@ object Bench {
       val t0 = System.nanoTime()
       try { q.build(spark, sfDir).count() } catch { case e: Throwable =>
         errs(q.name) = e.toString.take(200).replaceAll("[\"\\\\\n\r]", " ") }
-      val sec = (System.nanoTime() - t0) / 1e9
-      // free dedup checkpoint blocks between runs so later reps start
-      // from flat executor storage
-      graft.operators.Dedup.releaseCheckpoints()
-      sec
+      // the built frame is dropped here, so its checkpoint blocks are
+      // the ContextCleaner's to free (see graft.operators.Dedup)
+      (System.nanoTime() - t0) / 1e9
     }
     def median(xs: Seq[Double]): Double = {
       val s = xs.sorted

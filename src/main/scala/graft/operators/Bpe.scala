@@ -99,21 +99,6 @@ object Bpe {
     * truncation costs one vocab-sized materialization job. */
   val truncateEvery: Int = 4
 
-  /** The RDD block set behind a localCheckpoint'ed frame, if that is
-    * what `df` is. `Dataset.unpersist` releases only cacheManager
-    * entries — checkpoint blocks are persisted directly on the RDD and
-    * otherwise linger until the ContextCleaner notices the RDD is
-    * unreachable (GC-timed, NOT scope-timed), which across many
-    * training calls in one JVM accumulates dead vocab-sized block sets
-    * in executor storage. Extracting the LogicalRDD lets the trainer
-    * free a superseded checkpoint deterministically. */
-  private def checkpointRdd(df: DataFrame)
-      : Option[org.apache.spark.rdd.RDD[_]] =
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => Some(lr.rdd)
-      case _ => None
-    }
-
   /** Learn up to `merges` BPE merges from a word-frequency state —
     * the SEQUENTIAL algorithm (one merge per round, the subword-nmt
     * definition). Delegates to [[trainBatched]] with batch = 1, whose
@@ -192,8 +177,8 @@ object Bpe {
     * thousands of rounds. On a cluster where executor loss matters,
     * set a reliable `spark.checkpoint.dir` and swap in `checkpoint`;
     * local-mode training (and any run that can simply re-run) keeps
-    * the cheap local form. Old checkpoint blocks are freed by
-    * Spark's ContextCleaner once unreferenced. */
+    * the cheap local form. A superseded checkpoint is freed as soon
+    * as its successor is materialized ([[Dedup.freeCheckpoint]]). */
   def trainBatched(words: DataFrame, merges: Int, batch: Int = 16,
       window: Int = 64): Seq[Merge] = {
     require(merges >= 1, s"Bpe.trainBatched: merges must be >= 1, got $merges")
@@ -226,12 +211,14 @@ object Bpe {
     var state = wide.coalesce(target)
       .select(symEncode(col("word")).as("sym"), col("freq")).persist()
     var parent: DataFrame = null // state's lineage parent, still cached
-    // the live truncation checkpoint's blocks (see checkpointRdd): a
-    // superseded checkpoint is freed the moment its successor is
-    // eagerly materialized — nothing can read it after that (every
+    // the live truncation checkpoint: a superseded checkpoint is freed
+    // (Dedup.freeCheckpoint) the moment its successor is eagerly
+    // materialized — nothing can read it after that (every
     // inter-checkpoint state is itself cached, and persist() spills
-    // rather than evicts, so no recompute ever walks back to it)
-    var cpBlocks: Option[org.apache.spark.rdd.RDD[_]] = None
+    // rather than evicts, so no recompute ever walks back to it). Left
+    // to the ContextCleaner, dead vocab-sized block sets would pile up
+    // in executor storage until a GC happened to notice them.
+    var cp: Option[DataFrame] = None
     var sinceTruncate = 0
     val found = scala.collection.mutable.ArrayBuffer.empty[Merge]
     try {
@@ -288,10 +275,10 @@ object Bpe {
               // eager: materializes NOW (reading the parent cache) and
               // resets the logical plan to the stored rows; the
               // PREVIOUS checkpoint's blocks are dead from this moment
-              val cp = next.localCheckpoint(true)
-              cpBlocks.foreach(_.unpersist(blocking = false))
-              cpBlocks = checkpointRdd(cp)
-              cp
+              val fresh = next.localCheckpoint(true)
+              cp.foreach(Dedup.freeCheckpoint)
+              cp = Some(fresh)
+              fresh
             } else next.persist()
         }
       }
@@ -302,7 +289,7 @@ object Bpe {
       state.unpersist(blocking = false)
       if (parent != null) parent.unpersist(blocking = false)
       // the merges live on the driver; no block set outlives the call
-      cpBlocks.foreach(_.unpersist(blocking = false))
+      cp.foreach(Dedup.freeCheckpoint)
       if (!callerPersisted) wide.unpersist(blocking = false)
     }
   }
@@ -377,15 +364,15 @@ object Bpe {
       // each eager chunk checkpoint supersedes the previous one — free
       // the dead block set immediately (the trainBatched rule; only
       // the FINAL checkpoint survives, it backs the returned frame)
-      var prevCp: Option[org.apache.spark.rdd.RDD[_]] = None
+      var prevCp: Option[DataFrame] = None
       val symed = merges.grouped(segmentChunk).foldLeft(
           vocabWords.select(col("word"), symEncode(col("word")).as("__sym"))) {
         (acc, group) =>
           val cp = acc
             .select(col("word"), applyMerges(col("__sym"), group).as("__sym"))
             .localCheckpoint(true)
-          prevCp.foreach(_.unpersist(blocking = false))
-          prevCp = checkpointRdd(cp)
+          prevCp.foreach(Dedup.freeCheckpoint)
+          prevCp = Some(cp)
           cp
       }
       symed.select(col("word"), size(symsOf(col("__sym"))).as("__ns"))

@@ -354,8 +354,7 @@ object Curate {
     * Same preconditions as the pieces: unique integral ids (the fuzzy
     * sets/ shard key), id order == arrival order and transitively-
     * closed dup groups for exact one-shot equivalence (asserted in
-    * StreamingSpec), batches serialize on the indexes. Checkpoints
-    * registered with [[Dedup.releaseCheckpoints]]/[[Dedup.scoped]].
+    * StreamingSpec), batches serialize on the indexes.
     * Returns the accepted rows in the [[curate]] output projection. */
   def intakeStep(spark: org.apache.spark.sql.SparkSession, batch: DataFrame,
       idCol: String, textCol: String,

@@ -23,89 +23,33 @@ import org.apache.spark.sql.functions._
   *    re-hash of strings inside interpreted higher-order functions;
   *  - survivors are chosen with deterministic min-id rules so reruns
   *    are idempotent.
+  *
+  * Checkpoint lifetime, for every operator that `localCheckpoint`s: a
+  * checkpoint lives while a DataFrame that reads it is reachable. A
+  * returned result keeps its blocks for as long as the caller holds
+  * it, and re-executes at any time; once the last such frame is
+  * dropped, Spark's ContextCleaner frees the blocks at the next GC
+  * (`spark.cleaner.referenceTracking`, on by default). No caller
+  * releases anything. The one exception is a checkpoint superseded
+  * inside a single call, freed eagerly by [[freeCheckpoint]].
   */
 object Dedup {
 
-  // ------------------------------------------------- checkpoint bookkeeping
+  // ------------------------------------------------- checkpoint lifetime
 
-  /** Local-checkpoint RDDs created by dedup operators ([[minHashDupPairsFromBase]]'s
-    * signature base; [[dupClusters]]' final label table). localCheckpoint
-    * blocks are executor-local and live until the session drops them —
-    * in a long-lived session, repeated dedup runs would otherwise
-    * accumulate dead blocks in executor storage. Superseded per-round
-    * checkpoints inside [[dupClusters]] are freed eagerly; the blocks a
-    * RESULT still depends on are registered here instead. */
-  private val trackedCheckpoints =
-    new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.rdd.RDD[_]]()
-
-  /** Handle to the checkpoint blocks created during one [[scoped]]
-    * run: blocks registered inside a scope belong to the lease, NOT to
-    * the global queue, so the caller — who knows when its result is
-    * done being re-executed — controls their lifetime, and a
-    * harness-style global [[releaseCheckpoints]] (Bench/Verify call it
-    * after every query) cannot invalidate a result held across that
-    * boundary. */
-  final class CheckpointLease private[Dedup] () {
-    private[Dedup] val rdds =
-      new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.rdd.RDD[_]]()
-    /** Free the leased blocks. Idempotent; call only once no DataFrame
-      * produced inside the scope will be re-executed (a localCheckpoint
-      * has no lineage to recompute from — re-running after release
-      * fails). Returns the number of RDDs released. */
-    def release(): Int = drain(rdds)
-  }
-
-  private val currentLease = new ThreadLocal[CheckpointLease]()
-
-  /** Run `f` with its dedup checkpoints tracked on a private lease
-    * instead of the global queue. Use from long-lived services that
-    * hold results across request boundaries:
-    * `val (labels, lease) = Dedup.scoped(Dedup.dupClusters(pairs))`
-    * ... use labels ... `lease.release()`. Scopes nest (inner scope
-    * wins, outer restored on exit); the lease is per-thread. */
-  def scoped[T](f: => T): (T, CheckpointLease) = {
-    val lease = new CheckpointLease
-    val prev = currentLease.get()
-    currentLease.set(lease)
-    try ((f, lease))
-    finally if (prev == null) currentLease.remove() else currentLease.set(prev)
-  }
-
-  private def register(r: org.apache.spark.rdd.RDD[_]): Unit = {
-    val lease = currentLease.get()
-    if (lease != null) lease.rdds.add(r) else trackedCheckpoints.add(r)
-  }
-
-  private def ckptRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-    df.queryExecution.analyzed.collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
+  /** Free the blocks behind a localCheckpoint'ed frame that nothing
+    * will read again — a round superseded INSIDE one call
+    * ([[dupClusters]], [[Bpe.trainBatched]], [[Bpe.segmentVocab]]).
+    * `Dataset.unpersist` releases only cacheManager entries; checkpoint
+    * blocks sit on the frame's `LogicalRDD`. Spark logs a "cannot be
+    * recomputed after unpersisting" WARN per call. Every other
+    * checkpoint is left to the ContextCleaner (see [[Dedup]]). */
+  private[operators] def freeCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.analyzed match {
+      case lr: org.apache.spark.sql.execution.LogicalRDD =>
+        lr.rdd.unpersist(blocking = false)
+      case _ =>
     }
-
-  private[operators] def trackCheckpoint(df: DataFrame): DataFrame = {
-    ckptRdd(df).foreach(register)
-    df
-  }
-
-  private def drain(
-      q: java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.rdd.RDD[_]]): Int = {
-    var n = 0
-    var r = q.poll()
-    while (r != null) {
-      r.unpersist(blocking = false)
-      n += 1
-      r = q.poll()
-    }
-    n
-  }
-
-  /** Free every UNSCOPED checkpoint block the dedup operators have
-    * registered (blocks created under [[scoped]] belong to their lease
-    * and are untouched). Call between logical runs — after the current
-    * result has been written/collected and no DataFrame derived from a
-    * prior unscoped dedup call will be re-executed. The bench and
-    * verify harnesses call this after each query action.
-    * Returns the number of RDDs released. */
-  def releaseCheckpoints(): Int = drain(trackedCheckpoints)
 
   // ---------------------------------------------------------------- exact
 
@@ -390,8 +334,8 @@ object Dedup {
     val dups = probeExactIndex(spark, path, batchSurvivors, idCol, exactOn)
       .where(col("corpus_id") =!= col("in_id"))
       .select(col("in_id").as(idCol)).distinct()
-    val accepted = trackCheckpoint(
-      batchSurvivors.join(dups, Seq(idCol), "left_anti").localCheckpoint())
+    val accepted =
+      batchSurvivors.join(dups, Seq(idCol), "left_anti").localCheckpoint()
     appendToExactIndex(spark, path, accepted, idCol, exactOn)
     accepted
   }
@@ -414,15 +358,14 @@ object Dedup {
   private[operators] def rewriteShards(spark: org.apache.spark.sql.SparkSession,
       table: String, shardCol: String, targets: Seq[Long],
       remaining: DataFrame): Unit = {
-    val (kept, lease) = scoped {
-      val k = trackCheckpoint(remaining.localCheckpoint())
+    val kept = {
+      val k = remaining.localCheckpoint()
       k.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy(shardCol).parquet(table)
       k.select(shardCol).distinct().collect()
         .map(_.getAs[Number](0).longValue()).toSet
     }
-    lease.release()
     val conf = spark.sparkContext.hadoopConfiguration
     targets.filterNot(kept).foreach { s =>
       val dir = new org.apache.hadoop.fs.Path(s"$table/$shardCol=$s")
@@ -490,16 +433,15 @@ object Dedup {
         "bands" -> IndexDeleteReport(0L, Nil))
     val setsPruned = spark.read.parquet(s"$path/sets")
       .where(col("__idshard").isin(idShards: _*))
-    val (bandShards, lease) = scoped {
+    val bandShards = {
       // the ids' own stored signatures locate their band buckets —
       // checkpointed: this read must survive the sets/ overwrite below
-      val doomedSets = trackCheckpoint(
-        setsPruned.join(doomed, Seq("id"), "left_semi").localCheckpoint())
+      val doomedSets =
+        setsPruned.join(doomed, Seq("id"), "left_semi").localCheckpoint()
       lshBandRows(doomedSets, m.k, m.bands)
         .select(pmod(xxhash64(col("bucket")), lit(m.nShards.toLong)).as("__s"))
         .distinct().collect().map(_.getLong(0)).sorted.toIndexedSeq
     }
-    lease.release() // band shards are collected; the signatures served
     val setsBefore = setsPruned.count()
     rewriteShards(spark, s"$path/sets", "__idshard", idShards,
       setsPruned.join(doomed, Seq("id"), "left_anti"))
@@ -630,11 +572,9 @@ object Dedup {
       checkpointBase: Boolean = false): DataFrame = {
     // LAZY (eager=false): building the DataFrame — e.g. for plan
     // inspection — must not run a job; the first action materializes.
-    // localCheckpoint blocks are executor-local and non-fault-tolerant;
-    // their lifetime is managed via [[releaseCheckpoints]] — call it
-    // between runs.
+    // localCheckpoint blocks are executor-local and non-fault-tolerant.
     val base =
-      if (checkpointBase) trackCheckpoint(base0.localCheckpoint(eager = false))
+      if (checkpointBase) base0.localCheckpoint(eager = false)
       else base0
     val pairs = lshCandidatePairs(base, k, bands, maxBucketSize)
     val withSets = pairs
@@ -779,8 +719,7 @@ object Dedup {
     * (again <= nShards ints) likewise prunes `sets/`; a small batch
     * therefore reads a FRACTION of both tables, proportional to its
     * own bucket spread, never the corpus. The candidate pair set is
-    * localCheckpointed (registered with [[releaseCheckpoints]] /
-    * [[scoped]]) so the band join executes once while feeding both the
+    * localCheckpointed so the band join executes once while feeding both the
     * shard collection and the verification join — this makes the call
     * eagerly run the candidate job, like the search-side collect it
     * mirrors. `checkpointCandidates = false` keeps the whole probe
@@ -808,7 +747,7 @@ object Dedup {
         Seq("band", "bucket"))
       .select("in_id", "corpus_id").distinct()
     val cand =
-      if (checkpointCandidates) trackCheckpoint(cand0.localCheckpoint())
+      if (checkpointCandidates) cand0.localCheckpoint()
       else cand0
     val sets0 = spark.read.parquet(s"$path/sets")
     val sets =
@@ -908,13 +847,13 @@ object Dedup {
       path: String, batch: DataFrame, idCol: String, textCol: String)
       : FuzzyAppendReport = {
     val m = fuzzyIndexMeta(spark, path)
-    val (report, lease) = scoped {
+    val report = {
       // one signing job; both table writes consume the checkpoint blocks
-      val base = trackCheckpoint(
+      val base =
         minHashBaseFromArrays(
             shingleHashArrays(batch, idCol, textCol, m.shingleN), m.k)
           .withColumn("__idshard", pmod(col("id").cast("long"), lit(m.nShards.toLong)))
-          .localCheckpoint())
+          .localCheckpoint()
       val setsRows = base.count()
       if (setsRows == 0L)
         FuzzyAppendReport(0L, 0L, 0L, Nil, Nil)
@@ -923,10 +862,10 @@ object Dedup {
           .partitionBy("__idshard").parquet(s"$path/sets")
         val setsShards = base.select("__idshard").distinct()
           .collect().map(_.getLong(0)).sorted
-        val nb = trackCheckpoint(
+        val nb =
           lshBandRows(base.select("id", "hs", "sig"), m.k, m.bands)
             .withColumn("__shard", pmod(xxhash64(col("bucket")), lit(m.nShards.toLong)))
-            .localCheckpoint())
+            .localCheckpoint()
         // existing membership of ONLY the batch's buckets: static
         // shard prune (bounded id list), then a semi-join on the
         // batch's distinct buckets before anything is counted
@@ -949,7 +888,6 @@ object Dedup {
           setsShards.toIndexedSeq, bandShards.toIndexedSeq)
       }
     }
-    lease.release()
     report
   }
 
@@ -979,8 +917,8 @@ object Dedup {
     // checkpoint the accepted set ONCE: its lineage (probe anti-join)
     // would otherwise re-execute for the append's signing job and
     // again when the caller writes the result
-    val accepted = trackCheckpoint(incrementalFuzzySurvivors(
-      spark, path, batchSurvivors, idCol, textCol, threshold).localCheckpoint())
+    val accepted = incrementalFuzzySurvivors(
+      spark, path, batchSurvivors, idCol, textCol, threshold).localCheckpoint()
     appendToFuzzyIndex(spark, path, accepted, idCol, textCol)
     accepted
   }
@@ -1422,8 +1360,8 @@ object Dedup {
     // PREVIOUS round's blocks are dead the moment the new one exists —
     // free them here instead of letting rounds accumulate in executor
     // storage; only the final table (which the result depends on)
-    // outlives the loop, registered for releaseCheckpoints().
-    var prevCkpt: Option[org.apache.spark.rdd.RDD[_]] = None
+    // outlives the loop.
+    var prev: Option[DataFrame] = None
     var changed = true
     var iter = 0
     while (changed && iter < maxIterations) {
@@ -1442,12 +1380,11 @@ object Dedup {
           (col("new_label") < col("old_label")).as("__moved"))
         .localCheckpoint()
       changed = next.where(col("__moved")).limit(1).count() > 0
-      prevCkpt.foreach(_.unpersist(blocking = false))
-      prevCkpt = ckptRdd(next)
+      prev.foreach(freeCheckpoint)
+      prev = Some(next)
       labels = next.drop("__moved")
       iter += 1
     }
-    prevCkpt.foreach(register)
     labels
   }
 
@@ -1612,25 +1549,25 @@ object Dedup {
   def appendToHammingIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, batchSigs: DataFrame): (Long, Long) = {
     val m = hammingIndexMeta(spark, path)
-    val (result, lease) = scoped {
-      val base = trackCheckpoint(batchSigs
+    val result = {
+      val base = batchSigs
         .select(col("media_id").cast("long").as("media_id"),
           col("sig").cast("long").as("sig"))
         .withColumn("__idshard",
           pmod(col("media_id"), lit(m.nShards.toLong)))
-        .localCheckpoint())
+        .localCheckpoint()
       val n = base.count()
       if (n == 0L) (0L, 0L)
       else {
         base.write.mode(org.apache.spark.sql.SaveMode.Append)
           .partitionBy("__idshard").parquet(s"$path/sigs")
-        val nb = trackCheckpoint(
+        val nb =
           hammingBandRows(base.select("media_id", "sig"),
             m.bands, m.bandBits)
           .withColumn("__shard",
             pmod(xxhash64(col("band"), col("bucket")),
               lit(m.nShards.toLong)))
-          .localCheckpoint())
+          .localCheckpoint()
         val shards = nb.select("__shard").distinct()
           .collect().map(_.getLong(0)).toIndexedSeq
         val existing = spark.read.parquet(s"$path/bands")
@@ -1651,7 +1588,6 @@ object Dedup {
         (n, nb.count() - appendable.count())
       }
     }
-    lease.release()
     result
   }
 
@@ -1734,16 +1670,15 @@ object Dedup {
         "bands" -> IndexDeleteReport(0L, Nil))
     val sigsPruned = spark.read.parquet(s"$path/sigs")
       .where(col("__idshard").isin(idShards: _*))
-    val (bandShards, lease) = scoped {
-      val doomedSigs = trackCheckpoint(
+    val bandShards = {
+      val doomedSigs =
         sigsPruned.join(doomed, Seq("media_id"), "left_semi")
-          .localCheckpoint())
+          .localCheckpoint()
       hammingBandRows(doomedSigs, m.bands, m.bandBits)
         .select(pmod(xxhash64(col("band"), col("bucket")),
           lit(m.nShards.toLong)).as("__s"))
         .distinct().collect().map(_.getLong(0)).sorted.toIndexedSeq
     }
-    lease.release()
     val sigsBefore = sigsPruned.count()
     rewriteShards(spark, s"$path/sigs", "__idshard", idShards,
       sigsPruned.join(doomed, Seq("media_id"), "left_anti"))
@@ -1946,14 +1881,7 @@ object Dedup {
     * explode ×n then distinct on (id, idx) longs; per-doc removal
     * arrays are bounded by the document's own token count, the same
     * bounded-reassembly contract as x44. No corpus window, no global
-    * sort, no suffix array.
-    *
-    * Lifetime: the result depends on localCheckpoint blocks registered
-    * with the GLOBAL [[releaseCheckpoints]] queue (bench/verify drain
-    * it after each query action) — re-executing the returned DataFrame
-    * after a release throws (lineage is truncated). Callers whose
-    * results must outlive a harness release point should wrap the call
-    * in [[scoped]]. */
+    * sort, no suffix array. */
   def stripDuplicateSpans(df: DataFrame, idCol: String, textCol: String,
       n: Int = 8): DataFrame = {
     require(n >= 1, s"stripDuplicateSpans: n must be >= 1, got $n")
@@ -1963,8 +1891,8 @@ object Dedup {
     // the two subtrees — unchecked, the corpus is scanned, tokenized
     // and re-grammed twice (measured plan: 2× Scan+Generate at r17
     // baseline). Rows are three longs — the light proxy, not the text.
-    val occ = trackCheckpoint(spanOccurrences(base, n)
-      .localCheckpoint(eager = false))
+    val occ = spanOccurrences(base, n)
+      .localCheckpoint(eager = false)
     val keepers = occ.groupBy("g")
       .agg(count(lit(1)).as("__cnt"), min(struct(col("id"), col("pos"))).as("__keep"))
       .where(col("__cnt") >= 2)
@@ -2093,8 +2021,8 @@ object Dedup {
         (col("__cnt") >= 2 &&
           !(col("id") === col("__keep.id") && col("pos") === col("__keep.pos"))))
       .select(col("id"), col("pos"))
-    val out = trackCheckpoint(
-      rewriteDropSpans(base, marked, n, idCol).localCheckpoint())
+    val out =
+      rewriteDropSpans(base, marked, n, idCol).localCheckpoint()
     batchGrams.join(hits, Seq("g"), "left_anti")
       .write.mode(org.apache.spark.sql.SaveMode.Append)
       .partitionBy("__shard").parquet(s"$path/grams")

@@ -596,8 +596,8 @@ object IvfAnn {
       val cents = seedCentroidsInt(batch, idCol, vecCol, nlist)
       val pairs = Dedup.semanticDupPairs(batch, idCol, vecCol, cents,
         threshold, maxCellSize)
-      val survivors = Dedup.trackCheckpoint(
-        Dedup.clusterSurvivors(batch, idCol, pairs).localCheckpoint())
+      val survivors =
+        Dedup.clusterSurvivors(batch, idCol, pairs).localCheckpoint()
       buildIndexInt(survivors, idCol, vecCol, cents, path)
       survivors
     }
@@ -614,8 +614,8 @@ object IvfAnn {
         idCol, vecCol, idCol, vecCol, threshold)
       .where(col("corpus_id") =!= col("in_id"))
       .select(col("in_id").as(idCol)).distinct()
-    val accepted = Dedup.trackCheckpoint(
-      batchSurvivors.join(dropIds, Seq(idCol), "left_anti").localCheckpoint())
+    val accepted =
+      batchSurvivors.join(dropIds, Seq(idCol), "left_anti").localCheckpoint()
     appendToIndexInt(accepted, idCol, vecCol, cents, path)
     accepted
   }

@@ -696,15 +696,7 @@ object Sampling {
     * Docs with no features (empty text) keep score 0 with n_feats 0.
     *
     * Output: all `raw` columns + `score_unats` (Long micro-nats,
-    * higher = more target-like) + `n_feats` (Long).
-    *
-    * Lifetime: the result depends on localCheckpoint blocks registered
-    * with the GLOBAL [[graft.operators.Dedup.releaseCheckpoints]] queue
-    * (the bench/verify harnesses drain it after each query action) —
-    * re-executing the returned DataFrame after a release throws
-    * (lineage is truncated). Callers whose results must outlive a
-    * harness release point should wrap the call in
-    * [[graft.operators.Dedup.scoped]]. */
+    * higher = more target-like) + `n_feats` (Long). */
   def dsirScores(raw: DataFrame, target: DataFrame, idCol: String,
       textCol: String, buckets: Int = 1024,
       salt: String = "dsir"): DataFrame = {
@@ -714,11 +706,11 @@ object Sampling {
     // ints, never text; the scaladoc's "materialize the featurized
     // frame if the double scan matters" now holds by default). Same
     // algebra: q counts ignore idCol, scoring groups on it.
-    val rawFeats = graft.operators.Dedup.trackCheckpoint(
+    val rawFeats =
       raw.select(col(idCol),
           explode(hashedNgramBuckets(col(textCol), buckets, salt))
             .as("bucket"))
-        .localCheckpoint(eager = false))
+        .localCheckpoint(eager = false)
     val rawState = rawFeats.groupBy("bucket").agg(count(lit(1)).as("n"))
     val model = dsirModelFromStates(rawState,
       dsirState(target, textCol, buckets, salt), buckets)

@@ -291,14 +291,7 @@ object TextAnalysis {
     * top-k window partitions by doc_id — bounded by a document's
     * distinct terms, never corpus-wide.
     *
-    * Output: (doc_id, rank, term, tf, df, score).
-    *
-    * Lifetime: the result depends on localCheckpoint blocks registered
-    * with the GLOBAL [[graft.operators.Dedup.releaseCheckpoints]] queue
-    * (bench/verify drain it after each query action) — re-executing the
-    * returned DataFrame after a release throws (lineage is truncated).
-    * Callers whose results must outlive a harness release point should
-    * wrap the call in [[graft.operators.Dedup.scoped]]. */
+    * Output: (doc_id, rank, term, tf, df, score). */
   def tfIdfTopTerms(docs: DataFrame, idCol: String, textCol: String,
       k: Int): DataFrame = {
     val terms = Rebalance(docs.select(col(idCol).as("doc_id"), col(textCol).as("__text")))
@@ -308,11 +301,10 @@ object TextAnalysis {
     // re-scans and re-tokenizes the corpus THREE times (measured plan:
     // 3× Scan+Generate at r17 baseline; guide §8 "decide with small
     // rows"). The checkpoint stores (doc_id, term, tf) — the small
-    // proxy, never the text — and is registered for the harness-level
-    // release (same lifetime discipline as the x03 signature base).
-    val tf = Dedup.trackCheckpoint(
+    // proxy, never the text.
+    val tf =
       terms.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-        .localCheckpoint(eager = false))
+        .localCheckpoint(eager = false)
     // tf already has one row per (doc, term) — df is a plain count
     val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val nDocs = tf.select(countDistinct(col("doc_id")).as("n_docs"))

@@ -1568,7 +1568,7 @@ object TxLog {
   }
 
   /** Dir-count bound for the fused merge hash-stab (the bitmask
-    * aggregate in [[mergeCoreOn]]): up to this many hash-statted dirs
+    * aggregate in [[mergeCore]]): up to this many hash-statted dirs
     * the interval tests ride the validation aggregate as `bit_or`
     * words (≤ 8 longs, one when-chain per dir — codegen-sized); above
     * it the broadcast interval join ([[hashAdmitted]]) takes over, so
@@ -1876,42 +1876,22 @@ object TxLog {
   }
 
   private def mergeCore(spark: SparkSession, root: String,
-      batch: DataFrame, keyCol: String, deleteCol: Option[String],
+      source: DataFrame, keyCol: String, deleteCol: Option[String],
       statsCols: Seq[String], txn: Option[(String, Long)])
       (beforeClaim: () => Unit): (Long, Boolean) = {
-    // MATERIALIZE the change batch once (lazy localCheckpoint, freed in
-    // the finally below): the validation aggregate, the hash-prune and
-    // the rewrite each consume the batch, and each otherwise re-runs
-    // Catalyst analysis AND re-executes the caller's arbitrary source
-    // plan — measured 0.99 s -> 0.60 s per merge at sf0.1 on the x170
-    // shape, ~2/3 of it repeated planning of the caller's union-of-
-    // scans tree. This is also Delta's mergeMaterializeSource rule: a
-    // nondeterministic source re-executed per consumer could yield a
-    // DIFFERENT key set between validation, prune and write; pinning
-    // the rows makes the three views provably consistent. Blocks are
-    // batch-sized (a change batch, not the table) and executor-local.
-    val batchM = batch.localCheckpoint(eager = false)
-    val batchRdd = batchM.queryExecution.analyzed.collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }
-    // If a Spark upgrade stops surfacing a LogicalRDD at the analyzed
-    // root, the finally below would silently skip unpersist and leak one
-    // batch-sized block set per merge in a long-lived session — make
-    // that visible instead of silent.
-    if (batchRdd.isEmpty) Console.err.println(
-      "[graft] mergeCore: localCheckpoint did not yield a LogicalRDD " +
-        "root — checkpoint blocks for this merge will not be freed")
-    try {
-    mergeCoreOn(spark, root, batchM, keyCol, deleteCol, statsCols,
-      txn)(beforeClaim)
-    } finally batchRdd.foreach(_.unpersist(blocking = false))
-  }
-
-  /** [[mergeCore]]'s body over the already-materialized batch. */
-  private def mergeCoreOn(spark: SparkSession, root: String,
-      batch: DataFrame, keyCol: String, deleteCol: Option[String],
-      statsCols: Seq[String], txn: Option[(String, Long)])
-      (beforeClaim: () => Unit): (Long, Boolean) = {
+    // MATERIALIZE the change batch once (lazy localCheckpoint): the
+    // validation aggregate, the hash-prune and the rewrite each consume
+    // the batch, and each otherwise re-runs Catalyst analysis AND
+    // re-executes the caller's arbitrary source plan — measured
+    // 0.99 s -> 0.60 s per merge at sf0.1 on the x170 shape, ~2/3 of it
+    // repeated planning of the caller's union-of-scans tree. This is
+    // also Delta's mergeMaterializeSource rule: a nondeterministic
+    // source re-executed per consumer could yield a DIFFERENT key set
+    // between validation, prune and write; pinning the rows makes the
+    // three views provably consistent. Blocks are batch-sized (a change
+    // batch, not the table) and executor-local; nothing reads them once
+    // mergeCore returns, so the ContextCleaner frees them (see Dedup).
+    val batch = source.localCheckpoint(eager = false)
     val upserts = deleteCol match {
       case Some(d) => batch.where(!coalesce(col(d), lit(false))).drop(d)
       case None => batch

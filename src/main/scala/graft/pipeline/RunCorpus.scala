@@ -161,7 +161,6 @@ object RunCorpus {
           .select("doc_id", "split")
           .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
           .parquet(s"$outDir/curate/splits")
-        graft.operators.Dedup.releaseCheckpoints()
         val splits = spark.read.parquet(s"$outDir/curate/splits")
         val counts = splits.groupBy("split").count().collect()
           .map(r => s"split_${r.getString(0)}" -> r.getLong(1)).toSeq.sortBy(_._1)

@@ -168,8 +168,7 @@ object RunIntake {
     * with a third growing IVF tier at `indexes/semantic/` — accepted
     * rows append to `accepted/`, and a one-line JSON report
     * (input/accepted counts, wall time) appends to `runs.jsonl`.
-    * Batch-scoped checkpoints are released before returning (one run =
-    * one lease). Returns the report. */
+    * Returns the report. */
   def run(spark: SparkSession, batch: DataFrame, stateDir: String,
       cfg: Curate.Config = Curate.Config(keep = Seq("source")),
       eval: Option[(DataFrame, String, String)] = None,
@@ -226,7 +225,7 @@ object RunIntake {
           .drop("nll_unats", "n_feats", "mean_nll_unats")
       case None => batch
     }
-    val (report, lease) = Dedup.scoped {
+    val report = {
       val accepted = (vectors, span) match {
         case (Some((vecs, vecIdCol, vecCol)), _) =>
           Curate.intakeStepWithSemantic(spark, gated, "doc_id", "text",
@@ -387,7 +386,6 @@ object RunIntake {
         (if (sinkReplayed) Seq("sink_replayed" -> 1L) else Nil) ++
         Seq("millis" -> (System.nanoTime() - t0) / 1000000L)
     }
-    lease.release()
     report.foreach { case (k, v) => println(f"[intake] $k%-15s $v%d") }
     val json = report.map { case (k, v) => s""""$k":$v""" }
       .mkString("{", ",", "}")

@@ -188,23 +188,20 @@ object RunSync {
     val batch = newSnap.join(
       diff.where(col("status").isin("added", "changed")).select(col(idCol)),
       Seq(idCol), "left_semi")
-    val (_, lease) = Dedup.scoped {
-      val accepted = vectors match {
-        case Some((_, newVecs, vId, vCol)) =>
-          Curate.intakeStepWithSemantic(spark, batch, idCol, textCol,
-            exactPath, fuzzyPath, semPath, newVecs, vId, vCol,
-            cfg = cfg, eval = eval)
-        case None =>
-          Curate.intakeStep(spark, batch, idCol, textCol,
-            exactPath, fuzzyPath, cfg, eval)
-      }
-      if (txAccepted)
-        graft.operators.TxLog.append(spark, acceptedPath, accepted,
-          Some(idCol))
-      else accepted.write.mode(SaveMode.Append)
-        .parquet(Compaction.ensureAtomic(spark, acceptedPath))
+    val accepted = vectors match {
+      case Some((_, newVecs, vId, vCol)) =>
+        Curate.intakeStepWithSemantic(spark, batch, idCol, textCol,
+          exactPath, fuzzyPath, semPath, newVecs, vId, vCol,
+          cfg = cfg, eval = eval)
+      case None =>
+        Curate.intakeStep(spark, batch, idCol, textCol,
+          exactPath, fuzzyPath, cfg, eval)
     }
-    lease.release()
+    if (txAccepted)
+      graft.operators.TxLog.append(spark, acceptedPath, accepted,
+        Some(idCol))
+    else accepted.write.mode(SaveMode.Append)
+      .parquet(Compaction.ensureAtomic(spark, acceptedPath))
     diff.unpersist()
     // count from the read-back (the RunCurate one-execution lesson);
     // the per-run admission count is the delta over the takedown floor

@@ -136,14 +136,11 @@ object DocStream {
       : org.apache.spark.sql.streaming.StreamingQuery =
     docs.writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val (_, lease) = graft.operators.Dedup.scoped {
-          graft.operators.Dedup.intakeStepAgainstExactIndex(
-              spark, indexPath, batch.toDF(), "doc_id",
-              org.apache.spark.sql.functions.col("text"))
-            .write.mode(org.apache.spark.sql.SaveMode.Append)
-            .parquet(s"$outPath/survivors")
-        }
-        lease.release()
+        graft.operators.Dedup.intakeStepAgainstExactIndex(
+            spark, indexPath, batch.toDF(), "doc_id",
+            org.apache.spark.sql.functions.col("text"))
+          .write.mode(org.apache.spark.sql.SaveMode.Append)
+          .parquet(s"$outPath/survivors")
         ()
       }
       .option("checkpointLocation", s"$outPath/_checkpoint")
@@ -169,13 +166,10 @@ object DocStream {
       : org.apache.spark.sql.streaming.StreamingQuery =
     docs.writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val (_, lease) = graft.operators.Dedup.scoped {
-          graft.operators.Curate.intakeStep(spark, batch.toDF(),
-              "doc_id", "text", exactIndexPath, fuzzyIndexPath, cfg, eval)
-            .write.mode(org.apache.spark.sql.SaveMode.Append)
-            .parquet(s"$outPath/survivors")
-        }
-        lease.release()
+        graft.operators.Curate.intakeStep(spark, batch.toDF(),
+            "doc_id", "text", exactIndexPath, fuzzyIndexPath, cfg, eval)
+          .write.mode(org.apache.spark.sql.SaveMode.Append)
+          .parquet(s"$outPath/survivors")
         ()
       }
       .option("checkpointLocation", s"$outPath/_checkpoint")
@@ -202,15 +196,10 @@ object DocStream {
       : org.apache.spark.sql.streaming.StreamingQuery =
     docs.writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        // lease-scoped: the batch's dedup checkpoints die with the
-        // batch, without draining checkpoints other session work holds
-        val (_, lease) = graft.operators.Dedup.scoped {
-          graft.operators.Dedup.intakeStepAgainstFuzzyIndex(
-              spark, indexPath, batch.toDF(), "doc_id", "text", threshold)
-            .write.mode(org.apache.spark.sql.SaveMode.Append)
-            .parquet(s"$outPath/survivors")
-        }
-        lease.release()
+        graft.operators.Dedup.intakeStepAgainstFuzzyIndex(
+            spark, indexPath, batch.toDF(), "doc_id", "text", threshold)
+          .write.mode(org.apache.spark.sql.SaveMode.Append)
+          .parquet(s"$outPath/survivors")
         ()
       }
       .option("checkpointLocation", s"$outPath/_checkpoint")
@@ -238,21 +227,18 @@ object DocStream {
         val meta = new org.apache.hadoop.fs.Path(s"$indexPath/meta")
         val founded = meta.getFileSystem(spark.sparkContext.hadoopConfiguration)
           .exists(meta)
-        val (_, lease) = graft.operators.Dedup.scoped {
-          val out =
-            if (founded)
-              graft.operators.Dedup.intakeStepAgainstSpanIndex(
-                spark, indexPath, batch.toDF(), "doc_id", "text")
-            else {
-              graft.operators.Dedup.buildSpanIndex(batch.toDF(),
-                "doc_id", "text", n, indexPath)
-              graft.operators.Dedup.stripDuplicateSpans(batch.toDF(),
-                "doc_id", "text", n)
-            }
-          out.write.mode(org.apache.spark.sql.SaveMode.Append)
-            .parquet(s"$outPath/rewritten")
-        }
-        lease.release()
+        val out =
+          if (founded)
+            graft.operators.Dedup.intakeStepAgainstSpanIndex(
+              spark, indexPath, batch.toDF(), "doc_id", "text")
+          else {
+            graft.operators.Dedup.buildSpanIndex(batch.toDF(),
+              "doc_id", "text", n, indexPath)
+            graft.operators.Dedup.stripDuplicateSpans(batch.toDF(),
+              "doc_id", "text", n)
+          }
+        out.write.mode(org.apache.spark.sql.SaveMode.Append)
+          .parquet(s"$outPath/rewritten")
         ()
       }
       .option("checkpointLocation", s"$outPath/_checkpoint")
@@ -279,14 +265,11 @@ object DocStream {
       : org.apache.spark.sql.streaming.StreamingQuery =
     vecs.writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val (_, lease) = graft.operators.Dedup.scoped {
-          graft.operators.IvfAnn.intakeStepOrBootstrap(
-              spark, indexPath, batch.toDF(), "vec_id", "embedding",
-              threshold, nlist)
-            .write.mode(org.apache.spark.sql.SaveMode.Append)
-            .parquet(s"$outPath/survivors")
-        }
-        lease.release()
+        graft.operators.IvfAnn.intakeStepOrBootstrap(
+            spark, indexPath, batch.toDF(), "vec_id", "embedding",
+            threshold, nlist)
+          .write.mode(org.apache.spark.sql.SaveMode.Append)
+          .parquet(s"$outPath/survivors")
         ()
       }
       .option("checkpointLocation", s"$outPath/_checkpoint")

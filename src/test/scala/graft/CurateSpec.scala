@@ -131,7 +131,6 @@ class CurateSpec extends SparkSpec {
     val json = java.nio.file.Files.readString(
       java.nio.file.Paths.get(out, "report.json"))
     assert(json.contains("\"span_tokens_removed\":"))
-    graft.operators.Dedup.releaseCheckpoints()
   }
 
   test("curateAndReport: one funnel yields the same corpus and counts as curate+report") {
@@ -197,7 +196,6 @@ class CurateSpec extends SparkSpec {
     assert(audit.exceptAll(again).count() == 0 &&
       again.exceptAll(audit).count() == 0)
     audit.unpersist()
-    graft.operators.Dedup.releaseCheckpoints()
   }
 
   test("tx sink: intake sequential == pointered content; replayed batch " +
@@ -248,7 +246,6 @@ class CurateSpec extends SparkSpec {
     val hist = graft.operators.TxLog.history(spark, s"$txState/accepted")
       .select("action").as[String].collect()
     assert(hist.count(_ == "merge") === 1, hist.mkString(","))
-    graft.operators.Dedup.releaseCheckpoints()
   }
 
   test("RunSync: snapshot churn applies forward — takedown frees content, changed docs re-enter") {
@@ -304,7 +301,6 @@ class CurateSpec extends SparkSpec {
       .count() == 0, "a surviving doc's copy must stay blocked")
     assert(rep2("accepted_total") == totalBefore + 1)
     acceptedA.unpersist(); acceptedB.unpersist()
-    graft.operators.Dedup.releaseCheckpoints()
   }
 
   test("RunSync --semantic: churn reaches the third tier — removed vectors free content, retained ones block") {
@@ -354,7 +350,6 @@ class CurateSpec extends SparkSpec {
     assert(acceptedB.where(col("doc_id") === n2).count() == 0,
       "a retained doc's semantic copy must stay blocked")
     assert(acceptedB.where(col("doc_id") === removedDonor).count() == 0)
-    graft.operators.Dedup.releaseCheckpoints()
   }
 
   test("RunAudit: the monitor suite lands as one audit dir; reruns are byte-deterministic") {
@@ -405,7 +400,6 @@ class CurateSpec extends SparkSpec {
       .run(spark, docs, None, s"${out}_3").toMap
     assert(rep3.contains("vector_monitors") &&
       !rep3.contains("ann_avg_recall_ppm"))
-    graft.operators.Dedup.releaseCheckpoints()
   }
 
   test("RunAudit --prev: drift reads from persisted snapshots; vanished source reads 1.0") {
@@ -450,7 +444,6 @@ class CurateSpec extends SparkSpec {
       graft.pipeline.RunAudit.run(spark, week2, None, out2,
         prevAuditDir = Some(out2))
     }
-    graft.operators.Dedup.releaseCheckpoints()
   }
 
   test("RunIntake --span: the journey's sink accumulates the one-shot funnel + span strip") {
@@ -481,7 +474,6 @@ class CurateSpec extends SparkSpec {
           col("doc_id").cast("double").as("embedding")), "doc_id", "embedding")),
         span = Some(5))
     }
-    graft.operators.Dedup.releaseCheckpoints()
   }
 
   test("RunIntake: per-batch journey accumulates exactly the one-shot curated corpus") {
@@ -556,7 +548,6 @@ class CurateSpec extends SparkSpec {
     val recomputedBpe = words(graft.operators.Bpe.wordState(accepted, "text"))
     assert(grownBpe == recomputedBpe,
       "grown bpe word state must equal one-shot word counts of the sink")
-    graft.operators.Dedup.releaseCheckpoints()
   }
 
   test("RunIntake schema gate: the first run pins the batch schema; a drifted batch fails fast") {
@@ -583,7 +574,6 @@ class CurateSpec extends SparkSpec {
     graft.pipeline.RunIntake.run(spark,
       docs.where(col("doc_id") >= 100 && col("doc_id") < 150), state, cfg)
     assert(graft.operators.Compaction.readData(spark, s"$state/accepted").count() >= before)
-    graft.operators.Dedup.releaseCheckpoints()
   }
 
   test("RunIntake --lm-model: frozen-model fluency gate keeps sequential == one-shot on the gated corpus") {
@@ -625,7 +615,6 @@ class CurateSpec extends SparkSpec {
       oneShot.exceptAll(accepted).count() == 0,
       "gated sequential intake must equal one-shot curation of the " +
         "gated corpus")
-    graft.operators.Dedup.releaseCheckpoints()
   }
 
   test("intakeStepWithSpan: sequential four-tier intake == one-shot funnel + one-shot span strip") {
@@ -654,7 +643,6 @@ class CurateSpec extends SparkSpec {
         s"got ${got.size} rows, expected ${expected.size}")
     // the grown state exists and is founded from batch 1's survivors
     assert(spark.read.parquet(s"$tmp/span/grams").count() > 0)
-    graft.operators.Dedup.releaseCheckpoints()
   }
 
   test("intakeStepWithSemantic: the third tier drops embedded dups across batches; vectorless docs pass") {
@@ -696,6 +684,5 @@ class CurateSpec extends SparkSpec {
       "three-tier sequential must equal text one-shot minus the semantic dup")
     assert(got.where(col("doc_id") === s3).count() == 1,
       "a doc without a vector must pass the semantic tier un-judged")
-    graft.operators.Dedup.releaseCheckpoints()
   }
 }

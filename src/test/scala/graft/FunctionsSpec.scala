@@ -543,19 +543,60 @@ class FunctionsSpec extends SparkSpec {
     assert(got == Set(1L, 3L))
   }
 
-  test("scoped checkpoint lease survives a global releaseCheckpoints") {
-    import graft.operators.Dedup
+  // one unscoped dupClusters run over two components (sizes 2 and 3);
+  // only its checkpoint's id and its component sizes leave this frame,
+  // so the result itself is unreachable once this returns
+  private def dupClustersOnce(): (Int, Seq[Long]) = {
     val pairs = Seq((1L, 2L, 1.0), (2L, 3L, 1.0), (10L, 11L, 1.0))
       .toDF("id_a", "id_b", "jaccard")
-    val (labels, lease) = Dedup.scoped(Dedup.dupClusters(pairs))
-    labels.count()
-    // harness-style global release between queries must NOT free the
-    // leased blocks: the held result stays re-executable
-    Dedup.releaseCheckpoints()
+    val labels = Dedup.dupClusters(pairs)
     val byLabel = labels.groupBy("label").count()
       .select("count").as[Long].collect().sorted.toSeq
+    (CheckpointProbe.checkpointId(labels).get, byLabel)
+  }
+
+  test("checkpoint lifetime: a dropped dupClusters result frees its blocks") {
+    CheckpointProbe.unpersistedDuring(spark) { unpersisted =>
+      val (id, byLabel) = dupClustersOnce()
+      assert(byLabel == Seq(2L, 3L))
+      assert(CheckpointProbe.gcUntil() {
+        !CheckpointProbe.cachedRddIds(spark).contains(id) && unpersisted.contains(id)
+      }, s"checkpoint RDD $id still holds blocks 30 s after its result was dropped")
+    }
+  }
+
+  test("checkpoint lifetime: executor storage stays flat across dupClusters runs") {
+    val before = CheckpointProbe.cachedRddIds(spark)
+    (1 to 3).foreach { run =>
+      assert(dupClustersOnce()._2 == Seq(2L, 3L))
+      assert(CheckpointProbe.gcUntil() {
+        (CheckpointProbe.cachedRddIds(spark) -- before).isEmpty
+      }, s"run $run left cached RDDs " +
+        (CheckpointProbe.cachedRddIds(spark) -- before).mkString(","))
+    }
+  }
+
+  test("checkpoint lifetime: held x35/x82 results re-execute after another dedup query and a GC") {
+    val docs = Seq(
+      (1L, "the quick brown fox jumps over the lazy dog near the river bank"),
+      (2L, "a quick brown fox jumps over the lazy dog near the old mill"),
+      (3L, "completely different words fill this short third document"))
+      .toDF("doc_id", "text")
+    val tfidf = graft.operators.TextAnalysis.tfIdfTopTerms(docs, "doc_id", "text", k = 3)
+    val spans = Dedup.stripDuplicateSpans(docs, "doc_id", "text", n = 5)
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).sorted.toSeq
+    val (tf0, sp0) = (rows(tfidf), rows(spans))
+    assert(tf0.size == 9 && sp0.size == 3)
+    // another dedup query runs and is dropped; the cleaner frees ITS
+    // checkpoint while the two held results keep theirs
+    val (other, byLabel) = dupClustersOnce()
     assert(byLabel == Seq(2L, 3L))
-    assert(lease.release() >= 1)
+    assert(CheckpointProbe.gcUntil() {
+      !CheckpointProbe.cachedRddIds(spark).contains(other)
+    }, s"the other query's checkpoint RDD $other was never freed")
+    assert(rows(tfidf) == tf0)
+    assert(rows(spans) == sp0)
   }
 
   test("persisted fuzzy index: probe equals batch dedup; both index scans shard-pruned") {
@@ -613,7 +654,6 @@ class FunctionsSpec extends SparkSpec {
       }, s"no pruning $shardCol partition filter in: " +
         scans.flatMap(_.partitionFilters).mkString(", "))
     }
-    Dedup.releaseCheckpoints()
   }
 
   test("persisted IVF index: same results as query-time assignment, pruned scan") {
@@ -739,7 +779,6 @@ class FunctionsSpec extends SparkSpec {
       Dedup.semanticDupPairs(concat, "vec_id", "embedding", cents, 0.999)))
     assert((0L until 40L).toSet ++ ids(a1) ++ ids(a2) == oneShot,
       "sequential universe must equal the one-shot survivor set")
-    Dedup.releaseCheckpoints()
   }
 
   test("probeIndexSemantic: the batch's cell set prunes the index scan statically") {
@@ -1078,7 +1117,6 @@ class FunctionsSpec extends SparkSpec {
       "doc_id", col("text")))
     assert(e3 == Nil,
       "a later exact copy must still drop against the twice-appended digest")
-    Dedup.releaseCheckpoints()
   }
 
   test("span index: sequential intake == one-shot strip; replay idempotent; appends carry only new grams") {
@@ -1156,7 +1194,6 @@ class FunctionsSpec extends SparkSpec {
       "doc_id", "text").collect().map(_.toString).sorted.toSeq
     assert(probeAfter == probeBefore,
       "span probes must be layout-invariant across compaction")
-    Dedup.releaseCheckpoints()
   }
 
   test("index takedown: deleted docs stop blocking copies; rewrites touch only their shards; meta invariant") {
@@ -1232,7 +1269,6 @@ class FunctionsSpec extends SparkSpec {
       "post-delete: a near-copy of the removed doc must be ADMITTED")
     assert(fzProbe(22L, tB + " extra") == Nil,
       "post-delete: the surviving doc must still block its near-copies")
-    Dedup.releaseCheckpoints()
   }
 
   test("IVF takedown: a deleted vector stops surfacing as a neighbor; rewrite touches only its cells") {
@@ -1311,7 +1347,6 @@ class FunctionsSpec extends SparkSpec {
       case _: org.apache.spark.sql.catalyst.expressions.IsNotNull => false
       case _ => true
     }, s"no pruning __shard partition filter in: $shardFilters")
-    Dedup.releaseCheckpoints()
   }
 
   test("index compaction: one file per partition dir, content and probe results unchanged") {
@@ -1385,7 +1420,6 @@ class FunctionsSpec extends SparkSpec {
       "compaction must carry _centroids/ through the destroy-last swap")
     assert(semProbe() == semBefore,
       "semantic probes must be layout-invariant across compaction")
-    Dedup.releaseCheckpoints()
   }
 
   test("gram_hashes/prune_indices: positioned grams, distinct set equals shingle_hashes, merge-walk prune") {

@@ -169,7 +169,6 @@ class MixSpec extends SparkSpec {
     assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0,
       "a corpus that arrived over months must mix row-identically to " +
         "the same corpus curated in one shot")
-    graft.operators.Dedup.releaseCheckpoints()
   }
 
   test("RunCorpus --tokenizer: the artifact trains on the packed slice and lands beside the mix") {
@@ -195,7 +194,6 @@ class MixSpec extends SparkSpec {
     val json = java.nio.file.Files.readString(
       java.nio.file.Paths.get(out, "report.json"))
     assert(json.contains("\"tokenizer_n_merges\":4"))
-    graft.operators.Dedup.releaseCheckpoints()
   }
 
   test("RunMix --manifest: the fill audit lands beside the stream and conserves tokens") {

@@ -279,7 +279,6 @@ class PlanAuditSpec extends SparkSpec {
     assert(logical.collectFirst {
       case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a
     }.isEmpty, s"assignment must not aggregate:\n$logical")
-    graft.operators.Dedup.releaseCheckpoints()
   }
 
   test("x56: manifest is window -> bounded explode -> one hash agg; no join") {

@@ -213,7 +213,6 @@ class PropertiesSpec extends SparkSpec {
       .join(full.select(col("doc_id").as("id_b"), col("split").as("__sb")), "id_b")
       .where(col("__sa") =!= col("__sb")).count()
     assert(plainStraddle > 0, "hash split no longer demonstrates the leak")
-    Dedup.releaseCheckpoints()
     // weight validation: must sum to 1, non-negative
     intercept[IllegalArgumentException] {
       Sampling.hashSplit(docs, "doc_id", Seq("a" -> 0.5, "b" -> 0.4))

@@ -6,7 +6,8 @@ import scala.jdk.CollectionConverters._
 
 /** `Sessions` is the one session builder, and the environment variables
   * and `spark.graft.*` conf keys the program reads are explicit lists: a
-  * new builder or a new knob is a visible edit here. */
+  * new builder or a new knob is a visible edit here. So is a second
+  * checkpoint lifetime rule (see [[graft.operators.Dedup]]). */
 class SessionsSpec extends SparkSpec {
 
   private def scalaFiles(dir: String): Seq[Path] = {
@@ -48,5 +49,30 @@ class SessionsSpec extends SparkSpec {
     val keys = scalaFiles("src/main/scala")
       .flatMap(f => lines(f).flatMap(l => key.findAllMatchIn(l).map(_.group(1))))
     assert(keys.toSet === Set("spark.graft.tx.fusedBucketStats"))
+  }
+
+  test("checkpoints live by reachability: no drain, lease or cleaner conf; one free helper") {
+    val code = (scalaFiles("src/main/scala") ++ scalaFiles("src/test/scala"))
+      .flatMap(f => lines(f).zipWithIndex.map { case (l, i) => (f, i + 1, l) })
+    val gone = """release[C]heckpoints|Checkpoint[L]ease|Dedup\.scope[d]|track[C]heckpoint""".r
+    val mentions = code.collect {
+      case (f, n, l) if gone.findFirstIn(l).isDefined => s"$f:$n"
+    }
+    assert(mentions.isEmpty, mentions.mkString("\n"))
+    val cleanerKey = """"spark\.cleaner\.""".r
+    val cleanerConf = code.collect {
+      case (f, n, l) if cleanerKey.findFirstIn(l).isDefined => s"$f:$n"
+    }
+    assert(cleanerConf.isEmpty, cleanerConf.mkString("\n"))
+    // the only src/main code that reaches a checkpoint's RDD (to free it)
+    val mainCode = code.filter { case (f, _, l) =>
+      f.startsWith(Paths.get("src/main/scala")) &&
+        !l.trim.startsWith("*") && !l.trim.startsWith("//")
+    }
+    def where(token: String): Seq[String] = mainCode.collect {
+      case (f, _, l) if l.contains(token) => f.getFileName.toString
+    }
+    assert(where("LogicalRDD") === Seq("Dedup.scala"))
+    assert(where(".rdd.unpersist(") === Seq("Dedup.scala"))
   }
 }

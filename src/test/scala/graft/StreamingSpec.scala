@@ -150,13 +150,11 @@ class StreamingSpec extends SparkSpec {
       graft.streaming.DocStream.readDocs(spark, s"$tmp/in"),
       s"$tmp/idx", s"$tmp/out", threshold = 0.5)
     try { q.processAllAvailable() } finally q.stop()
-    Dedup.releaseCheckpoints()
     val streamed = spark.read.parquet(s"$tmp/out/survivors")
       .select("doc_id").as[Long].collect().sorted.toSeq
     val batch = Dedup.incrementalFuzzySurvivors(spark, s"$tmp/idx",
       incoming, "doc_id", "text", threshold = 0.5)
       .select("doc_id").as[Long].collect().sorted.toSeq
-    Dedup.releaseCheckpoints()
     assert(streamed == batch, "per-batch probe union must equal one whole-stream probe")
     assert(streamed == Seq(101L, 103L), "near-dups of corpus docs must be dropped")
   }
@@ -227,7 +225,6 @@ class StreamingSpec extends SparkSpec {
     val oneShot = Dedup.clusterSurvivors(all, "doc_id",
         Dedup.minHashDupPairs(all, "doc_id", "text", 3, 64, 16, 0.5))
       .where($"doc_id" >= 10).select("doc_id").as[Long].collect().sorted.toSeq
-    Dedup.releaseCheckpoints()
     assert((s1 ++ s2).sorted == oneShot,
       "sequential grow-intake must end where the one-shot dedup ends")
   }
@@ -327,7 +324,6 @@ class StreamingSpec extends SparkSpec {
         Seq((10L, d10), (11L, d11), (20L, d20), (21L, d21), (22L, d22))
           .toDF("doc_id", "text"), "doc_id", "text", n = 5)
       .collect().map(_.toString).sorted.toSeq
-    Dedup.releaseCheckpoints()
     assert(got == oneShot, s"streamed != one-shot:\n$got\nvs\n$oneShot")
     // and the cuts really happened: d20 lost its borrowed span
     val byId = spark.read.parquet(s"$tmp/out/rewritten")
@@ -389,7 +385,6 @@ class StreamingSpec extends SparkSpec {
       sequential.exceptAll(oneShot).count() == 0 &&
       oneShot.exceptAll(sequential).count() == 0,
       "sequential two-tier intake must end where the one-shot funnel ends")
-    Dedup.releaseCheckpoints()
   }
 
   test("intakeAndCurate streams the full funnel: filter, exact and fuzzy tiers all drop cross-batch") {

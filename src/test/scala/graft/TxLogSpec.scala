@@ -1150,6 +1150,26 @@ class TxLogSpec extends SparkSpec {
     assert(TxLog.latestVersion(spark, root) === 2)
   }
 
+  test("merge: the frozen change batch is freed once merge returns, " +
+      "without a recompute WARN") {
+    val root = freshRoot("mergefree")
+    TxLog.append(spark, root, docs(0, 10), Some("id"))
+    val before = CheckpointProbe.cachedRddIds(spark)
+    CheckpointProbe.unpersistedDuring(spark) { unpersisted =>
+      val (v, warnings) = CheckpointProbe.warningsDuring(
+        TxLog.merge(spark, root, docs(5, 15), "id"))
+      assert(v === 2)
+      assert(!warnings.exists(_.contains(CheckpointProbe.RecomputeWarning)),
+        warnings.mkString("\n"))
+      assert(CheckpointProbe.gcUntil() {
+        !unpersisted.isEmpty &&
+          (CheckpointProbe.cachedRddIds(spark) -- before).isEmpty
+      }, "merge left cached RDDs " +
+        (CheckpointProbe.cachedRddIds(spark) -- before).mkString(","))
+    }
+    assert(TxLog.snapshot(spark, root).count() === 15)
+  }
+
   test("one claim loop: only commit claims a version; checkpoint and " +
       "cloneTable publish create-if-absent names") {
     val src = java.nio.file.Paths.get(

