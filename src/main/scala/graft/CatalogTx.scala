@@ -692,8 +692,8 @@ private[graft] object CatalogTx {
 
     // ===================================== transactional tables (TxLog)
     QueryDef("x147_tx_snapshot",
-      // the TRANSACTIONAL table layer (r12 — the residual gap the
-      // Lease + `_current` pointer story left open): three concurrent-
+      // the TRANSACTIONAL table layer (r12 — the multi-writer gap the
+      // single-writer Lease leaves open): three concurrent-
       // safe APPEND commits land through the atomic manifest claim and
       // a snapshot-isolated read folds the log back to exactly the
       // union — every row byte-accounted via md5 against the source

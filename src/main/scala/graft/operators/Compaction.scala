@@ -71,8 +71,8 @@ object Compaction {
     * leaves a complete copy under a deterministic name (live, `.tmp`,
     * or `.old`), never a window with no table. The recovery rule and
     * quiesce contract are the object-level scaladoc above. Shared by
-    * [[compactTable]] and the snapshot-sync accepted-table rewrite
-    * ([[graft.pipeline.RunSync]]). */
+    * [[compactTable]], the index compactors and the journeys'
+    * growing side-state merges ([[graft.pipeline.RunIntake]]). */
   def replaceTable(spark: SparkSession, dir: String)
       (write: String => Unit): Unit = {
     val tmp = dir + ".compact.tmp"
@@ -143,222 +143,6 @@ object Compaction {
       "restored-tmp"
     } else throw new java.io.IOException(
       s"recoverTable: no copy of $dir exists (live/.old/.tmp all absent)")
-  }
-
-  // ------------------------------------------------------------------
-  // READER-ATOMIC tables (VERDICT r9 item 5): the two-rename swap
-  // above requires quiesced readers — between park and promote the
-  // live path does not exist. For tables with UN-QUIESCED readers
-  // (RunMix reading accepted/ while a sync rewrites it), the pointered
-  // layout closes the window:
-  //
-  //   <root>/_current     — tiny manifest naming the live generation
-  //   <root>/gen-<n>/     — complete table copies (current + previous)
-  //
-  // Readers resolve the pointer ([[resolveData]]) and read the named
-  // generation. The swap writes the NEXT generation completely, then
-  // flips `_current` with one atomic rename of a fully-written
-  // manifest file — a reader at ANY interleaving resolves to either
-  // the old or the new generation, both complete. GC keeps
-  // `graceGens` generations behind the live one (default 2) as grace
-  // copies for readers that resolved before recent flips — a reader
-  // may straddle up to `graceGens` consecutive swaps between
-  // resolving the pointer and finishing its scan; on a shared
-  // cluster size the grace window to reader runtime by keeping more
-  // generations. Plain tables (no `_current`) resolve
-  // to themselves, so the reader path is backward-compatible.
-  // ------------------------------------------------------------------
-
-  private def fsFor(spark: SparkSession, p: String) =
-    new org.apache.hadoop.fs.Path(p)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** The filesystem POINTER I/O must use: the checksum-wrapped local
-    * FS renames a file and its `.crc` sidecar in TWO steps, so a
-    * hammering reader can pair a freshly-renamed `_current` with the
-    * previous generation's sidecar and fail the read with a checksum
-    * error (caught by AtomicSwapSpec's hammer). The pointer's
-    * integrity comes from the atomic rename of the fully-written
-    * manifest, not from a sidecar — so the pointer bypasses the
-    * checksum layer entirely (object stores and HDFS are unaffected:
-    * they are not ChecksumFileSystems). */
-  private def rawFsFor(spark: SparkSession, p: String)
-      : org.apache.hadoop.fs.FileSystem =
-    fsFor(spark, p) match {
-      case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
-      case other => other
-    }
-
-  /** The data directory a reader should scan: `<root>/<gen>` when the
-    * `_current` pointer exists, `root` itself otherwise (plain
-    * layout — backward compatible). */
-  def resolveData(spark: SparkSession, root: String): String = {
-    val fs = rawFsFor(spark, root)
-    val ptr = new org.apache.hadoop.fs.Path(root, "_current")
-    if (!fs.exists(ptr)) root
-    else {
-      val in = fs.open(ptr)
-      val gen =
-        try new String(
-          org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8").trim
-        finally in.close()
-      s"$root/$gen"
-    }
-  }
-
-  /** Read a table through its pointer (or directly when plain). */
-  def readData(spark: SparkSession, root: String)
-      : org.apache.spark.sql.DataFrame =
-    spark.read.parquet(resolveData(spark, root))
-
-  /** Is `root` a [[TxLog]] transactional table? */
-  def isTxTable(spark: SparkSession, root: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$root/_txlog")
-    fsFor(spark, root).exists(p)
-  }
-
-  /** Read a table in ANY of the engine's layouts — transactional
-    * (`_txlog/` commit log → head snapshot), pointered (`_current` →
-    * live generation), or plain parquet. The single reader entry the
-    * journeys use for the `accepted/` sink, so a state dir can adopt
-    * the tx layout without touching its consumers. */
-  def readAnyTable(spark: SparkSession, root: String)
-      : org.apache.spark.sql.DataFrame =
-    if (isTxTable(spark, root)) TxLog.snapshot(spark, root)
-    else readData(spark, root)
-
-  private def genNumber(name: String): Option[Long] =
-    if (name.startsWith("gen-"))
-      scala.util.Try(name.stripPrefix("gen-").toLong).toOption
-    else None
-
-  private def currentGenNumber(spark: SparkSession, root: String): Option[Long] = {
-    val cur = resolveData(spark, root)
-    if (cur == root) None
-    else genNumber(new org.apache.hadoop.fs.Path(cur).getName)
-  }
-
-  /** Atomically flip `_current` to `gen`. The manifest is written
-    * fully to a unique temp name and RENAMED over the pointer — on
-    * POSIX and HDFS (FileContext OVERWRITE) the rename is atomic, so
-    * a concurrent reader sees the old or the new manifest, never a
-    * partial one. */
-  private def flipPointer(spark: SparkSession, root: String,
-      gen: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val tmp = new org.apache.hadoop.fs.Path(root,
-      s"_current.tmp.${java.util.UUID.randomUUID()}")
-    // raw fs: no .crc sidecar for the pointer (see rawFsFor), so the
-    // OVERWRITE rename below moves exactly one file; a checksum-layer
-    // rename also deletes any legacy destination sidecar (src has
-    // none), so stale-crc pairings age out of pre-existing tables
-    val fs = rawFsFor(spark, root)
-    val out = fs.create(tmp, true)
-    try out.write(gen.getBytes("UTF-8")) finally out.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      new org.apache.hadoop.fs.Path(root).toUri, conf)
-    fc.rename(tmp, new org.apache.hadoop.fs.Path(root, "_current"),
-      org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
-
-  /** Ensure `root` is a pointered table and return its CURRENT data
-    * dir (for appends). Fresh root → `gen-1` founded and pointed at.
-    * An existing PLAIN table migrates: its data files move into
-    * `gen-1` (rename, no copy), then the pointer appears — migration
-    * mutates the layout and must run QUIESCED (the journeys call this
-    * under their writer lease; it is a one-time event per table). */
-  def ensureAtomic(spark: SparkSession, root: String): String = {
-    val fs = fsFor(spark, root)
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    currentGenNumber(spark, root) match {
-      case Some(n) => s"$root/gen-$n"
-      case None =>
-        val gen1 = new org.apache.hadoop.fs.Path(root, "gen-1")
-        fs.mkdirs(gen1)
-        if (fs.exists(rootPath)) {
-          // migrate plain data files (if any) into gen-1
-          fs.listStatus(rootPath).foreach { st =>
-            val n = st.getPath.getName
-            if (n != "gen-1" && !n.startsWith("_current") &&
-                !n.startsWith("_lease"))
-              fs.rename(st.getPath, new org.apache.hadoop.fs.Path(gen1, n))
-          }
-        }
-        flipPointer(spark, root, "gen-1")
-        s"$root/gen-1"
-    }
-  }
-
-  /** READER-ATOMIC replacement: write the next generation completely,
-    * flip the pointer, GC generations older than the previous. The
-    * table stays resolvable to a COMPLETE copy at every instant;
-    * single-WRITER discipline still applies (journey lease), readers
-    * need nothing. A crash before the flip leaves an orphan gen dir
-    * (invisible to readers; overwritten by the next swap or cleared
-    * by gc); a crash after the flip is a completed swap. */
-  def replaceTableAtomic(spark: SparkSession, root: String,
-      graceGens: Int = 2)
-      (write: String => Unit): Unit = {
-    require(graceGens >= 1, s"replaceTableAtomic: graceGens $graceGens")
-    val fs = fsFor(spark, root)
-    val cur = currentGenNumber(spark, root).getOrElse {
-      ensureAtomic(spark, root)
-      currentGenNumber(spark, root).get
-    }
-    val next = cur + 1
-    val nextDir = new org.apache.hadoop.fs.Path(root, s"gen-$next")
-    if (fs.exists(nextDir)) fs.delete(nextDir, true) // crashed writer's orphan
-    write(s"$root/gen-$next")
-    flipPointer(spark, root, s"gen-$next")
-    // GC: keep `graceGens` generations behind the new live one. The
-    // grace window bounds how many CONSECUTIVE swaps a slow reader
-    // may straddle between resolving the pointer and finishing its
-    // scan: one grace gen covers a reader that resolved just before
-    // THIS flip, but a reader descheduled across two back-to-back
-    // swaps (maintenance loops; the hammer spec under a loaded host)
-    // would find its generation deleted mid-read. Default 2 — size up
-    // for long-running readers on shared clusters.
-    fs.listStatus(new org.apache.hadoop.fs.Path(root)).foreach { st =>
-      genNumber(st.getPath.getName).foreach { g =>
-        if (g <= next - 1 - graceGens) fs.delete(st.getPath, true)
-      }
-    }
-  }
-
-  /** [[compactTable]] for a POINTERED table: the compacted copy
-    * becomes the next generation and the pointer flips — small-file
-    * maintenance that needs NO reader quiesce (the point of the
-    * layout; writers still hold the journey lease). The intake
-    * `accepted/` sink accumulates one-plus files per batch append, so
-    * a long-lived deployment runs this beside RunGc. */
-  def compactTableAtomic(spark: SparkSession, root: String,
-      partitionCol: Option[String] = None): (Int, Int) = {
-    val live = resolveData(spark, root)
-    require(live != root,
-      s"compactTableAtomic: $root is not a pointered table (no _current) " +
-        "— ensureAtomic it first or use compactTable under quiesce")
-    def files(dir: String): Int = {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = fsFor(spark, dir)
-      if (!fs.exists(p)) 0
-      else fs.listStatus(p).count(st =>
-        st.isFile && st.getPath.getName.endsWith(".parquet")) +
-        fs.listStatus(p).filter(_.isDirectory)
-          .map(d => fs.listStatus(d.getPath)
-            .count(_.getPath.getName.endsWith(".parquet"))).sum
-    }
-    val before = files(live)
-    replaceTableAtomic(spark, root) { next =>
-      val df = spark.read.parquet(live)
-      val writer = partitionCol match {
-        case Some(c) => df.repartition(col(c)).write
-          .mode(org.apache.spark.sql.SaveMode.Overwrite).partitionBy(c)
-        case None => df.coalesce(1).write
-          .mode(org.apache.spark.sql.SaveMode.Overwrite)
-      }
-      writer.parquet(next)
-    }
-    (before, files(resolveData(spark, root)))
   }
 
   /** Compact a [[Dedup.buildFuzzyIndex]] layout: both the `sets/` and

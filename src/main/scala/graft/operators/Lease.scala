@@ -54,8 +54,10 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * the transactional-format gap SCALE.md documents); every
   * state-mutating entry point in THIS engine takes it, which closes
   * the race between well-behaved writers. Readers stay lease-free:
-  * probes are read-only and the swap windows they could observe are
-  * repaired by [[Compaction.recoverTable]].
+  * probes are read-only, the `accepted/` sink is a [[TxLog]] table
+  * whose readers always see one committed version, and the swap
+  * windows they could observe on the side-states are repaired by
+  * [[Compaction.recoverTable]].
   */
 object Lease {
 

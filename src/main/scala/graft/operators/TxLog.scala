@@ -4,9 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** A minimal TRANSACTIONAL table format over plain parquet — the
-  * multi-writer commit story that [[Lease]] + the `_current` pointer
-  * (reader atomicity, single writer) deliberately stop short of
-  * (SCALE.md "what the lease cannot do"). The design is the published
+  * multi-writer commit story that [[Lease]] (single writer by
+  * convention) deliberately stops short of (SCALE.md "what the lease
+  * cannot do"); the journeys' `accepted/` sink is one. The design is the published
   * Delta/Iceberg core reduced to its load-bearing primitive: an
   * ordered log of immutable commit manifests, each claimed with one
   * atomic create-if-absent, over immutable data directories.
@@ -229,8 +229,8 @@ object TxLog {
   // ------------------------------------------------------------------
   // filesystem plumbing — manifests go through the RAW fs (no .crc
   // sidecars: their integrity is the atomicity of the publish, and the
-  // checksum layer's two-step rename is exactly the race the pointer
-  // work already evicted, SCALE.md "Reader-atomic tables")
+  // checksum layer renames a file and its sidecar in two steps, so a
+  // concurrent reader could pair a new file with a stale sidecar)
   // ------------------------------------------------------------------
 
   private def rawFs(spark: SparkSession, p: String)

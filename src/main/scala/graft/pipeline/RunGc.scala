@@ -7,7 +7,7 @@ import graft.operators.Compaction
 /** LAKE HOUSEKEEPING journey — the maintenance pass a long-lived
   * deployment schedules beside [[RunIntake]]/[[RunAudit]]: every
   * destroy-last swap ([[graft.operators.Compaction.replaceTable]] —
-  * compaction, snapshot-sync rewrites, growing-state merges) can leave
+  * index compaction, growing-state merges) can leave
   * `.compact.tmp` / `.compact.old` siblings if a run dies mid-swap.
   * The swap contract guarantees a complete copy always survives; this
   * journey is the piece that RESTORES the invariant corpus-wide:
@@ -166,10 +166,6 @@ object RunGc {
     // parquet table (its children are partition dirs / data files)
     val leftovers = scala.collection.mutable.Buffer[(String, Long)]()
     val tables = scala.collection.mutable.Buffer[String]()
-    // pointered tables: generations that are neither current nor the
-    // grace (previous) copy are crash remnants — a writer died before
-    // its flip. Invisible to readers; reclaimable space.
-    val orphanGens = scala.collection.mutable.Buffer[(String, Long)]()
     val txTables = scala.collection.mutable.Buffer[String]()
     def walk(p: org.apache.hadoop.fs.Path, depth: Int): Unit = {
       if (depth > maxDepth) return
@@ -182,34 +178,6 @@ object RunGc {
           c.isDirectory && c.getPath.getName == "_txlog")) {
         txTables += p.toUri.getPath
         return
-      }
-      val pointered = children.exists(c =>
-        c.isFile && c.getPath.getName == "_current")
-      if (pointered) {
-        val cur = Compaction.resolveData(spark, p.toUri.getPath)
-        val curName = new org.apache.hadoop.fs.Path(cur).getName
-        // keep full directory NAMES: if the pointer is non-numeric
-        // (e.g. "gen-abc", or a custom name), the fallback must still
-        // protect the live generation — a stripped-prefix fallback
-        // would GC the directory the pointer names
-        val keep = scala.util.Try(curName.stripPrefix("gen-").toLong)
-          .toOption
-          .map(n => Set(s"gen-$n", s"gen-${n - 1}"))
-          .getOrElse(Set(curName))
-        children.foreach { c =>
-          val n = c.getPath.getName
-          if (c.isDirectory) {
-            if (n.startsWith("gen-") && !keep.contains(n))
-              orphanGens += ((c.getPath.toUri.getPath, c.getModificationTime))
-            else if (n == curName)
-              tables += c.getPath.toUri.getPath // the live generation
-          } else if (n.startsWith("_current.tmp.")) {
-            // a writer crashed between manifest write and the atomic
-            // flip rename — the tmp manifest is dead weight forever
-            orphanGens += ((c.getPath.toUri.getPath, c.getModificationTime))
-          }
-        }
-        return // generations are the leaves; nothing else to descend
       }
       val isTable = children.exists { c =>
         val n = c.getPath.getName
@@ -250,28 +218,6 @@ object RunGc {
           case None => Compaction.recoverTable(spark, base)
         }
       Finding(path, kind, action)
-    }.toSeq
-    val orphanFindings = orphanGens.sortBy(_._1).map { case (path, mtime) =>
-      def delete(): String = {
-        fs.delete(new org.apache.hadoop.fs.Path(path), true); "deleted"
-      }
-      val action =
-        if (mtime > cutoff) "skipped-young"
-        else if (!apply) "would-delete"
-        else nearestStateDir(fs, root, path) match {
-          // same per-state-dir exclusion as recoverTable: a live
-          // writer of this table may be mid-swap on a fresh gen
-          case Some(sd) =>
-            try graft.operators.Lease.withLease(
-                spark.sparkContext.hadoopConfiguration, sd,
-                graft.operators.Lease.defaultOwner())(_ => delete())
-            catch {
-              case e: graft.operators.Lease.LeaseHeld =>
-                s"skipped-lease-held-by-${e.holder}"
-            }
-          case None => delete()
-        }
-      Finding(path, "orphan-generation", action)
     }.toSeq
     // one base dir can surface via both siblings; recoverTable is
     // idempotent ("clean" the second time), so duplicates are safe
@@ -387,7 +333,7 @@ object RunGc {
         else if (applied.contains(rel)) s"vacuumed-retain-$retainVersions"
         else "skipped"))
     }.toSeq
-    val all = swapFindings ++ orphanFindings ++ fileFindings ++ txFindings
+    val all = swapFindings ++ fileFindings ++ txFindings
     val json = all.map(f =>
         s"""{"path":"${f.path}","kind":"${f.kind}","action":"${f.action}"}""")
       .mkString("", "\n", "\n")

@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, length, md5}
 
-import graft.operators.{Bpe, Compaction, Curate, Dedup, Kmv, Sampling, TextAnalysis}
+import graft.operators.{Bpe, Compaction, Curate, Kmv, Sampling, TextAnalysis, TxLog}
 
 /** The INCREMENTAL-INGESTION journey — the fourth runnable main,
   * completing the operability story around
@@ -14,21 +14,22 @@ import graft.operators.{Bpe, Compaction, Curate, Dedup, Kmv, Sampling, TextAnaly
   *
   *   batch.parquet ── clean/filter ── exact-index probe+append
   *                 ── fuzzy-index probe+append ── [decontaminate]
-  *                 ──> accepted/ (appended), runs.jsonl (history)
+  *                 ──> accepted/ (one TxLog commit), runs.jsonl (history)
   *
   * The FIRST run bootstraps both index tiers from its own survivors
   * (the intakeStep contract) — no separate build step. Sequential
   * runs land exactly where one-shot [[graft.operators.Curate.curate]]
   * of the concatenated corpus lands (StreamingSpec + the x52 oracle);
   * a crashed run is recovered by RE-RUNNING it (the replay-idempotent
-  * probe contract — rows may duplicate in `accepted/`, decisions
-  * cannot flip; dedupe the sink by doc_id downstream or wrap the
-  * write in the streaming checkpoint via
+  * probe contract — decisions cannot flip; with `--batch-id` the
+  * replayed sink commit lands at most once, without it rows may
+  * duplicate in `accepted/`: dedupe the sink by doc_id downstream or
+  * wrap the write in the streaming checkpoint via
   * [[graft.streaming.DocStream.intakeAndCurate]]).
   *
   * Usage: runMain graft.pipeline.RunIntake [batchDir] [stateDir]
   *          [--threshold T] [--scrub-pii] [--eval PATH] [--semantic]
-  *          [--span N] [--lm-model PATH --lm-band lo:hi]
+  *          [--span N] [--lm-model PATH --lm-band lo:hi] [--batch-id N]
   * `--lm-model`/`--lm-band` pre-filter each batch to the x97 fluency
   * band (mean nll micro-nats) against a FROZEN model artifact
   * ([[graft.operators.Sampling.lmModelFromState]] written to parquet)
@@ -44,7 +45,10 @@ import graft.operators.{Bpe, Compaction, Curate, Dedup, Kmv, Sampling, TextAnaly
   * un-judged. `stateDir` holds everything the journey owns:
   *  indexes/exact/, indexes/fuzzy/   the growing index tiers
   *  indexes/semantic/                (with --semantic) the IVF tier
-  *  accepted/                        curated accepted rows, appended
+  *  accepted/                        curated accepted rows, a
+  *                                   [[graft.operators.TxLog]] table
+  *                                   keyed by doc_id (one commit per
+  *                                   run; read it with TxLog.snapshot)
   *  profile_state/                   growing per-source report card —
   *                                   the x69 mergeable state, updated
   *                                   per batch from the funnel's own
@@ -96,6 +100,27 @@ object RunIntake {
     * sketches of different k must never merge. */
   val kmvStateK: Int = 64
 
+  /** The `accepted/` sink of `stateDir`, the one place the journeys
+    * (RunIntake, [[RunSync]], [[RunMix]] `--accepted`) resolve it. The
+    * sink is always a [[graft.operators.TxLog]] table. A sink written
+    * in an older layout (a `_current` pointer over `gen-N/` dirs, or
+    * plain parquet) has no `_txlog/`, and a TxLog write there would
+    * found an empty log beside the old rows and hide them, so it fails
+    * loud. A lone `data/` dir is TxLog's own first write that crashed
+    * before its commit, not an older layout. */
+  def acceptedRoot(spark: SparkSession, stateDir: String): String = {
+    val root = s"$stateDir/accepted"
+    val p = new org.apache.hadoop.fs.Path(root)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val legacy = fs.exists(p) &&
+      !fs.exists(new org.apache.hadoop.fs.Path(p, "_txlog")) &&
+      fs.listStatus(p).exists(_.getPath.getName != "data")
+    if (legacy)
+      throw new IllegalStateException(
+        s"$root: pre-TxLog accepted/ layout; re-curate into a fresh state dir")
+    root
+  }
+
   def main(args: Array[String]): Unit = {
     var scrubPii = false
     var threshold = 0.8
@@ -104,7 +129,6 @@ object RunIntake {
     var span: Option[Int] = None
     var lmModelPath: Option[String] = None
     var lmBand: Option[(Long, Long)] = None
-    var txSink = false
     var txBatchId: Option[Long] = None
     val positional = scala.collection.mutable.Buffer[String]()
     var i = 0
@@ -129,7 +153,6 @@ object RunIntake {
             "--lm-band needs lo:hi (mean nll micro-nats)")
           val Array(lo, hi) = args(i + 1).split(":", 2)
           lmBand = Some((lo.toLong, hi.toLong)); i += 1
-        case "--tx-sink" => txSink = true
         case "--batch-id" =>
           require(i + 1 < args.length, "--batch-id needs a number")
           txBatchId = Some(args(i + 1).toLong); i += 1
@@ -157,7 +180,7 @@ object RunIntake {
       span,
       lmGate = lmModelPath.map(p =>
         (spark.read.parquet(p), lmBand.get._1, lmBand.get._2)),
-      txSink = txSink, txBatchId = txBatchId)
+      txBatchId = txBatchId)
     spark.stop()
   }
 
@@ -166,8 +189,9 @@ object RunIntake {
     * growing indexes — or, when `vectors` is given (frame, idCol,
     * vecCol), through [[graft.operators.Curate.intakeStepWithSemantic]]
     * with a third growing IVF tier at `indexes/semantic/` — accepted
-    * rows append to `accepted/`, and a one-line JSON report
-    * (input/accepted counts, wall time) appends to `runs.jsonl`.
+    * rows commit to `accepted/` (idempotently under `txBatchId`), and
+    * a one-line JSON report (input/accepted counts, wall time)
+    * appends to `runs.jsonl`.
     * Returns the report. */
   def run(spark: SparkSession, batch: DataFrame, stateDir: String,
       cfg: Curate.Config = Curate.Config(keep = Seq("source")),
@@ -175,7 +199,6 @@ object RunIntake {
       vectors: Option[(DataFrame, String, String)] = None,
       span: Option[Int] = None,
       lmGate: Option[(DataFrame, Long, Long)] = None,
-      txSink: Boolean = false,
       txBatchId: Option[Long] = None)
       : Seq[(String, Long)] = {
     require(vectors.isEmpty || span.isEmpty,
@@ -191,6 +214,8 @@ object RunIntake {
     graft.operators.Lease.withLease(
       spark.sparkContext.hadoopConfiguration, stateDir,
       graft.operators.Lease.defaultOwner()) { _ =>
+    // resolved first: an older-layout sink fails before any state moves
+    val sinkRoot = acceptedRoot(spark, stateDir)
     // SCHEMA GATE: the first run PINS the batch schema (schema.json in
     // the stateDir); every later batch must match it exactly — a
     // renamed/retyped/dropped upstream column fails HERE with a diff,
@@ -247,36 +272,22 @@ object RunIntake {
       // one funnel execution feeds BOTH the sink append and the profile
       // state update (the curateAndReport lesson)
       accepted.persist()
-      // the sink is a POINTERED table by default (Compaction
-      // reader-atomic layout): appends land in the current
-      // generation; RunSync's survivors-only rewrite swaps
-      // generations under readers. With --tx-sink (or when the sink
-      // is already a tx table — layout self-detect, so later runs
-      // need no flag) it is a TRANSACTIONAL table instead: commits
-      // are reader-atomic AND, with --batch-id, idempotent — a
+      // the sink is a TRANSACTIONAL table: each run is one
+      // reader-atomic commit and, with --batch-id, idempotent — a
       // crash-replayed batch lands its SINK rows at most once
       // (surfaced as sink_replayed in the report). The growing
       // side-states (profile, bpe) keep the documented replay
       // caveat: they have no single commit point with the sink, so a
       // replay still re-merges them (RunSync's dup collapse remains
       // the corpus-level answer)
-      val sinkRoot = s"$stateDir/accepted"
-      val sinkReplayed =
-        if (txSink || Compaction.isTxTable(spark, sinkRoot)) {
-          txBatchId match {
-            case Some(b) =>
-              !graft.operators.TxLog.appendIdempotent(spark, sinkRoot,
-                accepted, "intake", b, Some("doc_id"))._2
-            case None =>
-              graft.operators.TxLog.append(spark, sinkRoot, accepted,
-                Some("doc_id"))
-              false
-          }
-        } else {
-          accepted.write.mode(SaveMode.Append)
-            .parquet(Compaction.ensureAtomic(spark, sinkRoot))
+      val sinkReplayed = txBatchId match {
+        case Some(b) =>
+          !TxLog.appendIdempotent(spark, sinkRoot, accepted, "intake", b,
+            Some("doc_id"))._2
+        case None =>
+          TxLog.append(spark, sinkRoot, accepted, Some("doc_id"))
           false
-        }
+      }
       // growing per-source profile: the batch's mergeable state (x69
       // algebra, built from the funnel's OWN scores — no second
       // DocStats scan) merges into profile_state/ at O(batch) cost via
@@ -376,8 +387,7 @@ object RunIntake {
           .write.mode(SaveMode.Overwrite).parquet(tmp)
       }
       accepted.unpersist(false)
-      val nAccepted =
-        Compaction.readAnyTable(spark, s"$stateDir/accepted").count()
+      val nAccepted = TxLog.snapshot(spark, sinkRoot).count()
       val nIn = batch.count()
       val lmKept =
         if (lmGate.isDefined) Seq("lm_kept" -> gated.count()) else Nil

@@ -130,11 +130,11 @@ object RunMix {
     // carries identical columns — an arbitrary survivor is exact).
     val docs =
       if (accepted)
-        // the intake sink is a pointered (reader-atomic) table: the
-        // mix can run DURING a sync's survivors rewrite and still
-        // resolve a complete generation — this read needs no lease
-        graft.operators.Compaction.readAnyTable(spark, s"$docsDir/accepted")
-        .dropDuplicates("doc_id")
+        // the intake sink is a TxLog table: the mix can run DURING a
+        // sync's takedown and still read one complete committed
+        // version — this read needs no lease
+        graft.operators.TxLog.snapshot(spark,
+          RunIntake.acceptedRoot(spark, docsDir)).dropDuplicates("doc_id")
       else spark.read.parquet(s"$docsDir/documents.parquet")
     // default journey keeps every source whole (weight 1); pass an
     // explicit map through run() — or --targets/--target-budget for

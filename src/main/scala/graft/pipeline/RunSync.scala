@@ -1,9 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Compaction, Curate, Dedup, Snapshot}
+import graft.operators.{Curate, Dedup, Snapshot, TxLog}
 
 /** The SNAPSHOT-SYNC journey — the maintenance loop for a managed
   * corpus whose upstream RE-DELIVERS (re-crawls, license changes,
@@ -12,7 +12,7 @@ import graft.operators.{Compaction, Curate, Dedup, Snapshot}
   *
   *   diff = [[graft.operators.Snapshot.diff]] over raw-text digests
   *   removed + changed  → takedown on both growing index tiers
-  *                        + rewrite of `accepted/` (park→promote swap)
+  *                        + keyed MERGE-delete on `accepted/`
   *   added + changed    → one [[graft.operators.Curate.intakeStep]]
   *                        batch, appended to `accepted/`
   *
@@ -33,9 +33,9 @@ import graft.operators.{Compaction, Curate, Dedup, Snapshot}
   * unchanged bulk is never re-presented (that re-adjudication is a
   * re-curation, not a sync). Crash recovery = re-run the sync: the
   * deletes are idempotent, the intake probes are replay-idempotent,
-  * and the `accepted/` swap is the destroy-last
-  * [[graft.operators.Compaction.replaceTable]] (duplicate accepted
-  * rows are possible only in the crash window — the RunIntake rule).
+  * and each `accepted/` change is one [[graft.operators.TxLog]]
+  * commit (duplicate accepted rows are possible only in the crash
+  * window — the RunIntake rule).
   *
   * Usage: runMain graft.pipeline.RunSync [oldDir] [newDir] [stateDir]
   *          [--threshold T] [--scrub-pii] [--semantic]
@@ -108,6 +108,8 @@ object RunSync {
     graft.operators.Lease.withLease(
       spark.sparkContext.hadoopConfiguration, stateDir,
       graft.operators.Lease.defaultOwner()) { _ =>
+    // resolved first: an older-layout sink fails before any state moves
+    val acceptedPath = RunIntake.acceptedRoot(spark, stateDir)
     val t0 = System.nanoTime()
     def digested(snap: DataFrame) =
       snap.select(col(idCol), md5(col(textCol)).as("digest"))
@@ -149,40 +151,17 @@ object RunSync {
           .rowsDeleted
       case _ => 0L
     }
-    val acceptedPath = s"$stateDir/accepted"
-    val txAccepted = exists(acceptedPath) &&
-      Compaction.isTxTable(spark, acceptedPath)
-    if (txAccepted) {
-      // TRANSACTIONAL sink (RunIntake --tx-sink): the takedown is a
-      // keyed MERGE-delete (r13) — only the data dirs whose manifest
-      // stats admit the churn ids are rewritten, so a narrow takedown
-      // against a large clustered sink costs its touched dirs, not a
-      // whole-table rewrite (the pre-r13 form; Scale10 tx_merge: table
-      // size is not a term). CDC-visible as delete-of-touched +
-      // re-insert of survivors. Zero churn commits nothing.
-      if (nRemoved + nChanged > 0)
-        graft.operators.TxLog.mergeDelete(spark, acceptedPath, goneIds,
-          idCol)
-    } else if (exists(acceptedPath)) {
-      // survivors-only rewrite under the READER-ATOMIC pointered swap
-      // (VERDICT r9 item 5): the anti-join against the churn ids
-      // writes a complete NEXT GENERATION while the current one stays
-      // live, then the `_current` pointer flips atomically — a reader
-      // at any instant (RunMix --accepted needs no lease) resolves to
-      // exactly the old or the new table, never the missing-table
-      // window the two-rename swap had. ensureAtomic migrates a
-      // pre-pointer accepted/ in place (quiesced: we hold the lease)
-      val liveDir = Compaction.ensureAtomic(spark, acceptedPath)
-      Compaction.replaceTableAtomic(spark, acceptedPath) { next =>
-        spark.read.parquet(liveDir)
-          .join(goneIds, Seq(idCol), "left_anti")
-          .write.mode(SaveMode.Overwrite).parquet(next)
-      }
-    }
+    // the takedown is a keyed MERGE-delete (r13): only the data dirs
+    // whose manifest stats admit the churn ids are rewritten, so a
+    // narrow takedown against a large clustered sink costs its touched
+    // dirs, not a whole-table rewrite (Scale10 tx_merge: table size is
+    // not a term). CDC-visible as delete-of-touched + re-insert of
+    // survivors. Zero churn commits nothing.
+    val sinkExists = exists(s"$acceptedPath/_txlog")
+    if (sinkExists && nRemoved + nChanged > 0)
+      TxLog.mergeDelete(spark, acceptedPath, goneIds, idCol)
     val acceptedAfterTakedown =
-      if (exists(acceptedPath))
-        Compaction.readAnyTable(spark, acceptedPath).count()
-      else 0L
+      if (sinkExists) TxLog.snapshot(spark, acceptedPath).count() else 0L
 
     // 2. re-intake the arriving side of the churn as ONE batch
     val batch = newSnap.join(
@@ -197,15 +176,11 @@ object RunSync {
         Curate.intakeStep(spark, batch, idCol, textCol,
           exactPath, fuzzyPath, cfg, eval)
     }
-    if (txAccepted)
-      graft.operators.TxLog.append(spark, acceptedPath, accepted,
-        Some(idCol))
-    else accepted.write.mode(SaveMode.Append)
-      .parquet(Compaction.ensureAtomic(spark, acceptedPath))
+    TxLog.append(spark, acceptedPath, accepted, Some(idCol))
     diff.unpersist()
     // count from the read-back (the RunCurate one-execution lesson);
     // the per-run admission count is the delta over the takedown floor
-    val acceptedTotal = Compaction.readAnyTable(spark, acceptedPath).count()
+    val acceptedTotal = TxLog.snapshot(spark, acceptedPath).count()
     val nNewAccepted = acceptedTotal - acceptedAfterTakedown
     val report = Seq(
       "removed" -> nRemoved, "changed" -> nChanged, "added" -> nAdded,

@@ -38,18 +38,8 @@ object TxStream {
     * `(keyCol, <table columns...>, __del)` — the key's latest row in
     * the window, `__del` true when its final state is deleted. */
   def reconciledDelta(spark: SparkSession, root: String, version: Long,
-      keyCol: String): DataFrame = {
-    val delta = TxLog.changes(spark, root, version - 1, version)
-    val valueCols = delta.columns
-      .filterNot(c => c == keyCol || c.startsWith("__")).toSeq
-    delta.groupBy(keyCol)
-      .agg(max(struct((col("__version") +:
-        (col("__change") === "insert").cast("int").as("__ins") +:
-        valueCols.map(col)): _*)).as("__m"))
-      .select(col(keyCol) +:
-        valueCols.map(c => col(s"__m.$c").as(c)) :+
-        (col("__m.__ins") === 0).as("__del"): _*)
-  }
+      keyCol: String): DataFrame =
+    reconcile(TxLog.changes(spark, root, version - 1, version), keyCol)
 
   /** The replay START version for `(dstRoot, appId)`: the replica's
     * own admitted `(appId, sourceVersion)` tokens ARE the cursor —
@@ -80,10 +70,10 @@ object TxStream {
     * table columns + `__version`/`__change`) into one MERGE-ready
     * frame — latest version wins per key; within a version insert
     * beats delete (a rewrite's delete-all + re-insert collapses to an
-    * upsert). The multi-version form of [[reconciledDelta]]'s
-    * algebra: collapsing a whole window into one keyed merge lands
-    * the same final state as applying its versions in order, because
-    * the reconciliation picks exactly the row the last version left
+    * upsert). [[reconciledDelta]] is its one-version window.
+    * Collapsing a whole window into one keyed merge lands the same
+    * final state as applying its versions in order, because the
+    * reconciliation picks exactly the row the last version left
     * behind. */
   def reconcile(delta: DataFrame, keyCol: String): DataFrame = {
     val valueCols = delta.columns

@@ -198,37 +198,34 @@ class CurateSpec extends SparkSpec {
     audit.unpersist()
   }
 
-  test("tx sink: intake sequential == pointered content; replayed batch " +
-      "lands at most once; RunSync takedown is a pruned MERGE-delete") {
-    import org.apache.spark.sql.functions.{col, concat, lit}
+  test("tx sink: intake sequential == one-shot curated corpus; replayed " +
+      "batch lands at most once; RunSync takedown is a pruned MERGE-delete") {
+    import org.apache.spark.sql.functions.col
     val docs = Tables.documents(spark, sf("sf0.001"))
     val cfg = Curate.Config(langs = Seq("en", "und"),
       jaccardThreshold = 0.5, keep = Seq("source"))
     val txState = java.nio.file.Files
       .createTempDirectory("graft_tx_intake").toString
-    val plainState = java.nio.file.Files
-      .createTempDirectory("graft_plain_intake").toString
-    val b1 = docs.where(col("doc_id") % 2 === 0)
-    val b2 = docs.where(col("doc_id") % 2 === 1)
-    // tx sink: first run creates the layout; later runs self-detect
+    // id order == arrival order: the sequential == one-shot precondition
+    val b1 = docs.where(col("doc_id") < 250)
+    val b2 = docs.where(col("doc_id") >= 250)
     graft.pipeline.RunIntake.run(spark, b1, txState, cfg,
-      txSink = true, txBatchId = Some(1L))
+      txBatchId = Some(1L))
     graft.pipeline.RunIntake.run(spark, b2, txState, cfg,
       txBatchId = Some(2L))
-    // same batches through the default pointered sink
-    graft.pipeline.RunIntake.run(spark, b1, plainState, cfg)
-    graft.pipeline.RunIntake.run(spark, b2, plainState, cfg)
-    def rows(root: String) = graft.operators.Compaction
-      .readAnyTable(spark, root).select("doc_id", "text")
+    def rows(root: String) = graft.operators.TxLog
+      .snapshot(spark, root).select("doc_id", "text")
       .as[(Long, String)].collect().sorted.toSeq
-    assert(rows(s"$txState/accepted") === rows(s"$plainState/accepted"),
-      "tx and pointered sinks must carry identical accepted rows")
+    val oneShot = Curate.curate(docs, "doc_id", "text", cfg)
+      .select("doc_id", "text").as[(Long, String)].collect().sorted.toSeq
+    assert(rows(s"$txState/accepted") === oneShot,
+      "two intake runs must accumulate the one-shot curated corpus")
     // a crash-replay of batch 2: the SINK gains nothing, and the
-    // report says so — the caveat the pointered sink documents away
+    // report says so
     val rep = graft.pipeline.RunIntake.run(spark, b2, txState, cfg,
       txBatchId = Some(2L)).toMap
     assert(rep("sink_replayed") === 1L)
-    assert(rows(s"$txState/accepted") === rows(s"$plainState/accepted"),
+    assert(rows(s"$txState/accepted") === oneShot,
       "a replayed batch must not land sink rows")
     assert(graft.operators.TxLog.latestVersion(spark,
       s"$txState/accepted") === 2)
@@ -238,14 +235,49 @@ class CurateSpec extends SparkSpec {
     val snapAll = docs
     val snapB = docs.where(col("doc_id") =!= gone)
     graft.pipeline.RunSync.run(spark, snapAll, snapB, txState, cfg)
-    val after = graft.operators.Compaction
-      .readAnyTable(spark, s"$txState/accepted")
+    val after = graft.operators.TxLog
+      .snapshot(spark, s"$txState/accepted")
     assert(after.where(col("doc_id") === gone).count() === 0,
       "the removed doc must leave the tx sink")
     // the merge is in the commit history (reader-atomic, CDC-visible)
     val hist = graft.operators.TxLog.history(spark, s"$txState/accepted")
       .select("action").as[String].collect()
     assert(hist.count(_ == "merge") === 1, hist.mkString(","))
+  }
+
+  test("an accepted/ sink in a pre-TxLog layout fails loud and is left untouched") {
+    val docs = Seq((1L, good, "s1")).toDF("doc_id", "text", "source")
+    def legacyState(name: String)(write: String => Unit): String = {
+      val state = java.nio.file.Files.createTempDirectory(name).toString
+      write(s"$state/accepted")
+      state
+    }
+    // a `_current` pointer naming a hand-written gen-1, and plain parquet
+    val pointered = legacyState("graft_legacy_ptr") { root =>
+      docs.write.parquet(s"$root/gen-1")
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(root, "_current"), "gen-1")
+    }
+    val plain = legacyState("graft_legacy_plain")(docs.write.parquet(_))
+    for (state <- Seq(pointered, plain)) {
+      val root = s"$state/accepted"
+      val journeys = Seq(
+        () => graft.pipeline.RunIntake.run(spark, docs, state),
+        () => graft.pipeline.RunSync.run(spark, docs, docs, state),
+        // what RunMix --accepted resolves before it reads
+        () => graft.pipeline.RunIntake.acceptedRoot(spark, state))
+      journeys.foreach { run =>
+        val e = intercept[IllegalStateException](run())
+        assert(e.getMessage.contains(root) && e.getMessage.contains(
+          "pre-TxLog accepted/ layout; re-curate into a fresh state dir"),
+          e.getMessage)
+      }
+      assert(!java.nio.file.Files.exists(
+        java.nio.file.Paths.get(root, "_txlog")),
+        "a refused legacy sink must not gain a commit log")
+      assert(spark.read.parquet(
+        if (state == pointered) s"$root/gen-1" else root).count() === 1)
+    }
   }
 
   test("RunSync: snapshot churn applies forward — takedown frees content, changed docs re-enter") {
@@ -258,7 +290,7 @@ class CurateSpec extends SparkSpec {
     // snapshot A: ids ≡6 (mod 10) not yet delivered
     val snapA = docs.where(col("doc_id") % 10 =!= 6)
     graft.pipeline.RunIntake.run(spark, snapA, state, cfg)
-    val acceptedA = graft.operators.Compaction.readData(spark, s"$state/accepted").cache()
+    val acceptedA = graft.operators.TxLog.snapshot(spark, s"$state/accepted").cache()
     // pick the churn from docs that actually got ACCEPTED, so the
     // takedown paths are exercised (a filtered-out doc's removal
     // would be vacuous): the first accepted doc leaves, the second is
@@ -276,7 +308,7 @@ class CurateSpec extends SparkSpec {
     assert(rep("added") == docs.where(col("doc_id") % 10 === 6).count())
     assert(rep("deleted_exact") >= 1L,
       "the removed/changed docs were indexed — the exact tier must shed rows")
-    val acceptedB = graft.operators.Compaction.readData(spark, s"$state/accepted").cache()
+    val acceptedB = graft.operators.TxLog.snapshot(spark, s"$state/accepted").cache()
     // removed + changed-old rows are gone from accepted/
     assert(acceptedB.where(col("doc_id") === removedDonor).count() == 0,
       "removed docs must leave accepted/")
@@ -294,7 +326,7 @@ class CurateSpec extends SparkSpec {
     val totalBefore = acceptedB.count()
     val rep2 = graft.pipeline.RunIntake.run(spark, followUp, state, cfg)
       .toMap
-    val acceptedC = graft.operators.Compaction.readData(spark, s"$state/accepted")
+    val acceptedC = graft.operators.TxLog.snapshot(spark, s"$state/accepted")
     assert(acceptedC.where(col("doc_id") === removedDonor + 100000L)
       .count() == 1, "a removed doc's content must be admissible again")
     assert(acceptedC.where(col("doc_id") === survivorDonor + 100000L)
@@ -319,7 +351,7 @@ class CurateSpec extends SparkSpec {
     val baseVecs = ids.map(id => (id, vec(id))).toDF("vec_id", "embedding")
     graft.pipeline.RunIntake.run(spark, docs, state, cfg,
       vectors = Some((baseVecs, "vec_id", "embedding")))
-    val acceptedA = graft.operators.Compaction.readData(spark, s"$state/accepted")
+    val acceptedA = graft.operators.TxLog.snapshot(spark, s"$state/accepted")
     val Seq(removedDonor, keptDonor) = acceptedA.orderBy("doc_id")
       .limit(2).select("doc_id").as[Long].collect().toSeq
     // snapshot B: the donor leaves; two text-novel docs arrive — one
@@ -344,7 +376,7 @@ class CurateSpec extends SparkSpec {
     assert(rep("removed") == 1 && rep("added") == 2)
     assert(rep("deleted_semantic") >= 1L,
       "the removed doc's vector must leave the semantic tier")
-    val acceptedB = graft.operators.Compaction.readData(spark, s"$state/accepted")
+    val acceptedB = graft.operators.TxLog.snapshot(spark, s"$state/accepted")
     assert(acceptedB.where(col("doc_id") === n1).count() == 1,
       "a removed doc's vector slot must be admissible again")
     assert(acceptedB.where(col("doc_id") === n2).count() == 0,
@@ -457,7 +489,7 @@ class CurateSpec extends SparkSpec {
       docs.where(col("doc_id") < 250), state, cfg, span = Some(5))
     graft.pipeline.RunIntake.run(spark,
       docs.where(col("doc_id") >= 250), state, cfg, span = Some(5))
-    val accepted = graft.operators.Compaction.readData(spark, s"$state/accepted")
+    val accepted = graft.operators.TxLog.snapshot(spark, s"$state/accepted")
       .collect().map(_.toString).sorted.toSeq
     val oneShotText = Curate.curate(docs, "doc_id", "text", cfg)
     val expected = graft.operators.Dedup.stripDuplicateSpans(
@@ -490,7 +522,7 @@ class CurateSpec extends SparkSpec {
       docs.where(col("doc_id") < 250), state, cfg)
     val rep2 = graft.pipeline.RunIntake.run(spark,
       docs.where(col("doc_id") >= 250), state, cfg).toMap
-    val accepted = graft.operators.Compaction.readData(spark, s"$state/accepted")
+    val accepted = graft.operators.TxLog.snapshot(spark, s"$state/accepted")
     val oneShot = Curate.curate(docs, "doc_id", "text", cfg)
     assert(accepted.count() == oneShot.count() &&
       accepted.exceptAll(oneShot).count() == 0 &&
@@ -562,18 +594,18 @@ class CurateSpec extends SparkSpec {
     assert(java.nio.file.Files.exists(
       java.nio.file.Paths.get(state, "schema.json")))
     // renamed column -> fail fast with the diff, nothing mutated
-    val before = graft.operators.Compaction.readData(spark, s"$state/accepted").count()
+    val before = graft.operators.TxLog.snapshot(spark, s"$state/accepted").count()
     val drifted = docs.where(col("doc_id") >= 100 && col("doc_id") < 150)
       .withColumnRenamed("source", "origin")
     val e = intercept[IllegalArgumentException](
       graft.pipeline.RunIntake.run(spark, drifted, state, cfg))
     assert(e.getMessage.contains("schema gate"))
-    assert(graft.operators.Compaction.readData(spark, s"$state/accepted").count() == before,
+    assert(graft.operators.TxLog.snapshot(spark, s"$state/accepted").count() == before,
       "a gated-out batch must leave the sink untouched")
     // a conforming batch still flows
     graft.pipeline.RunIntake.run(spark,
       docs.where(col("doc_id") >= 100 && col("doc_id") < 150), state, cfg)
-    assert(graft.operators.Compaction.readData(spark, s"$state/accepted").count() >= before)
+    assert(graft.operators.TxLog.snapshot(spark, s"$state/accepted").count() >= before)
   }
 
   test("RunIntake --lm-model: frozen-model fluency gate keeps sequential == one-shot on the gated corpus") {
@@ -605,7 +637,7 @@ class CurateSpec extends SparkSpec {
     graft.pipeline.RunIntake.run(spark,
       docs.where(col("doc_id") >= 250), state, cfg, lmGate = gate)
     assert(r1("lm_kept") < r1("input"), s"band must cut something: $r1")
-    val accepted = graft.operators.Compaction.readData(spark, s"$state/accepted")
+    val accepted = graft.operators.TxLog.snapshot(spark, s"$state/accepted")
     val gatedCorpus = docs.join(
       scored.where(col("mean_nll_unats").between(lo, hi)).select("doc_id"),
       Seq("doc_id"), "left_semi")

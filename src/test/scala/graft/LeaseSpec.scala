@@ -129,7 +129,7 @@ class LeaseSpec extends SparkSpec {
     // is an exact dup of batch1's doc 1 and is rejected by the probe
     graft.pipeline.RunIntake.run(spark, batch1, stateDir)
     graft.pipeline.RunIntake.run(spark, batch2, stateDir)
-    val accepted = graft.operators.Compaction.readData(spark, s"$stateDir/accepted")
+    val accepted = graft.operators.TxLog.snapshot(spark, s"$stateDir/accepted")
       .select("doc_id").as[Long].collect().sorted
     assert(accepted.toSeq === Seq(1L, 2L, 4L))
     // the lease file does not linger after the journeys finish
@@ -160,8 +160,67 @@ class LeaseSpec extends SparkSpec {
     held.release()
     graft.pipeline.RunSync.run(spark, snap1, snap2, stateDir)
     // snap2 = {1 unchanged, 2 removed, 3 added} — the sync lands there
-    val ids = graft.operators.Compaction.readData(spark, s"$stateDir/accepted")
+    val ids = graft.operators.TxLog.snapshot(spark, s"$stateDir/accepted")
       .select("doc_id").as[Long].collect().sorted
     assert(ids.toSeq === Seq(1L, 3L))
+  }
+
+  test("a lease-free reader of the tx sink sees only committed versions while intakes and a sync land") {
+    val stateDir = tmpDir("graft_lease_reader")
+    val root = s"$stateDir/accepted"
+    val texts = Seq(
+      "the quick brown fox jumps over the lazy dog and runs away",
+      "a small boat sails on the wide river while the sun sets slowly",
+      "many people walk through the old town and look at the bright lights",
+      "the tall trees stand near the quiet lake and the wind blows",
+      "children play in the green park while their parents watch from a bench",
+      "an old clock on the wall ticks slowly through the long night hours",
+      "fresh bread from the corner bakery fills the morning street with warmth")
+    val all = texts.zipWithIndex.map { case (t, i) => (i + 1L, t, "s") }
+      .toDF("doc_id", "text", "source")
+    def ids(lo: Long, hi: Long) =
+      all.where(s"doc_id >= $lo and doc_id <= $hi")
+    graft.pipeline.RunIntake.run(spark, ids(1, 2), stateDir)
+    val bad = new java.util.concurrent.atomic.AtomicReference[String](null)
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val reads = new java.util.concurrent.atomic.AtomicInteger(0)
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
+    val reader = new Thread(() => {
+      while (!stop.get()) {
+        try {
+          seen.add(graft.operators.TxLog.snapshot(spark, root).count())
+          reads.incrementAndGet()
+        } catch {
+          case e: Exception =>
+            bad.compareAndSet(null, s"read failed: ${e.getMessage}")
+        }
+      }
+    })
+    reader.start()
+    // each journey lands under the running reader, PACED: one read
+    // completes between writes, so reads overlap every commit window
+    def paced(journey: => Unit): Unit = {
+      journey
+      val before = reads.get()
+      val t0 = System.nanoTime()
+      while (reads.get() == before && bad.get() == null &&
+          (System.nanoTime() - t0) < 20e9) Thread.sleep(5)
+    }
+    paced(graft.pipeline.RunIntake.run(spark, ids(3, 4), stateDir))
+    paced(graft.pipeline.RunIntake.run(spark, ids(5, 6), stateDir))
+    // the sync's takedown is a MERGE-delete commit; doc 7 arrives
+    paced(graft.pipeline.RunSync.run(spark, ids(1, 6),
+      all.where("doc_id <> 2"), stateDir))
+    stop.set(true); reader.join(30000)
+    assert(bad.get() === null, s"reader observed a broken table: ${bad.get()}")
+    assert(reads.get() > 0, "the reader thread must actually have read")
+    val committed = (1L to graft.operators.TxLog.latestVersion(spark, root))
+      .map(v => graft.operators.TxLog.snapshot(spark, root, Some(v)).count())
+      .toSet
+    assert(committed.contains(5L) && graft.operators.TxLog.history(spark, root)
+      .where("action = 'merge'").count() === 1, committed.toString)
+    import scala.jdk.CollectionConverters._
+    assert(seen.asScala.subsetOf(committed),
+      s"observed counts ${seen.asScala} outside the committed ones $committed")
   }
 }

@@ -158,7 +158,7 @@ class MixSpec extends SparkSpec {
       docs.where(col("doc_id") >= 250), state, cfg)
     // the --accepted path exactly as main wires it: sink read-back,
     // replay-dup collapse, pre-scored handoff
-    val sink = graft.operators.Compaction.readData(spark, s"$state/accepted").dropDuplicates("doc_id")
+    val sink = graft.operators.TxLog.snapshot(spark, s"$state/accepted").dropDuplicates("doc_id")
     val outA = tmp("acc_mix"); val outB = tmp("one_mix")
     RunMix.run(spark, sink, outA, epoch = 0, budget = 128, preScored = true)
     val oneShot = graft.operators.Curate.curate(docs, "doc_id", "text", cfg)

@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 
 /** The transactional commit-log table ([[TxLog]]): multi-writer
-  * commits over plain parquet — the piece the Lease + `_current`
-  * pointer story deliberately stopped short of. Pins the commit
+  * commits over plain parquet — the piece the single-writer Lease
+  * deliberately stops short of. Pins the commit
   * protocol (atomic claim, exactly-once versions), snapshot
   * isolation, time travel, CDC, rewrite validation (appends survive,
   * input-theft aborts), checkpoint folding, stats pruning, and vacuum
@@ -375,7 +375,7 @@ class TxLogSpec extends SparkSpec {
     docs(900, 905).write.parquet(s"$root/data/orphan-crashed")
     // dry-run (aged): the unreachable dir + the orphan are REPORTED,
     // nothing deleted, and the generic orphan rules never fire inside
-    // the tx leaf (no 'orphan-generation'/'compaction-candidate' rows)
+    // the tx leaf (no 'compaction-candidate' rows)
     val dry = graft.pipeline.RunGc.run(spark, lake, ageMinutes = 0)
     val txDry = dry.filter(_.kind == "tx-unreachable-data")
     assert(txDry.size === 2 &&
