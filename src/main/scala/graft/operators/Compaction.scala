@@ -178,10 +178,6 @@ object Compaction {
     (before, partFileCounts(spark, path).values.sum)
   }
 
-  /** Compact a [[Dedup.buildExactIndex]] layout (digests table). */
-  def compactExactIndex(spark: SparkSession, path: String): (Int, Int) =
-    compactTable(spark, s"$path/digests", "__shard")
-
   /** Compact a [[Dedup.buildSpanIndex]] layout (grams table; `meta/`
     * lives beside the table and is untouched by the swap). */
   def compactSpanIndex(spark: SparkSession, path: String): (Int, Int) =

@@ -465,21 +465,6 @@ object Dedup {
 
   // -------------------------------------------------------------- minhash
 
-  /** One (id, shingle-hash) row per DISTINCT word n-gram, built
-    * ARRAY-SIDE: tokens stay an array column, each token is hashed to
-    * int64 once, and a shingle hash combines the n consecutive token
-    * hashes — all per-document map work, NO window and therefore no
-    * shuffle+sort of token rows (the previous lead-window shape
-    * shuffled every token; this shape shuffles nothing until the
-    * signature aggregate). Shingle strings are never materialized.
-    * Documents shorter than n tokens contribute their single partial
-    * shingle with per-slot salts (the reference fuzzy-dedup semantics:
-    * a short doc is one shingle of all its tokens). */
-  def shingleHashRows(df: DataFrame, idCol: String,
-      textCol: String, shingleN: Int): DataFrame =
-    shingleHashArrays(df, idCol, textCol, shingleN)
-      .select(col("id"), explode(col("hs")).as("s"))
-
   /** The DISTINCT shingle-hash set per document as an array column
     * `(id, hs)` — ONE native expression per document
     * ([[graft.functions.ShingleHashes]]: tokenize, token md5-60,
@@ -495,21 +480,13 @@ object Dedup {
         graft.functions.ShingleHashes.column(col("__text"), shingleN).as("hs"))
       .where(size(col("hs")) > 0)
 
-  /** MinHash signature + verification set from shingle-hash ROWS: one
-    * `collect_set` hash-aggregate rebuilds the per-document set, then
-    * the whole k-slot signature is ONE codegen'd pass over it
-    * ([[graft.functions.MinHashSig]] — the overflow-free mod-2^31-1
-    * affine family, externally replayable).
-    * Output: (id, hs: array<long>, sig: array<long>[k]). */
-  def minHashBase(rows: DataFrame, k: Int): DataFrame =
-    rows.groupBy("id").agg(collect_set(col("s")).as("hs"))
-      .select(col("id"), col("hs"),
-        graft.functions.MinHashSig.column(col("hs"), k).as("sig"))
-
-  /** [[minHashBase]] from per-document shingle ARRAYS — map-only (no
-    * shuffle at all between tokenize and banding). The signature is a
-    * single native expression, not k `array_min(transform(...))`
-    * folds: HOFs run interpreted (CodegenFallback), so the fold form
+  /** MinHash signature + verification set from per-document shingle
+    * ARRAYS — map-only (no shuffle at all between tokenize and
+    * banding); output `(id, hs: array<long>, sig: array<long>[k])`,
+    * the overflow-free mod-2^31-1 affine family, externally
+    * replayable. The signature is a single native expression, not k
+    * `array_min(transform(...))` folds: HOFs run interpreted
+    * (CodegenFallback), so the fold form
     * cost k × |hs| boxed lambda frames per document and a k-wide
     * projection for janino to compile; [[graft.functions.MinHashSig]]
     * is one tight loop inside whole-stage codegen. */
@@ -551,7 +528,7 @@ object Dedup {
       minHashBaseFromArrays(shingleHashArrays(df, idCol, textCol, shingleN), k),
       k, bands, threshold, maxBucketSize, checkpointBase = checkpointBase)
 
-  /** Pair generation from a precomputed [[minHashBase]]. The base
+  /** Pair generation from a precomputed [[minHashBaseFromArrays]]. The base
     * feeds FOUR plan branches (both sides of the band self-join, both
     * verification lookups); AQE's shuffle-stage reuse dedupes the
     * identical ones at runtime. Measured guidance (sf0.1, local[32],

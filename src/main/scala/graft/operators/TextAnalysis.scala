@@ -219,7 +219,6 @@ object TextAnalysis {
     * place (the column-algebra fold would materialize a one-char-string
     * array per row and run interpreted). Overflow-free mod-p arithmetic,
     * replayable by external oracles. */
-  val rollingHashMod: Long = graft.functions.PolyHash.Mod
   def rollingHash(c: Column): Column =
     org.apache.spark.sql.graft.ColumnBridge.column(
       graft.functions.PolyHash(

@@ -1736,23 +1736,43 @@ object TxLog {
       statsCol: Option[String] = None, conflictRetries: Int = 0)
       (transform: DataFrame => DataFrame): Long =
     withConflictRetry(conflictRetries) {
-      val st0 = foldLog(spark, root, None)
-      val (v0, live0, dvs0) = (st0.version, st0.files, st0.dvs)
-      require(live0.nonEmpty, s"rewrite: $root has no live data at v$v0")
-      val pin = pinnedSchemaAt(spark, root, v0)
-      val snap = readMasked(spark, root, live0, pin, dvs0, st0.clones,
-        st0.evos)
-      val out = transform(snap)
-      val add = writeDataDir(spark, root, out, statsCol.toSeq,
-        st0.constraints, effectiveBloomCols(st0, out))
-      val removes = live0.map(_.dir)
-      // a rewrite REPLACES the table, so its schema becomes the new pin
-      // (the sanctioned schema-change path — Delta's overwriteSchema)
-      val bytes = renderManifest("rewrite", Seq(add), removes, statsCol,
-        Some(ddlOf(out)))
-      commit(spark, root, "rewrite", v0, bytes)(
-        replacing("rewrite", root, removes, pin))._1
+      replaceDirs(spark, root, "rewrite") { (st0, _, snap) =>
+        val out = transform(snap)
+        (Seq(writeDataDir(spark, root, out, statsCol.toSeq,
+          st0.constraints, effectiveBloomCols(st0, out))), statsCol, out)
+      }
     }
+
+  /** The one frame of every action that REPLACES dirs it read
+    * ([[rewrite]] and the optimizes): fold the head, `pick` the live
+    * dirs to replace (all of them by default; None is a no-op that
+    * returns the head version), read them masked at the pin, let
+    * `write` land their replacement — `(adds, stats column, written
+    * frame)` — and commit it as `action` removing exactly the dirs
+    * read, under the [[replacing]] rules. The written frame's schema
+    * becomes the new pin (a rewrite is the sanctioned schema-change
+    * path — Delta's overwriteSchema). Returns the committed version. */
+  private def replaceDirs(spark: SparkSession, root: String, op: String,
+      action: String = "rewrite",
+      pick: LogState => Option[Seq[AddFile]] = st => Some(st.files))
+      (write: (LogState, Seq[AddFile], DataFrame) =>
+        (Seq[AddFile], Option[String], DataFrame)): Long = {
+    val st0 = foldLog(spark, root, None)
+    pick(st0) match {
+      case None => st0.version
+      case Some(in) =>
+        require(in.nonEmpty, s"$op: $root has no live data at v${st0.version}")
+        val pin = pinnedSchemaAt(spark, root, st0.version)
+        val snap = readMasked(spark, root, in, pin, st0.dvs, st0.clones,
+          st0.evos)
+        val (adds, statsCol, out) = write(st0, in, snap)
+        val removes = in.map(_.dir)
+        val bytes = renderManifest(action, adds, removes, statsCol,
+          Some(ddlOf(out)))
+        commit(spark, root, op, st0.version, bytes)(
+          replacing(op, root, removes, pin))._1
+    }
+  }
 
   /** Keyed MERGE (upsert) — apply a change batch to the table by key:
     * a batch row REPLACES the live row with its key (or inserts if the
@@ -2489,39 +2509,14 @@ object TxLog {
       val r = df.agg(min(col(keyCol).try_cast("long")),
         max(col(keyCol).try_cast("long")), count(lit(1))).head()
       require(r.getLong(2) > 0, s"appendPartitioned: empty batch for $root")
-      val bucket =
-        if (r.isNullAt(0)) {
-          // no value span (string ids) — fixed-width hash ranges; null
-          // keys hash as the empty draw and cluster together
-          val width = math.max(1L, (HashSpace + buckets - 1) / buckets)
-          (keyHash(col(keyCol)) / width).cast("long")
-        } else {
-          val (mn, mx) = (r.getLong(0), r.getLong(1))
-          val width = math.max(1L, (mx - mn + buckets) / buckets)
-          coalesce(
-            ((col(keyCol).try_cast("long") - mn) / width).cast("long"),
-            lit(0L))
-        }
-      val rel = s"data/${java.util.UUID.randomUUID()}"
-      val specs = statSpecs(df, keyCol +: extraStats)
-      val fused = fuseBucketStats(spark, buckets, specs, bl,
-        rows = r.getLong(2))
+      // no value span (string ids): fixed-width hash ranges
+      val span =
+        if (r.isNullAt(0)) None else Some((r.getLong(0), r.getLong(1)))
       checkingConstraints {
-        val base = enforced(df, st0.constraints).withColumn("__b", bucket)
-        fused.fold(base)(_.attach(base))
-          .repartition(col("__b"))
-          .write.mode(SaveMode.ErrorIfExists)
-          .partitionBy("__b").parquet(s"$root/$rel")
+        writeBuckets(spark, root, enforced(df, st0.constraints),
+          statsFrom = df, bucketOf(col(keyCol), span, buckets), buckets,
+          statSpecs(df, keyCol +: extraStats), bl, rows = r.getLong(2))
       }
-      val stats = fused.map(_.result())
-        .getOrElse(bucketStats(df, bucket, specs, bl))
-      val fs = rawFs(spark, root)
-      fs.listStatus(new org.apache.hadoop.fs.Path(s"$root/$rel"))
-        .filter(_.isDirectory).map(_.getPath.getName)
-        .filter(_.startsWith("__b=")).sorted.toSeq.map { sub =>
-          val (n, cs, bls) = stats(sub.stripPrefix("__b=").toLong)
-          AddFile(s"$rel/$sub", n, cs, blooms = bls)
-        }
     }._1
   }
 
@@ -2671,10 +2666,9 @@ object TxLog {
   }
 
   /** Per-bucket (count, per-stat min/max) in ONE grouped aggregate —
-    * shared by [[appendPartitioned]]/[[optimizeRange]]/
-    * [[optimizeZOrder]]/[[optimizeHash]]; never a per-dir re-scan.
-    * The FALLBACK form: when [[fuseBucketStats]] is over budget this
-    * second pass re-scans the (column-pruned) source. */
+    * [[writeBuckets]]' stats when [[fuseBucketStats]] is over budget:
+    * this second pass re-scans the (column-pruned) source, never a
+    * per-dir re-scan. */
   private def bucketStats(df: DataFrame, bucket: Column,
       specs: Seq[StatSpec], bloomCols: Seq[String] = Seq.empty)
       : Map[Long, (Long, Seq[ColStat], Map[String, Array[Long]])] = {
@@ -2717,14 +2711,61 @@ object TxLog {
       }.toMap
   }
 
+  /** The fixed-width bucket of each row, for the clustered writers:
+    * with `span = Some((mn, mx))`, `buckets` equal-width ranges of
+    * `key` cast to long over [mn, mx] (null values ride in bucket 0);
+    * with None, `buckets` equal-width ranges of `key`'s portable hash
+    * ([[keyHash]]) over [0, [[HashSpace]]) (null keys hash as the
+    * empty draw and cluster together). */
+  private def bucketOf(key: Column, span: Option[(Long, Long)],
+      buckets: Long): Column = span match {
+    case Some((mn, mx)) =>
+      // ceil((mx - mn + 1) / buckets)
+      val width = math.max(1L, (mx - mn + buckets) / buckets)
+      coalesce(((key.try_cast("long") - mn) / width).cast("long"), lit(0L))
+    case None =>
+      val width = math.max(1L, (HashSpace + buckets - 1) / buckets)
+      (keyHash(key) / width).cast("long")
+  }
+
+  /** THE clustered write: `df` lands as ONE data dir with one `__b=N`
+    * sub-dir per non-empty bucket of `bucket` — one pass, one shuffle
+    * (`repartition` on the bucket, `partitionBy` write), rows sorted
+    * within each bucket by `sortKey` when given (row-group stats below
+    * the manifest) — and every sub-dir becomes its own AddFile with
+    * tight stats. The stats (`specs` and `blooms`, over `statsFrom`:
+    * the rows `df` writes) ride the write's own scan when
+    * [[fuseBucketStats]] admits `rows`, else come from ONE
+    * [[bucketStats]] grouped aggregate over `statsFrom` — never B
+    * per-dir re-scans. */
+  private def writeBuckets(spark: SparkSession, root: String,
+      df: DataFrame, statsFrom: DataFrame, bucket: Column, buckets: Long,
+      specs: Seq[StatSpec], blooms: Seq[String], rows: Long,
+      sortKey: Option[Column] = None): Seq[AddFile] = {
+    val rel = s"data/${java.util.UUID.randomUUID()}"
+    val fused = fuseBucketStats(spark, buckets, specs, blooms, rows)
+    val base = df.withColumn("__b", bucket)
+    val clustered = fused.fold(base)(_.attach(base)).repartition(col("__b"))
+    sortKey.fold(clustered)(k => clustered.sortWithinPartitions(col("__b"), k))
+      .write.mode(SaveMode.ErrorIfExists)
+      .partitionBy("__b").parquet(s"$root/$rel")
+    val stats = fused.map(_.result())
+      .getOrElse(bucketStats(statsFrom, bucket, specs, blooms))
+    rawFs(spark, root).listStatus(new org.apache.hadoop.fs.Path(s"$root/$rel"))
+      .filter(_.isDirectory).map(_.getPath.getName)
+      .filter(_.startsWith("__b=")).sorted.toSeq.map { sub =>
+        val (n, cs, bl) = stats(sub.stripPrefix("__b=").toLong)
+        AddFile(s"$rel/$sub", n, cs, blooms = bl)
+      }
+  }
+
   /** OPTIMIZE with RANGE partitioning — the maintenance rewrite that
     * RESTORES manifest-stats granularity: appends land dirs in
     * arrival order (each spanning whatever keys the batch carried)
     * and a plain [[rewrite]] collapses everything into ONE dir, so
     * either way [[snapshotRange]] eventually prunes nothing. This
     * rewrite re-clusters the snapshot into `buckets` fixed-width key
-    * ranges — ONE pass, one shuffle (`repartition` on the bucket,
-    * `partitionBy` write) — and commits every bucket as its OWN
+    * ranges ([[writeBuckets]]) and commits every bucket as its OWN
     * AddFile with tight min/max, so range reads prune again. Null
     * keys ride in bucket 0. Same optimistic validation as [[rewrite]]
     * (concurrent appends survive; input theft aborts). Returns the
@@ -2732,48 +2773,17 @@ object TxLog {
   def optimizeRange(spark: SparkSession, root: String, keyCol: String,
       buckets: Int, extraStats: Seq[String] = Seq.empty): Long = {
     require(buckets >= 1, s"optimizeRange: buckets must be >= 1, got $buckets")
-    val st0 = foldLog(spark, root, None)
-    val (v0, live0, dvs0) = (st0.version, st0.files, st0.dvs)
-    require(live0.nonEmpty, s"optimizeRange: $root has no live data at v$v0")
-    val pin = pinnedSchemaAt(spark, root, v0)
-    val snap = readMasked(spark, root, live0, pin, dvs0, st0.clones,
-      st0.evos)
-    val r = snap.agg(min(col(keyCol).try_cast("long")),
-      max(col(keyCol).try_cast("long"))).head()
-    require(!r.isNullAt(0),
-      s"optimizeRange: $keyCol has no non-null values in $root")
-    val (mn, mx) = (r.getLong(0), r.getLong(1))
-    val width = math.max(1L, (mx - mn + buckets) / buckets) // ceil((mx-mn+1)/B)
-    val bucket = coalesce(
-      ((col(keyCol).try_cast("long") - mn) / width).cast("long"), lit(0L))
-    val rel = s"data/${java.util.UUID.randomUUID()}"
-    // one AddFile per nonempty bucket — stats fused into the write's
-    // own scan when within budget (one source pass total), else from
-    // ONE grouped aggregate over the snapshot (identical rows to what
-    // each bucket dir just received), never B per-dir re-scans
-    val specsR = statSpecs(snap, keyCol +: extraStats)
-    val bloomsR = effectiveBloomCols(st0, snap)
-    val fused = fuseBucketStats(spark, buckets, specsR, bloomsR,
-      rows = live0.map(_.rows).sum)
-    val baseR = snap.withColumn("__b", bucket)
-    fused.fold(baseR)(_.attach(baseR))
-      .repartition(col("__b"))
-      .write.mode(SaveMode.ErrorIfExists)
-      .partitionBy("__b").parquet(s"$root/$rel")
-    val stats = fused.map(_.result())
-      .getOrElse(bucketStats(snap, bucket, specsR, bloomsR))
-    val fs = rawFs(spark, root)
-    val adds = fs.listStatus(new org.apache.hadoop.fs.Path(s"$root/$rel"))
-      .filter(_.isDirectory).map(_.getPath.getName)
-      .filter(_.startsWith("__b=")).sorted.toSeq.map { sub =>
-        val (n, cs, bl) = stats(sub.stripPrefix("__b=").toLong)
-        AddFile(s"$rel/$sub", n, cs, blooms = bl)
-      }
-    val removes = live0.map(_.dir)
-    val bytes = renderManifest("rewrite", adds, removes, Some(keyCol),
-      Some(ddlOf(snap)))
-    commit(spark, root, "optimizeRange", v0, bytes)(
-      replacing("optimizeRange", root, removes, pin))._1
+    replaceDirs(spark, root, "optimizeRange") { (st0, in, snap) =>
+      val r = snap.agg(min(col(keyCol).try_cast("long")),
+        max(col(keyCol).try_cast("long"))).head()
+      require(!r.isNullAt(0),
+        s"optimizeRange: $keyCol has no non-null values in $root")
+      val adds = writeBuckets(spark, root, snap, snap,
+        bucketOf(col(keyCol), Some((r.getLong(0), r.getLong(1))), buckets),
+        buckets, statSpecs(snap, keyCol +: extraStats),
+        effectiveBloomCols(st0, snap), rows = in.map(_.rows).sum)
+      (adds, Some(keyCol), snap)
+    }
   }
 
   /** OPTIMIZE with Z-ORDER clustering — the TWO-dimensional
@@ -2794,44 +2804,17 @@ object TxLog {
       yCol: String, buckets: Int): Long = {
     require(buckets >= 1,
       s"optimizeZOrder: buckets must be >= 1, got $buckets")
-    val st0 = foldLog(spark, root, None)
-    val (v0, live0, dvs0) = (st0.version, st0.files, st0.dvs)
-    require(live0.nonEmpty, s"optimizeZOrder: $root has no live data at v$v0")
-    val pin = pinnedSchemaAt(spark, root, v0)
-    val snap = readMasked(spark, root, live0, pin, dvs0, st0.clones,
-      st0.evos)
-    val zc = ZOrder.interleave16(col(xCol), col(yCol))
-    val r = snap.agg(min(zc), max(zc)).head()
-    require(!r.isNullAt(0),
-      s"optimizeZOrder: ($xCol, $yCol) has no fully non-null rows in $root")
-    val (mn, mx) = (r.getLong(0), r.getLong(1))
-    val width = math.max(1L, (mx - mn + buckets) / buckets)
-    val bucket = coalesce(((zc - mn) / width).cast("long"), lit(0L))
-    val rel = s"data/${java.util.UUID.randomUUID()}"
-    val specsZ = statSpecs(snap, Seq(xCol, yCol))
-    val bloomsZ = effectiveBloomCols(st0, snap)
-    val fused = fuseBucketStats(spark, buckets, specsZ, bloomsZ,
-      rows = live0.map(_.rows).sum)
-    val baseZ = snap.withColumn("__b", bucket)
-    fused.fold(baseZ)(_.attach(baseZ))
-      .repartition(col("__b"))
-      .sortWithinPartitions(col("__b"), zc)
-      .write.mode(SaveMode.ErrorIfExists)
-      .partitionBy("__b").parquet(s"$root/$rel")
-    val stats = fused.map(_.result())
-      .getOrElse(bucketStats(snap, bucket, specsZ, bloomsZ))
-    val fs = rawFs(spark, root)
-    val adds = fs.listStatus(new org.apache.hadoop.fs.Path(s"$root/$rel"))
-      .filter(_.isDirectory).map(_.getPath.getName)
-      .filter(_.startsWith("__b=")).sorted.toSeq.map { sub =>
-        val (n, cs, bl) = stats(sub.stripPrefix("__b=").toLong)
-        AddFile(s"$rel/$sub", n, cs, blooms = bl)
-      }
-    val removes = live0.map(_.dir)
-    val bytes = renderManifest("rewrite", adds, removes, Some(xCol),
-      Some(ddlOf(snap)))
-    commit(spark, root, "optimizeZOrder", v0, bytes)(
-      replacing("optimizeZOrder", root, removes, pin))._1
+    replaceDirs(spark, root, "optimizeZOrder") { (st0, in, snap) =>
+      val zc = ZOrder.interleave16(col(xCol), col(yCol))
+      val r = snap.agg(min(zc), max(zc)).head()
+      require(!r.isNullAt(0),
+        s"optimizeZOrder: ($xCol, $yCol) has no fully non-null rows in $root")
+      val adds = writeBuckets(spark, root, snap, snap,
+        bucketOf(zc, Some((r.getLong(0), r.getLong(1))), buckets), buckets,
+        statSpecs(snap, Seq(xCol, yCol)), effectiveBloomCols(st0, snap),
+        rows = in.map(_.rows).sum, sortKey = Some(zc))
+      (adds, Some(xCol), snap)
+    }
   }
 
   /** OPTIMIZE with HASH clustering — what makes STRING-keyed merges
@@ -2853,55 +2836,27 @@ object TxLog {
       buckets: Int, extraStats: Seq[String] = Seq.empty): Long = {
     require(buckets >= 1,
       s"optimizeHash: buckets must be >= 1, got $buckets")
-    val st0 = foldLog(spark, root, None)
-    val (v0, live0, dvs0) = (st0.version, st0.files, st0.dvs)
-    require(live0.nonEmpty, s"optimizeHash: $root has no live data at v$v0")
-    val pin = pinnedSchemaAt(spark, root, v0)
-    val snap = readMasked(spark, root, live0, pin, dvs0, st0.clones,
-      st0.evos)
-    val width = math.max(1L, (HashSpace + buckets - 1) / buckets)
-    val bucket = (keyHash(col(keyCol)) / width).cast("long")
-    val rel = s"data/${java.util.UUID.randomUUID()}"
-    // the key's HASH span is this layout's whole point — force it even
-    // for a numeric key the type gate would otherwise skip
-    val specs0 = statSpecs(snap, keyCol +: extraStats)
-    val specs =
-      if (specs0.exists(_.name == hashStatName(keyCol))) specs0
-      else StatSpec(hashStatName(keyCol), keyHash(col(keyCol)),
-        isSum = false) +: specs0
-    // Stats ride the write's own scan when within the fused budget
-    // (r18 — the second source pass disappears; at 100 TB that pass
-    // re-read the table once per OPTIMIZE). NOTE (r17 A/B, still the
-    // fallback trade): computing the fallback stats by READING BACK
-    // the just-written dirs measured flat-to-worse at sf0.1 (192-270
-    // ms vs 173 ms recompute — listing + a fresh scan job; column
-    // pruning reaches the source scan too, so table width does not
-    // change the comparison). The recompute re-scans the SOURCE dirs,
-    // which are immutable, so both forms describe the committed rows
-    // exactly.
-    val blooms = effectiveBloomCols(st0, snap)
-    val fused = fuseBucketStats(spark, buckets, specs, blooms,
-      rows = live0.map(_.rows).sum)
-    val baseH = snap.withColumn("__b", bucket)
-    fused.fold(baseH)(_.attach(baseH))
-      .repartition(col("__b"))
-      .sortWithinPartitions(col("__b"), keyHash(col(keyCol)))
-      .write.mode(SaveMode.ErrorIfExists)
-      .partitionBy("__b").parquet(s"$root/$rel")
-    val stats = fused.map(_.result())
-      .getOrElse(bucketStats(snap, bucket, specs, blooms))
-    val fs = rawFs(spark, root)
-    val adds = fs.listStatus(new org.apache.hadoop.fs.Path(s"$root/$rel"))
-      .filter(_.isDirectory).map(_.getPath.getName)
-      .filter(_.startsWith("__b=")).sorted.toSeq.map { sub =>
-        val (n, cs, bl) = stats(sub.stripPrefix("__b=").toLong)
-        AddFile(s"$rel/$sub", n, cs, blooms = bl)
-      }
-    val removes = live0.map(_.dir)
-    val bytes = renderManifest("rewrite", adds, removes, Some(keyCol),
-      Some(ddlOf(snap)))
-    commit(spark, root, "optimizeHash", v0, bytes)(
-      replacing("optimizeHash", root, removes, pin))._1
+    replaceDirs(spark, root, "optimizeHash") { (st0, in, snap) =>
+      // the key's HASH span is this layout's whole point — force it
+      // even for a numeric key the type gate would otherwise skip
+      val specs0 = statSpecs(snap, keyCol +: extraStats)
+      val specs =
+        if (specs0.exists(_.name == hashStatName(keyCol))) specs0
+        else StatSpec(hashStatName(keyCol), keyHash(col(keyCol)),
+          isSum = false) +: specs0
+      // NOTE (r17 A/B, still the fallback trade): computing the
+      // fallback stats by READING BACK the just-written dirs measured
+      // flat-to-worse at sf0.1 (192-270 ms vs 173 ms recompute —
+      // listing + a fresh scan job; column pruning reaches the source
+      // scan too, so table width does not change the comparison). The
+      // recompute re-scans the SOURCE dirs, which are immutable, so
+      // both forms describe the committed rows exactly.
+      val adds = writeBuckets(spark, root, snap, snap,
+        bucketOf(col(keyCol), None, buckets), buckets, specs,
+        effectiveBloomCols(st0, snap), rows = in.map(_.rows).sum,
+        sortKey = Some(keyHash(col(keyCol))))
+      (adds, Some(keyCol), snap)
+    }
   }
 
   /** COMPACT the small-dir tail (the published Delta OPTIMIZE
@@ -2933,63 +2888,31 @@ object TxLog {
     require(targetRows >= 1,
       s"optimizeCompact: targetRows must be >= 1, got $targetRows")
     withConflictRetry(conflictRetries) {
-      val st0 = foldLog(spark, root, None)
-      val (v0, live0, dvs0) = (st0.version, st0.files, st0.dvs)
-      val small = live0.filter(_.rows < targetRows)
-      if (small.size < 2) v0 else {
-      val pin = pinnedSchemaAt(spark, root, v0)
-      val snap = readMasked(spark, root, small, pin, dvs0, st0.clones,
-        st0.evos)
-      val keyColOpt = statsColumn(spark, root)
-        .filter(snap.columns.contains)
-      // bucket count from the PRE-mask row sum (masked rows only
-      // shrink bins); bucket expression from the key's value span,
-      // falling back to its hash span (string keys) — the same stat
-      // the table's reads prune on
-      val nOut = math.max(1L,
-        (small.map(_.rows).sum + targetRows - 1) / targetRows)
-      val bucket = keyColOpt match {
-        case Some(kc) =>
-          val r = snap.agg(min(col(kc).try_cast("long")),
-            max(col(kc).try_cast("long"))).head()
-          if (r.isNullAt(0)) {
-            val width = math.max(1L, (HashSpace + nOut - 1) / nOut)
-            (keyHash(col(kc)) / width).cast("long")
-          } else {
-            val (mn, mx) = (r.getLong(0), r.getLong(1))
-            val width = math.max(1L, (mx - mn + nOut) / nOut)
-            coalesce(((col(kc).try_cast("long") - mn) / width).cast("long"),
-              lit(0L))
-          }
-        case None => lit(0L) // stat-less table: one packed dir
-      }
-      val rel = s"data/${java.util.UUID.randomUUID()}"
-      val specsC = keyColOpt match {
-        case Some(kc) => statSpecs(snap, kc +: extraStats)
-        case None => Seq.empty[StatSpec]
-      }
-      val bloomsC = effectiveBloomCols(st0, snap)
-      val fused = fuseBucketStats(spark, nOut, specsC, bloomsC,
-        rows = small.map(_.rows).sum)
-      val baseC = snap.withColumn("__b", bucket)
-      fused.fold(baseC)(_.attach(baseC))
-        .repartition(col("__b"))
-        .write.mode(SaveMode.ErrorIfExists)
-        .partitionBy("__b").parquet(s"$root/$rel")
-      val stats = fused.map(_.result())
-        .getOrElse(bucketStats(snap, bucket, specsC, bloomsC))
-      val fs = rawFs(spark, root)
-      val adds = fs.listStatus(new org.apache.hadoop.fs.Path(s"$root/$rel"))
-        .filter(_.isDirectory).map(_.getPath.getName)
-        .filter(_.startsWith("__b=")).sorted.toSeq.map { sub =>
-          val (n, cs, bl) = stats(sub.stripPrefix("__b=").toLong)
-          AddFile(s"$rel/$sub", n, cs, blooms = bl)
+      replaceDirs(spark, root, "optimizeCompact", action = "compact",
+          pick = st => Some(st.files.filter(_.rows < targetRows))
+            .filter(_.size >= 2)) { (st0, small, snap) =>
+        val keyColOpt = statsColumn(spark, root)
+          .filter(snap.columns.contains)
+        // bucket count from the PRE-mask row sum (masked rows only
+        // shrink bins); bucket expression from the key's value span,
+        // falling back to its hash span (string keys) — the same stat
+        // the table's reads prune on
+        val rows = small.map(_.rows).sum
+        val nOut = math.max(1L, (rows + targetRows - 1) / targetRows)
+        val bucket = keyColOpt match {
+          case Some(kc) =>
+            val r = snap.agg(min(col(kc).try_cast("long")),
+              max(col(kc).try_cast("long"))).head()
+            bucketOf(col(kc),
+              if (r.isNullAt(0)) None else Some((r.getLong(0), r.getLong(1))),
+              nOut)
+          case None => lit(0L) // stat-less table: one packed dir
         }
-      val removes = small.map(_.dir)
-      val bytes = renderManifest("compact", adds, removes, keyColOpt,
-        Some(ddlOf(snap)))
-      commit(spark, root, "optimizeCompact", v0, bytes)(
-        replacing("optimizeCompact", root, removes, pin))._1
+        val specs = keyColOpt.toSeq
+          .flatMap(kc => statSpecs(snap, kc +: extraStats))
+        val adds = writeBuckets(spark, root, snap, snap, bucket, nOut,
+          specs, effectiveBloomCols(st0, snap), rows)
+        (adds, keyColOpt, snap)
       }
     }
   }
@@ -3382,10 +3305,8 @@ object TxLog {
     * resolved version — time travel to a pre-evolution version reads
     * the OLD schema, exactly what that version's readers saw. */
   def snapshot(spark: SparkSession, root: String,
-      asOf: Option[Long] = None): DataFrame = {
-    asOf.foreach(v => retentionGuard(spark, root, v, "snapshot"))
-    snapshotInner(spark, root, asOf)
-  }
+      asOf: Option[Long] = None): DataFrame =
+    prunedRead(spark, root, asOf, "snapshot")(identity)(identity)
 
   /** [[snapshot]] without the retention guard — for internal reads
     * whose safety is proved by the caller (e.g. [[changes]] reads
@@ -3393,12 +3314,39 @@ object TxLog {
     * anything removed after `horizon - 1` is referenced by an
     * in-window commit). */
   private def snapshotInner(spark: SparkSession, root: String,
-      asOf: Option[Long]): DataFrame = {
+      asOf: Option[Long]): DataFrame =
+    prunedRead(spark, root, asOf, "snapshot", guarded = false)(identity)(
+      identity)
+
+  /** THE read every snapshot-shaped reader runs: the retention guard
+    * when `asOf` is set (unless `guarded` is off), the fold at `asOf`
+    * (an empty table is an error named for `op`), `keep` over the live
+    * dirs (the manifest-level prune), then the kept dirs read masked
+    * and aligned with the right clone chain, and `finish` applied in
+    * plan (the exact predicate — pruning stays I/O-only). When `keep`
+    * keeps nothing the result is an empty frame with the table's
+    * schema: the pin when one exists, else one dir's footer-only
+    * schema — no data is scanned. */
+  private def prunedRead(spark: SparkSession, root: String,
+      asOf: Option[Long], op: String, guarded: Boolean = true)
+      (keep: Seq[AddFile] => Seq[AddFile])
+      (finish: DataFrame => DataFrame): DataFrame = {
+    if (guarded) asOf.foreach(v => retentionGuard(spark, root, v, op))
     val st = foldLog(spark, root, asOf)
-    require(st.files.nonEmpty, s"snapshot: $root is empty at v${st.version}")
-    readMasked(spark, root, st.files,
-      pinnedSchemaAt(spark, root, st.version), st.dvs,
-      cloneChain(spark, root, st, asOf), st.evos)
+    require(st.files.nonEmpty, s"$op: $root is empty at v${st.version}")
+    val kept = keep(st.files)
+    val pin = pinnedSchemaAt(spark, root, st.version)
+    lazy val clones = cloneChain(spark, root, st, asOf)
+    if (kept.isEmpty) {
+      val schema = pin
+        .map(org.apache.spark.sql.types.StructType.fromDDL)
+        .getOrElse(spark.read.parquet(
+          s"${baseFor(root, clones, st.files.head.gen)}/${st.files.head.dir}")
+          .schema)
+      spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    } else
+      finish(readMasked(spark, root, kept, pin, st.dvs, clones, st.evos))
   }
 
   /** The clone chain to resolve a fold's dirs with: a travel read
@@ -3495,53 +3443,26 @@ object TxLog {
       lo: Long, hi: Long, asOf: Option[Long] = None): DataFrame =
     snapshotRangeMulti(spark, root, Seq((keyCol, lo, hi)), asOf)
 
-  /** Multi-predicate range read: a dir is pruned when ANY predicate's
-    * recorded stat excludes it — the multi-column manifest-stats
-    * consumer ([[appendCols]]/[[appendPartitioned]]/[[optimizeRange]]
-    * `extraStats` record the stats; a z-order-style layout clusters
-    * several dims, so the manifest should prune on each). All
-    * predicates also apply in-plan (exactness regardless of stats). */
+  /** Multi-predicate PRUNED read — the manifest-stats consumer. A dir
+    * is skipped when any probe's recorded stat excludes it:
+    *  - `preds`, `[lo, hi)` ranges on long-castable columns
+    *    ([[appendCols]]/[[appendPartitioned]]/[[optimizeRange]]
+    *    `extraStats` record several; a z-order layout clusters two
+    *    dims, so the manifest prunes on each);
+    *  - `nullProbes`, columns required NULL: a dir whose recorded null
+    *    count ([[nullStatName]]) is ZERO cannot hold one (the
+    *    `graft-tx` relation routes pushed `IsNull` filters here);
+    *  - `pointProbes`, (column, value-as-string) equalities: a dir whose
+    *    [[AddFile.blooms Bloom]] for the column excludes the value —
+    *    what turns `WHERE url = '…'` on a doc_id-clustered corpus (the
+    *    takedown-by-URL shape) from a table scan into a ≤K-dir read.
+    * Dirs without the stat admit. Every probe also applies in-plan, so
+    * results are exact regardless of stats; with no probes at all this
+    * is [[snapshot]]'s read. */
   def snapshotRangeMulti(spark: SparkSession, root: String,
-      preds: Seq[(String, Long, Long)],
-      asOf: Option[Long] = None): DataFrame =
-    snapshotRangeMulti(spark, root, preds, asOf, Seq.empty)
-
-  /** [[snapshotRangeMulti]] with IS NULL probes riding alongside:
-    * `nullProbes` names columns the caller requires NULL — a dir
-    * whose recorded null count for such a column is ZERO is pruned
-    * exactly as a range-excluded dir is (the `graft-tx` relation
-    * routes pushed `IsNull` filters here, so a SQL
-    * `WHERE col IS NULL` skips null-free dirs at the manifest). All
-    * predicates also apply in-plan — pruning stays I/O-only. */
-  def snapshotRangeMulti(spark: SparkSession, root: String,
-      preds: Seq[(String, Long, Long)],
-      asOf: Option[Long], nullProbes: Seq[String]): DataFrame =
-    snapshotRangeMulti(spark, root, preds, asOf, nullProbes, Seq.empty)
-
-  /** [[snapshotRangeMulti]] with POINT probes riding alongside:
-    * `pointProbes` are (column, value-as-string) equalities — a dir
-    * whose recorded [[AddFile.blooms Bloom]] for the column provably
-    * excludes the value is pruned at the manifest, which is what
-    * turns `WHERE url = '…'` on a doc_id-clustered corpus (the
-    * takedown-by-URL shape) from a table scan into a ≤K-dir read.
-    * Dirs without a Bloom admit; every predicate re-applies in-plan —
-    * pruning stays I/O-only, results exact regardless of stats. */
-  def snapshotRangeMulti(spark: SparkSession, root: String,
-      preds: Seq[(String, Long, Long)],
-      asOf: Option[Long], nullProbes: Seq[String],
-      pointProbes: Seq[(String, String)]): DataFrame = {
-    require(preds.nonEmpty || nullProbes.nonEmpty || pointProbes.nonEmpty,
-      "snapshotRangeMulti: no predicates")
-    asOf.foreach(v => retentionGuard(spark, root, v, "snapshotRangeMulti"))
-    val st = foldLog(spark, root, asOf)
-    val (v, live, dvs) = (st.version, st.files, st.dvs)
-    require(live.nonEmpty, s"snapshotRangeMulti: $root is empty at v$v")
-    val kept = live.filter(f =>
-      preds.forall { case (c, lo, hi) => admits(f, c, lo, hi) } &&
-        nullProbes.forall(c =>
-          f.statFor(nullStatName(c)).forall(_.max > 0L)) &&
-        pointProbes.forall { case (c, s) => bloomAdmits(f, c, s) })
-    val pin = pinnedSchemaAt(spark, root, v)
+      preds: Seq[(String, Long, Long)], asOf: Option[Long] = None,
+      nullProbes: Seq[String] = Seq.empty,
+      pointProbes: Seq[(String, String)] = Seq.empty): DataFrame = {
     // hi = Long.MaxValue means unbounded above — `< MaxValue` would
     // wrongly exclude a row whose value IS the max long
     val filter = (preds.map { case (c, lo, hi) =>
@@ -3550,21 +3471,13 @@ object TxLog {
       else lower && col(c).try_cast("long") < hi } ++
       nullProbes.map(c => col(c).isNull) ++
       pointProbes.map { case (c, s) => col(c).cast("string") === lit(s) })
-      .reduce(_ && _)
-    if (kept.isEmpty) {
-      // preserve the schema without scanning data: the pin when one
-      // exists, else one dir's footer-only schema
-      val schema = pin
-        .map(org.apache.spark.sql.types.StructType.fromDDL)
-        .getOrElse(spark.read.parquet(
-          s"${baseFor(root, cloneChain(spark, root, st, asOf),
-            live.head.gen)}/${live.head.dir}")
-          .schema)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    } else readMasked(spark, root, kept, pin, dvs,
-        cloneChain(spark, root, st, asOf), st.evos)
-      .where(filter)
+      .reduceOption(_ && _)
+    prunedRead(spark, root, asOf, "snapshotRangeMulti")(_.filter(f =>
+      preds.forall { case (c, lo, hi) => admits(f, c, lo, hi) } &&
+        nullProbes.forall(c =>
+          f.statFor(nullStatName(c)).forall(_.max > 0L)) &&
+        pointProbes.forall { case (c, s) => bloomAdmits(f, c, s) }))(
+      df => filter.fold(df)(df.where))
   }
 
   /** SINGLE-VALUE POINT READ on any Bloom-statted column — the
@@ -3602,44 +3515,29 @@ object TxLog {
   def snapshotKeys(spark: SparkSession, root: String, keys: DataFrame,
       keyCol: String, asOf: Option[Long] = None,
       maxBroadcastKeys: Long = 1000000L): DataFrame = {
-    asOf.foreach(v => retentionGuard(spark, root, v, "snapshotKeys"))
-    val st = foldLog(spark, root, asOf)
-    val (v, live, dvs) = (st.version, st.files, st.dvs)
-    require(live.nonEmpty, s"snapshotKeys: $root is empty at v$v")
-    val ks = keys.select(col(keyCol)).distinct()
-    val r = ks.agg(
+    // lazy: the span aggregate runs after the guard and the fold
+    lazy val ks = keys.select(col(keyCol)).distinct()
+    lazy val r = ks.agg(
       min(col(keyCol).try_cast("long")).as("mn"),
       max(col(keyCol).try_cast("long")).as("mx"),
       count(lit(1)).as("n")).head()
-    val noKeys = r.getLong(2) == 0
-    val stringKeyed = !noKeys && r.isNullAt(0)
-    val (lo, hiEx) =
-      if (stringKeyed) (Long.MinValue, Long.MaxValue)
-      else if (noKeys) (0L, 0L) // empty span admits nothing
-      else (r.getLong(0),
-        if (r.getLong(1) == Long.MaxValue) Long.MaxValue
-        else r.getLong(1) + 1)
-    val bySpan =
-      if (noKeys) Seq.empty
-      else live.filter(f => admits(f, keyCol, lo, hiEx))
-    val kept =
+    prunedRead(spark, root, asOf, "snapshotKeys") { live =>
+      val noKeys = r.getLong(2) == 0
+      val stringKeyed = !noKeys && r.isNullAt(0)
+      val (lo, hiEx) =
+        if (stringKeyed) (Long.MinValue, Long.MaxValue)
+        else if (noKeys) (0L, 0L) // empty span admits nothing
+        else (r.getLong(0),
+          if (r.getLong(1) == Long.MaxValue) Long.MaxValue
+          else r.getLong(1) + 1)
+      val bySpan =
+        if (noKeys) Seq.empty
+        else live.filter(f => admits(f, keyCol, lo, hiEx))
       if (stringKeyed && bySpan.nonEmpty) hashAdmitted(spark, ks, keyCol,
         bySpan)
       else bySpan
-    val pin = pinnedSchemaAt(spark, root, v)
-    if (kept.isEmpty) {
-      val schema = pin
-        .map(org.apache.spark.sql.types.StructType.fromDDL)
-        .getOrElse(spark.read.parquet(
-          s"${baseFor(root, cloneChain(spark, root, st, asOf),
-            live.head.gen)}/${live.head.dir}")
-          .schema)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    } else readMasked(spark, root, kept, pin, dvs,
-        cloneChain(spark, root, st, asOf), st.evos)
-      .join(if (r.getLong(2) <= maxBroadcastKeys) broadcast(ks) else ks,
-        Seq(keyCol), "left_semi")
+    }(_.join(if (r.getLong(2) <= maxBroadcastKeys) broadcast(ks) else ks,
+      Seq(keyCol), "left_semi"))
   }
 
   /** NULL-PROBE READ — the live rows whose `keyCol` IS NULL, scanning
@@ -3649,32 +3547,14 @@ object TxLog {
     * ([[nullStatName]]) and this read skips every dir whose recorded
     * count is ZERO — the last common predicate class closed at the
     * manifest level (pre-r15 a null probe scanned the whole table).
-    * Dirs without the stat (legacy, or stats recorded on other
-    * columns) conservatively scan; the predicate also applies
-    * in-plan, so results are exact regardless of stats. Tombstone
-    * masks and schema generations apply exactly as in [[snapshot]]. */
+    * [[snapshotRangeMulti]] with one null probe: dirs without the stat
+    * (legacy, or stats recorded on other columns) conservatively
+    * scan; the predicate also applies in-plan, so results are exact
+    * regardless of stats. Tombstone masks and schema generations
+    * apply exactly as in [[snapshot]]. */
   def snapshotNulls(spark: SparkSession, root: String, keyCol: String,
-      asOf: Option[Long] = None): DataFrame = {
-    asOf.foreach(v => retentionGuard(spark, root, v, "snapshotNulls"))
-    val st = foldLog(spark, root, asOf)
-    require(st.files.nonEmpty,
-      s"snapshotNulls: $root is empty at v${st.version}")
-    val nn = nullStatName(keyCol)
-    val kept = st.files.filter(f => f.statFor(nn).forall(_.max > 0L))
-    val pin = pinnedSchemaAt(spark, root, st.version)
-    if (kept.isEmpty) {
-      val schema = pin
-        .map(org.apache.spark.sql.types.StructType.fromDDL)
-        .getOrElse(spark.read.parquet(
-          s"${baseFor(root, cloneChain(spark, root, st, asOf),
-            st.files.head.gen)}/${st.files.head.dir}")
-          .schema)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    } else readMasked(spark, root, kept, pin, st.dvs,
-        cloneChain(spark, root, st, asOf), st.evos)
-      .where(col(keyCol).isNull)
-  }
+      asOf: Option[Long] = None): DataFrame =
+    snapshotRangeMulti(spark, root, Seq.empty, asOf, Seq(keyCol))
 
   /** The skipping decision as DATA (the x122 shape): one row per live
     * dir at head with its stats FOR `keyCol` and whether a `[lo, hi)`

@@ -32,9 +32,6 @@ object Pollutants {
     Pollutant("08", "O3", "ozone", "µg-m3"),
     Pollutant("12", "NOX", "oxydes d'azote", "µg-m3"))
 
-  def byCode(ps: Seq[Pollutant]): Map[String, Pollutant] =
-    ps.map(p => p.code -> p).toMap
-
   /** Load the dimension from the reference's config shape — a YAML
     * list of flat string-valued maps:
     *

@@ -19,10 +19,11 @@ import org.apache.spark.sql.types.StructType
   *   sql("CREATE TEMP VIEW t USING `graft-tx` OPTIONS (path '…')")
   * }}}
   *
-  * Reads delegate to [[TxLog.snapshot]] — tombstone masks, mixed
+  * Reads delegate to [[TxLog.snapshotRangeMulti]] (with no pushed
+  * probe, exactly [[TxLog.snapshot]]'s read) — tombstone masks, mixed
   * schema generations, clone-chain resolution and the retention guard
   * all apply exactly as in the API — and pushed filters that bound a
-  * column to a long range route through [[TxLog.snapshotRangeMulti]],
+  * column to a long range, `IS NULL` or an equality become its probes,
   * so MANIFEST-level dir skipping happens before the parquet scan
   * exactly as it does for API readers ([[TxBounds.boundsFrom]] is the
   * translation, unit-pinned). Spark re-evaluates every filter above
@@ -286,12 +287,9 @@ private[graft] class TxRelation(val sqlContext: SQLContext, root: String,
       case EqualTo(c, v: java.lang.Long) => (c, v.toString)
       case EqualTo(c, v: java.lang.Integer) => (c, v.toString)
     }.toSeq
-    val base =
-      if (bounds.isEmpty && nullProbes.isEmpty && pointProbes.isEmpty)
-        TxLog.snapshot(spark, root, asOf)
-      else TxLog.snapshotRangeMulti(spark, root, bounds, asOf, nullProbes,
-        pointProbes)
-    base.select(requiredColumns.map(col).toSeq: _*).rdd
+    // no pushed probe reads exactly as TxLog.snapshot
+    TxLog.snapshotRangeMulti(spark, root, bounds, asOf, nullProbes,
+      pointProbes).select(requiredColumns.map(col).toSeq: _*).rdd
   }
 }
 

@@ -314,6 +314,19 @@ class TxLakeSpec extends SparkSpec {
     intercept[TxLog.TxRetentionException] {
       TxLog.snapshotRangeMulti(spark, root, Seq(("id", 0L, 1000L)), Some(2))
     }
+    // every pruned reader shares one guard; each entry point reaches it
+    intercept[TxLog.TxRetentionException] {
+      TxLog.snapshotRange(spark, root, "id", 0L, 1000L, Some(2))
+    }
+    intercept[TxLog.TxRetentionException] {
+      TxLog.snapshotPoint(spark, root, "id", 3L, Some(2))
+    }
+    intercept[TxLog.TxRetentionException] {
+      TxLog.snapshotKeys(spark, root, docs(0, 3).select("id"), "id", Some(2))
+    }
+    intercept[TxLog.TxRetentionException] {
+      TxLog.snapshotNulls(spark, root, "id", Some(2))
+    }
     // at/above the horizon: exact reads, and the gc commit itself is a
     // metadata-only CDC window (empty delta, not a crash)
     assert(TxLog.snapshot(spark, root, Some(4)).count() === 15)

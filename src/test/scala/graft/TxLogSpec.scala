@@ -1028,30 +1028,43 @@ class TxLogSpec extends SparkSpec {
     // every AddFile's (bucket dir, rows, per-column min/max) must match
     def strDocs(lo: Int, hi: Int) = (lo until hi)
       .map(i => (f"key-$i%05d", i.toLong)).toDF("k", "v")
-    def build(root: String): Unit = {
-      TxLog.appendPartitioned(spark, root, docs(0, 500), "id",
-        buckets = 4)
-      TxLog.optimizeRange(spark, root, "id", buckets = 4)
-      TxLog.optimizeHash(spark, root, "id", buckets = 8)
-      TxLog.optimizeCompact(spark, root, targetRows = 1000)
+    def fpOf(roots: Seq[String]) = roots
+      .flatMap(r => TxLog.liveFiles(spark, r)._2)
+      .map(f => (f.dir.split("/").last, f.rows,
+        f.stats.map(c => (c.col, c.min, c.max)).sortBy(_._1)))
+      .sortBy(t => (t._1, t._2))
+    def fp(root: String) = fpOf(Seq("", "_s", "_z").map(root + _))
+    // returns the main table's live set after EACH of its writers: the
+    // final compact replaces every earlier bucketed output, so `fp`
+    // alone would compare only the compact's
+    def build(root: String) = {
+      val steps = Seq[() => Long](
+        () => TxLog.appendPartitioned(spark, root, docs(0, 500), "id",
+          buckets = 4),
+        () => TxLog.optimizeRange(spark, root, "id", buckets = 4),
+        () => TxLog.optimizeHash(spark, root, "id", buckets = 8),
+        () => TxLog.optimizeCompact(spark, root, targetRows = 1000))
+        .map { write => write(); fpOf(Seq(root)) }
       // a string-keyed table exercises the hash-stat spec too
       TxLog.append(spark, root + "_s", strDocs(0, 300), Some("k"))
       TxLog.optimizeHash(spark, root + "_s", "k", buckets = 8,
         extraStats = Seq("v"))
+      // a two-long-column table exercises optimizeZOrder's two dims
+      TxLog.append(spark, root + "_z",
+        docs(0, 300).withColumn("m", col("id") % 37), Some("id"))
+      TxLog.optimizeZOrder(spark, root + "_z", "id", "m", buckets = 4)
+      steps
     }
-    def fp(root: String) = (TxLog.liveFiles(spark, root)._2 ++
-        TxLog.liveFiles(spark, root + "_s")._2)
-      .map(f => (f.dir.split("/").last, f.rows,
-        f.stats.map(c => (c.col, c.min, c.max)).sortBy(_._1)))
-      .sortBy(t => (t._1, t._2))
     val a = freshRoot("fuseda")
     val b = freshRoot("fusedb")
-    build(a)
+    val stepsA = build(a)
     spark.conf.set("spark.graft.tx.fusedBucketStats", "false")
-    try build(b)
-    finally spark.conf.unset("spark.graft.tx.fusedBucketStats")
+    val stepsB =
+      try build(b)
+      finally spark.conf.unset("spark.graft.tx.fusedBucketStats")
     assert(fp(a).nonEmpty)
     assert(fp(a) === fp(b))
+    assert(stepsA === stepsB)
     // and the rows themselves are identical either way
     assert(TxLog.snapshot(spark, a).orderBy("id").collect() ===
       TxLog.snapshot(spark, b).orderBy("id").collect())
@@ -1191,6 +1204,14 @@ class TxLogSpec extends SparkSpec {
     assert(usersOf("publishIfAbsent(") ===
       Set("publishIfAbsent", "commit", "checkpoint", "cloneTable"))
     assert(!lines.exists(_.contains("while (!publishIfAbsent")))
+    // one clustered writer: no other member partitions by bucket or
+    // fuses bucket stats
+    assert(usersOf("partitionBy(\"__b\")") === Set("writeBuckets"))
+    assert(usersOf("fuseBucketStats(") ===
+      Set("fuseBucketStats", "writeBuckets"))
+    // one pruned reader: the only other empty frame is changes'
+    // metadata-only CDC window
+    assert(usersOf("emptyRDD") === Set("prunedRead", "changes"))
   }
 }
 
