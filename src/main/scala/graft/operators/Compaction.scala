@@ -4,8 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Small-file compaction for the persisted, partition-appended index
-  * layouts ([[Dedup.buildFuzzyIndex]] + [[Dedup.appendToFuzzyIndex]],
-  * [[IvfAnn.buildIndexInt]] + [[IvfAnn.appendToIndexInt]]): every
+  * layouts ([[IndexTable]]s: [[Dedup.buildFuzzyIndex]] +
+  * [[Dedup.appendToFuzzyIndex]], [[IvfAnn.buildIndexInt]] +
+  * [[IvfAnn.appendToIndexInt]], [[Dedup.buildSpanIndex]]): every
   * append adds at least one parquet file to each shard/cell partition
   * it touches, so a long-lived growing index accumulates files whose
   * per-file overhead (footer reads, task scheduling) eventually
@@ -53,13 +54,20 @@ object Compaction {
   /** Compact one partitioned parquet table in place: one file per
     * partition dir afterwards. Returns (files before, files after). */
   def compactTable(spark: SparkSession, dir: String,
-      partitionCol: String): (Int, Int) = {
+      partitionCol: String): (Int, Int) =
+    compactWith(spark, dir, partitionCol)(_ => ())
+
+  /** [[compactTable]], running `alongside(tmp)` after the compacted
+    * copy is written and before the swap. */
+  private def compactWith(spark: SparkSession, dir: String,
+      partitionCol: String)(alongside: String => Unit): (Int, Int) = {
     val before = partFileCounts(spark, dir).values.sum
     replaceTable(spark, dir) { tmp =>
       spark.read.parquet(dir)
         .repartition(col(partitionCol))
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .partitionBy(partitionCol).parquet(tmp)
+      alongside(tmp)
     }
     (before, partFileCounts(spark, dir).values.sum)
   }
@@ -157,25 +165,19 @@ object Compaction {
     * partitioned). The persisted centroid model (`_centroids/`, an
     * underscore-hidden subdirectory the data read never sees) would be
     * destroyed with the parked `.compact.old` copy by a plain
-    * [[compactTable]] swap — so it is re-written INTO the compacted
-    * copy before the swap, keeping the layout self-describing through
-    * the whole destroy-last window. Layouts predating the persisted
-    * model (no `_centroids/`) compact as before. */
+    * [[compactTable]] swap — so it is copied INTO the compacted copy
+    * before the swap, keeping the layout self-describing through the
+    * whole destroy-last window. Layouts predating the persisted model
+    * (no `_centroids/`) compact as before. */
   def compactIvfIndex(spark: SparkSession, path: String): (Int, Int) = {
-    val centPath = new org.apache.hadoop.fs.Path(s"$path/_centroids")
-    val fs = centPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val model =
-      if (fs.exists(centPath)) Some(IvfAnn.loadCentroidsInt(spark, path))
-      else None
-    val before = partFileCounts(spark, path).values.sum
-    replaceTable(spark, path) { tmp =>
-      spark.read.parquet(path)
-        .repartition(col("__cell"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("__cell").parquet(tmp)
-      model.foreach(IvfAnn.writeCentroids(spark, _, tmp))
+    val model = s"$path/_centroids"
+    val centPath = new org.apache.hadoop.fs.Path(model)
+    val hasModel = centPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .exists(centPath)
+    compactWith(spark, path, "__cell") { tmp =>
+      if (hasModel)
+        IndexTable.writeMeta(IndexTable.readParts(spark, model), s"$tmp/_centroids")
     }
-    (before, partFileCounts(spark, path).values.sum)
   }
 
   /** Compact a [[Dedup.buildSpanIndex]] layout (grams table; `meta/`

@@ -22,7 +22,10 @@ import org.apache.spark.sql.functions._
   *    (explode -> groupBy(id).agg(min...)) — never a per-permutation
   *    re-hash of strings inside interpreted higher-order functions;
   *  - survivors are chosen with deterministic min-id rules so reruns
-  *    are idempotent.
+  *    are idempotent;
+  *  - the persisted index tiers (exact, fuzzy, Hamming, span) store
+  *    shard-partitioned [[IndexTable]]s, whose write, prune,
+  *    emptied-read, takedown and meta rules are stated there once.
   *
   * Checkpoint lifetime, for every operator that `localCheckpoint`s: a
   * checkpoint lives while a DataFrame that reads it is reachable. A
@@ -123,11 +126,10 @@ object Dedup {
     * [[buildFuzzyIndex]]: at 100 TB the corpus's digest set is itself
     * lake-sized (16 bytes × rows), so [[incrementalSurvivors]]'s
     * "recompute the existing side per batch" stops being free. One
-    * table under `path`: `digests/` (digest, id), partitioned by
-    * `__shard = pmod(xxhash64(digest), nShards)`, plus a 1-row
-    * `meta/`. A probe computes the batch's digests map-side, collects
-    * their DISTINCT shard set (≤ nShards ints — the model-sized
-    * artifact pattern) and reads ONLY those partitions.
+    * [[IndexTable]] under `path`: `digests/` (id, digest), partitioned
+    * by `__shard = pmod(xxhash64(digest), nShards)`, plus a 1-row
+    * `meta/`. A probe reads ONLY the shards the batch's own digests
+    * hash to.
     *
     * Contract asymmetry vs the fuzzy index (deliberate): `exactOn` is
     * an EXPRESSION and cannot be persisted in meta — the caller must
@@ -139,75 +141,33 @@ object Dedup {
     * [[appendToFuzzyIndex]] idempotency note. */
   def buildExactIndex(corpus: DataFrame, idCol: String, exactOn: Column,
       path: String, nShards: Int = 64): Unit = {
-    val spark = corpus.sparkSession
-    val digests = corpus
-      .select(col(idCol).as("id"), md5(exactOn.cast("string")).as("digest"))
-      .withColumn("__shard", pmod(xxhash64(col("digest")), lit(nShards.toLong)))
-    digests.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("__shard").parquet(s"$path/digests")
-    // persist the READ-BACK schema (id keeps the corpus idCol type;
-    // partition discovery infers __shard as INT): an index emptied by
-    // takedown must read back with exactly the frame shape a populated
-    // read gives, whatever the id type was — a hardcoded fallback
-    // diverges the moment an index is built over a non-BIGINT id
-    val readDdl = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id",
-        digests.schema("id").dataType),
-      org.apache.spark.sql.types.StructField("digest",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("__shard",
-        org.apache.spark.sql.types.IntegerType))).toDDL
-    spark.range(1).select(lit(nShards).as("n_shards"),
-        lit(readDdl).as("digest_ddl"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$path/meta")
-    exactMetaCache.remove(path)
-    ()
+    val digests = digestsTable(path)
+    val rows = digestRows(corpus, col(idCol).as("id"), exactOn, nShards)
+    digests.write(rows, org.apache.spark.sql.SaveMode.Overwrite)
+    IndexTable.writeMeta(corpus.sparkSession.range(1)
+      .select(lit(nShards).as("n_shards"), digests.ddl(rows)), digests.metaDir)
   }
 
-  /** Shard count of a [[buildExactIndex]] layout (cached per path —
-    * the fuzzy-meta immutability argument). */
+  /** The `digests/` table of a [[buildExactIndex]] layout. Its meta
+    * predating `digest_ddl` reads emptied as the BIGINT-id shape. */
+  private def digestsTable(path: String) = IndexTable(s"$path/digests",
+    "__shard", s"$path/meta", "digest_ddl",
+    Some("id BIGINT, digest STRING, __shard INT"))
+
+  /** (`id`, digest, __shard) rows of `df` under an nShards layout. */
+  private def digestRows(df: DataFrame, id: Column, exactOn: Column,
+      nShards: Int): DataFrame =
+    df.select(id, md5(exactOn.cast("string")).as("digest"))
+      .withColumn("__shard", pmod(xxhash64(col("digest")), lit(nShards.toLong)))
+
+  /** The one row of an index's `meta/` (see [[IndexTable.meta]]). */
+  private def metaRow(spark: org.apache.spark.sql.SparkSession,
+      path: String): org.apache.spark.sql.Row =
+    IndexTable.meta(spark, s"$path/meta").head
+
   private def exactIndexShards(spark: org.apache.spark.sql.SparkSession,
       path: String): Int =
-    exactMetaCache.computeIfAbsent(path, _ =>
-      spark.read.parquet(s"$path/meta").collect()(0).getAs[Int]("n_shards"))
-
-  /** The digests table of a [[buildExactIndex]] layout, tolerating the
-    * EMPTIED state: a takedown that removes every remaining row
-    * reclaims all shard dirs ([[rewriteShards]]), leaving a directory
-    * with no parquet files — which plain `read.parquet` rejects
-    * (UNABLE_TO_INFER_SCHEMA). An emptied index is a legitimate state
-    * (a full-retention purge; a CDC consumer replaying a rewrite's
-    * delete-all-then-reinsert delta), so reads fall back to an empty
-    * frame with the canonical schema and the index stays probe-able
-    * and append-able. */
-  private def readDigestsOrEmpty(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame = {
-    val dir = new org.apache.hadoop.fs.Path(s"$path/digests")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def hasData: Boolean = {
-      val it = fs.listFiles(dir, true)
-      var found = false
-      while (!found && it.hasNext)
-        found = it.next().getPath.getName.endsWith(".parquet")
-      found
-    }
-    if (fs.exists(dir) && hasData) spark.read.parquet(s"$path/digests")
-    else {
-      // the canonical shape comes from build-time meta (digest_ddl),
-      // so the emptied frame types exactly like a populated read —
-      // same id type, same discovered-INT __shard. Legacy meta
-      // (pre-ddl) falls back to the BIGINT-id default with the
-      // discovered __shard type a real read would give.
-      val meta = spark.read.parquet(s"$path/meta")
-      val ddl =
-        if (meta.columns.contains("digest_ddl"))
-          meta.collect()(0).getAs[String]("digest_ddl")
-        else "id BIGINT, digest STRING, __shard INT"
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(ddl))
-    }
-  }
+    metaRow(spark, path).getAs[Int]("n_shards")
 
   // Bloom sidecar parameters for the exact index (fixed — the layout
   // is self-consistent as long as build/append/probe share them).
@@ -235,22 +195,19 @@ object Dedup {
     * are false-positive-only; REBUILD here after heavy deletes. */
   def buildExactBloom(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit = {
-    Bloom.build(spark.read.parquet(s"$path/digests"), col("digest"),
+    Bloom.build(digestsTable(path).readAll(spark), col("digest"),
         bloomK, bloomBits)
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(bloomPath(path))
   }
 
   /** APPEND a batch's (digest, id) rows into a [[buildExactIndex]]
-    * layout — dynamic partitionBy, so only the shard partitions the
-    * batch's digests hash to gain files. Returns the touched shard
+    * layout ([[IndexTable]]'s WRITE rule). Returns the touched shard
     * ids (bounded by nShards). */
   def appendToExactIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, batch: DataFrame, idCol: String, exactOn: Column): Seq[Long] = {
-    val nShards = exactIndexShards(spark, path)
-    val rows = batch
-      .select(col(idCol).as("id"), md5(exactOn.cast("string")).as("digest"))
-      .withColumn("__shard", pmod(xxhash64(col("digest")), lit(nShards.toLong)))
+    val rows = digestRows(batch, col(idCol).as("id"), exactOn,
+      exactIndexShards(spark, path))
     if (hasBloom(spark, path)) {
       // bits FIRST (see buildExactBloom): plain append — the probe
       // reads the relation through distinct(), so duplicate bit rows
@@ -259,23 +216,18 @@ object Dedup {
         .write.mode(org.apache.spark.sql.SaveMode.Append)
         .parquet(bloomPath(path))
     }
-    rows.write.mode(org.apache.spark.sql.SaveMode.Append)
-      .partitionBy("__shard").parquet(s"$path/digests")
-    rows.select("__shard").distinct().collect().map(_.getLong(0)).sorted.toIndexedSeq
+    digestsTable(path).write(rows, org.apache.spark.sql.SaveMode.Append)
+    IndexTable.shards(rows, col("__shard"))
   }
 
   /** Probe a [[buildExactIndex]] index: (in_id, corpus_id, digest)
     * exact-duplicate pairs between batch and indexed corpus, reading
     * ONLY the shard partitions the batch's own digests hash to
-    * (static `isin` prune, like [[probeFuzzyIndex]]; `staticPrune =
-    * false` keeps the plan lazy for huge query sets / plan audits). */
+    * ([[IndexTable]]'s PRUNE rule). */
   def probeExactIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-      incoming: DataFrame, idCol: String, exactOn: Column,
-      staticPrune: Boolean = true): DataFrame = {
-    val nShards = exactIndexShards(spark, path)
-    val inRows0 = incoming
-      .select(col(idCol).as("in_id"), md5(exactOn.cast("string")).as("digest"))
-      .withColumn("__shard", pmod(xxhash64(col("digest")), lit(nShards.toLong)))
+      incoming: DataFrame, idCol: String, exactOn: Column): DataFrame = {
+    val inRows0 = digestRows(incoming, col(idCol).as("in_id"), exactOn,
+      exactIndexShards(spark, path))
     // NEGATIVE-CACHE SCREEN: when the bloom sidecar exists, only
     // maybe-seen digests proceed — a definitely-new digest can have
     // no index match (no false negatives, spec-pinned equivalence),
@@ -292,16 +244,9 @@ object Dedup {
           .select(col("term").as("digest"))
         inRows0.join(maybe, Seq("digest"), "left_semi")
       }
-    val idx0 = readDigestsOrEmpty(spark, path)
-    val idx =
-      if (!staticPrune) idx0
-      else {
-        // shards collected AFTER the screen: a mostly-novel batch
-        // prunes to the few shards its maybe-seen digests hash to
-        val shards = inRows.select("__shard").distinct().collect().map(_.getLong(0))
-        if (shards.isEmpty) idx0.limit(0)
-        else idx0.where(col("__shard").isin(shards.toIndexedSeq: _*))
-      }
+    // shards collected AFTER the screen: a mostly-novel batch prunes
+    // to the few shards its maybe-seen digests hash to
+    val idx = digestsTable(path).readFor(spark, inRows, col("__shard"))
     inRows.select("in_id", "digest")
       .join(idx.select(col("id").as("corpus_id"), col("digest")), "digest")
       .select(col("in_id"), col("corpus_id"), col("digest"))
@@ -347,33 +292,6 @@ object Dedup {
   final case class IndexDeleteReport(
       rowsDeleted: Long, touchedShards: Seq[Long])
 
-  /** Rewrite ONLY the given shard partitions of a shard-partitioned
-    * table, keeping `remaining` (which must carry `shardCol`):
-    * dynamic-partition overwrite replaces each shard present in
-    * `remaining`; shards among `targets` that end up EMPTY are
-    * reclaimed by deleting their partition dir (dynamic overwrite
-    * never writes them, so the stale files would otherwise survive).
-    * `remaining` is checkpointed first — it reads the very files the
-    * overwrite replaces. */
-  private[operators] def rewriteShards(spark: org.apache.spark.sql.SparkSession,
-      table: String, shardCol: String, targets: Seq[Long],
-      remaining: DataFrame): Unit = {
-    val kept = {
-      val k = remaining.localCheckpoint()
-      k.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(shardCol).parquet(table)
-      k.select(shardCol).distinct().collect()
-        .map(_.getAs[Number](0).longValue()).toSet
-    }
-    val conf = spark.sparkContext.hadoopConfiguration
-    targets.filterNot(kept).foreach { s =>
-      val dir = new org.apache.hadoop.fs.Path(s"$table/$shardCol=$s")
-      val fs = dir.getFileSystem(conf)
-      if (fs.exists(dir)) fs.delete(dir, true)
-    }
-  }
-
   /** TAKEDOWN from a [[buildExactIndex]] layout: remove the given
     * documents' (digest, id) rows, so a FUTURE copy of a removed doc
     * is ADMITTED again — the retention/licensing obligation a
@@ -381,31 +299,16 @@ object Dedup {
     * keep blocking near-copies forever). Takes the docs (id +
     * `exactOn`), not bare ids: the layout shards by DIGEST hash, so
     * the digest is what locates the rows — an id-only delete would be
-    * an O(index) scan, this one reads and rewrites ONLY the shard
-    * partitions the docs' own digests hash to (the probe's prune,
-    * turned into a bounded rewrite). Shards left empty are reclaimed;
-    * `meta/` is untouched. Quiesce probes/appends for the touched
-    * shards (the Compaction rule — this is in-place maintenance). */
+    * an O(index) scan, this one rewrites ONLY the shards the docs' own
+    * digests hash to ([[IndexTable]]'s TAKEDOWN rule). */
   def deleteFromExactIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, docs: DataFrame, idCol: String, exactOn: Column)
       : IndexDeleteReport = {
-    val nShards = exactIndexShards(spark, path)
-    val targets = docs
-      .select(col(idCol).cast("long").as("id"),
-        md5(exactOn.cast("string")).as("digest"))
-      .withColumn("__shard", pmod(xxhash64(col("digest")), lit(nShards.toLong)))
-    val shards = targets.select("__shard").distinct()
-      .collect().map(_.getLong(0)).sorted.toIndexedSeq
-    if (shards.isEmpty) return IndexDeleteReport(0L, Nil)
-    val pruned = readDigestsOrEmpty(spark, path)
-      .where(col("__shard").isin(shards: _*))
+    val targets = digestRows(docs, col(idCol).cast("long").as("id"), exactOn,
+      exactIndexShards(spark, path))
     val doomed = targets.select("id").distinct()
-    val before = pruned.count()
-    val remaining = pruned.join(doomed, Seq("id"), "left_anti")
-    rewriteShards(spark, s"$path/digests", "__shard", shards, remaining)
-    val after = readDigestsOrEmpty(spark, path)
-      .where(col("__shard").isin(shards: _*)).count()
-    IndexDeleteReport(before - after, shards)
+    digestsTable(path).takedown(spark, IndexTable.shards(targets, col("__shard")))(
+      _.join(doomed, Seq("id"), "left_anti"))
   }
 
   /** TAKEDOWN from a [[buildFuzzyIndex]] layout: remove the given ids'
@@ -414,53 +317,27 @@ object Dedup {
     * buckets are re-derived from the ids' own stored signatures
     * (read shard-pruned by id) with the index's meta parameters, so
     * both rewrites touch only the shard partitions the removed docs
-    * actually live in — never the corpus. The derived bucket set is a
-    * superset of what appends wrote (saturation only withholds band
-    * rows), so no orphan can survive. After the delete a future
-    * near-copy of a removed doc is ADMITTED (spec-pinned); shards
-    * left empty are reclaimed; `meta/` is untouched. Same quiesce
-    * rule as [[deleteFromExactIndex]]. */
+    * actually live in ([[IndexTable]]'s TAKEDOWN rule). The derived
+    * bucket set is a superset of what appends wrote (saturation only
+    * withholds band rows), so no orphan can survive. After the delete
+    * a future near-copy of a removed doc is ADMITTED (spec-pinned). */
   def deleteFromFuzzyIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, ids: DataFrame, idCol: String)
       : Map[String, IndexDeleteReport] = {
     val m = fuzzyIndexMeta(spark, path)
     val doomed = ids.select(col(idCol).cast("long").as("id")).distinct()
-    val idShards = doomed
-      .select(pmod(col("id"), lit(m.nShards.toLong)).as("__s"))
-      .distinct().collect().map(_.getLong(0)).sorted.toIndexedSeq
-    if (idShards.isEmpty)
-      return Map("sets" -> IndexDeleteReport(0L, Nil),
-        "bands" -> IndexDeleteReport(0L, Nil))
-    val setsPruned = spark.read.parquet(s"$path/sets")
-      .where(col("__idshard").isin(idShards: _*))
-    val bandShards = {
-      // the ids' own stored signatures locate their band buckets —
-      // checkpointed: this read must survive the sets/ overwrite below
-      val doomedSets =
-        setsPruned.join(doomed, Seq("id"), "left_semi").localCheckpoint()
-      lshBandRows(doomedSets, m.k, m.bands)
-        .select(pmod(xxhash64(col("bucket")), lit(m.nShards.toLong)).as("__s"))
-        .distinct().collect().map(_.getLong(0)).sorted.toIndexedSeq
-    }
-    val setsBefore = setsPruned.count()
-    rewriteShards(spark, s"$path/sets", "__idshard", idShards,
-      setsPruned.join(doomed, Seq("id"), "left_anti"))
-    val setsAfter = spark.read.parquet(s"$path/sets")
-      .where(col("__idshard").isin(idShards: _*)).count()
-    val bandsReport =
-      if (bandShards.isEmpty) IndexDeleteReport(0L, Nil)
-      else {
-        val bandsPruned = spark.read.parquet(s"$path/bands")
-          .where(col("__shard").isin(bandShards: _*))
-        val bandsBefore = bandsPruned.count()
-        rewriteShards(spark, s"$path/bands", "__shard", bandShards,
-          bandsPruned.join(doomed, Seq("id"), "left_anti"))
-        val bandsAfter = spark.read.parquet(s"$path/bands")
-          .where(col("__shard").isin(bandShards: _*)).count()
-        IndexDeleteReport(bandsBefore - bandsAfter, bandShards)
-      }
-    Map("sets" -> IndexDeleteReport(setsBefore - setsAfter, idShards),
-      "bands" -> bandsReport)
+    val sets = fuzzySets(path)
+    val idShards = IndexTable.shards(doomed, idShard(col("id"), m.nShards))
+    // the ids' own stored signatures locate their band buckets —
+    // collected before the sets/ rewrite below replaces them
+    val bandShards = IndexTable.shards(
+      lshBandRows(sets.read(spark, idShards)
+        .join(doomed, Seq("id"), "left_semi"), m.k, m.bands),
+      bucketShard(m.nShards))
+    Map("sets" -> sets.takedown(spark, idShards)(
+        _.join(doomed, Seq("id"), "left_anti")),
+      "bands" -> bandsTable(path).takedown(spark, bandShards)(
+        _.join(doomed, Seq("id"), "left_anti")))
   }
 
   // -------------------------------------------------------------- minhash
@@ -605,47 +482,49 @@ object Dedup {
   final case class FuzzyIndexMeta(
       shingleN: Int, k: Int, bands: Int, nShards: Int, maxBucketSize: Int)
 
-  /** Per-path meta cache: meta is immutable once built (appends keep
-    * it invariant by contract), so re-reading it per probe is a pure
-    * fixed cost — one Spark job per micro-batch in the streaming
-    * intakes (measured ~0.3-0.4 s of the probe floor, IndexAB r7).
-    * [[buildFuzzyIndex]] invalidates its path; a rebuild by ANOTHER
-    * process is the same cross-process hazard as any in-place layout
-    * change (the Compaction quiesce rule). */
-  private val fuzzyMetaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, FuzzyIndexMeta]()
-  private val exactMetaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-
-  /** Read the meta table of a persisted fuzzy index (cached per path —
-    * meta is build-time-immutable). */
+  /** Read the meta table of a persisted fuzzy index (cached per path,
+    * [[IndexTable]]'s META rule). */
   def fuzzyIndexMeta(spark: org.apache.spark.sql.SparkSession,
-      path: String): FuzzyIndexMeta =
-    fuzzyMetaCache.computeIfAbsent(path, _ => {
-      val r = spark.read.parquet(s"$path/meta").collect()(0)
-      FuzzyIndexMeta(r.getAs[Int]("shingle_n"), r.getAs[Int]("k"),
-        r.getAs[Int]("bands"), r.getAs[Int]("n_shards"), r.getAs[Int]("max_bucket"))
-    })
+      path: String): FuzzyIndexMeta = {
+    val r = metaRow(spark, path)
+    FuzzyIndexMeta(r.getAs[Int]("shingle_n"), r.getAs[Int]("k"),
+      r.getAs[Int]("bands"), r.getAs[Int]("n_shards"), r.getAs[Int]("max_bucket"))
+  }
+
+  /** The `sets/` table of a [[buildFuzzyIndex]] layout. */
+  private def fuzzySets(path: String) =
+    IndexTable(s"$path/sets", "__idshard", s"$path/meta", "sets_ddl")
+
+  /** The `bands/` table of a [[buildFuzzyIndex]] or [[buildHammingIndex]]
+    * layout. */
+  private def bandsTable(path: String) =
+    IndexTable(s"$path/bands", "__shard", s"$path/meta", "bands_ddl")
+
+  /** The id shard of the fuzzy and Hamming `sets/`/`sigs/` tables. */
+  private def idShard(id: Column, nShards: Int): Column =
+    pmod(id.cast("long"), lit(nShards.toLong))
+
+  /** The bucket shard of the fuzzy `bands/` table. */
+  private def bucketShard(nShards: Int): Column =
+    pmod(xxhash64(col("bucket")), lit(nShards.toLong))
 
   /** Build a PERSISTED MinHash signature index over a corpus — the
     * incremental-fuzzy-dedup counterpart of [[IvfAnn.buildIndexInt]]:
     * pay the corpus text scan (tokenize → shingle-hash → k-slot
     * signature) ONCE at build time, then dedup every incoming batch by
     * [[probeFuzzyIndex]] without ever rescanning or re-signing the
-    * corpus. Three tables under `path`:
+    * corpus. Two [[IndexTable]]s and a meta row under `path`:
     *  - `sets/`  (id, hs, sig), partitioned by
     *    `__idshard = pmod(id, nShards)` — the verification side;
-    *    a probe reads only the shards its candidate ids live in;
     *  - `bands/` (band, bucket, id), partitioned by
     *    `__shard = pmod(xxhash64(bucket), nShards)` — the candidate-
-    *    generation side; a probe's buckets hash to a bounded shard
-    *    set, pushed as a static partition filter;
+    *    generation side;
     *  - `meta/`  one row of build parameters (see [[FuzzyIndexMeta]]).
     * Degenerate buckets (membership > maxBucketSize — boilerplate
     * content sharing a signature, the LSH skew case) are dropped AT
-    * BUILD time by a broadcast anti-join against the (tiny) over-cap
-    * bucket list — the same policy [[minHashDupPairs]] applies per
-    * run, paid once here so probes stay cap-free and bounded.
+    * BUILD time ([[IndexTable.dropOverCap]]) — the same policy
+    * [[minHashDupPairs]] applies per run, paid once here so probes
+    * stay cap-free and bounded.
     * The corpus text is scanned once: `bands/` derives from the
     * written `sets/` (compact id+signature rows), not from the text.
     * `idCol` must be integral (it becomes the sets/ shard key). */
@@ -659,24 +538,20 @@ object Dedup {
         org.apache.spark.sql.types.LongType).contains(idType),
       s"buildFuzzyIndex: idCol '$idCol' must be integral, got ${idType.catalogString}")
     val spark = corpus.sparkSession
-    minHashBaseFromArrays(shingleHashArrays(corpus, idCol, textCol, shingleN), k)
-      .withColumn("__idshard", pmod(col("id").cast("long"), lit(nShards.toLong)))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("__idshard").parquet(s"$path/sets")
-    val banded = lshBandRows(spark.read.parquet(s"$path/sets"), k, bands)
-    val overCap = banded.groupBy("band", "bucket")
-      .agg(count(lit(1)).as("__n")).where(col("__n") > maxBucketSize)
-      .select("band", "bucket")
-    banded.join(overCap, Seq("band", "bucket"), "left_anti")
-      .withColumn("__shard", pmod(xxhash64(col("bucket")), lit(nShards.toLong)))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("__shard").parquet(s"$path/bands")
-    spark.range(1).select(
+    val sets = fuzzySets(path)
+    val setRows =
+      minHashBaseFromArrays(shingleHashArrays(corpus, idCol, textCol, shingleN), k)
+        .withColumn("__idshard", idShard(col("id"), nShards))
+    sets.write(setRows, org.apache.spark.sql.SaveMode.Overwrite)
+    val bandRows = IndexTable.dropOverCap(
+        lshBandRows(sets.readAll(spark), k, bands), maxBucketSize)
+      .withColumn("__shard", bucketShard(nShards))
+    bandsTable(path).write(bandRows, org.apache.spark.sql.SaveMode.Overwrite)
+    IndexTable.writeMeta(spark.range(1).select(
         lit(shingleN).as("shingle_n"), lit(k).as("k"), lit(bands).as("bands"),
-        lit(nShards).as("n_shards"), lit(maxBucketSize).as("max_bucket"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$path/meta")
-    fuzzyMetaCache.remove(path)
-    ()
+        lit(nShards).as("n_shards"), lit(maxBucketSize).as("max_bucket"),
+        sets.ddl(setRows), bandsTable(path).ddl(bandRows)),
+      s"$path/meta")
   }
 
   /** Probe a [[buildFuzzyIndex]] index with an incoming batch: fuzzy
@@ -688,37 +563,25 @@ object Dedup {
     * look up their exact shingle sets in `sets/` for full Jaccard
     * verification.
     *
-    * I/O shape (the point of the index): with `staticPrune` (default),
-    * the batch's distinct bucket-shard set — at most nShards ints, the
-    * same model-sized driver artifact as [[IvfAnn.searchIndexInt]]'s
-    * probe cells — is collected and pushed as a static partition
-    * filter on `bands/`, and the candidates' distinct id-shard set
-    * (again <= nShards ints) likewise prunes `sets/`; a small batch
-    * therefore reads a FRACTION of both tables, proportional to its
-    * own bucket spread, never the corpus. The candidate pair set is
-    * localCheckpointed so the band join executes once while feeding both the
-    * shard collection and the verification join — this makes the call
-    * eagerly run the candidate job, like the search-side collect it
-    * mirrors. `checkpointCandidates = false` keeps the whole probe
-    * lazy/plan-inspectable (candidate generation then re-executes per
-    * consumer — the plan-audit and tiny-batch mode). */
+    * I/O shape (the point of the index): `bands/` is read pruned to
+    * the batch's bucket shards and `sets/` to the candidates' id
+    * shards ([[IndexTable]]'s PRUNE rule), so a small batch reads a
+    * FRACTION of both tables, proportional to its own bucket spread,
+    * never the corpus. The candidate pair set is localCheckpointed so
+    * the band join executes once while feeding both the shard
+    * collection and the verification join — this makes the call
+    * eagerly run the candidate job. `checkpointCandidates = false`
+    * keeps the probe plan-inspectable (candidate generation then
+    * re-executes per consumer — the plan-audit and tiny-batch mode). */
   def probeFuzzyIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       incoming: DataFrame, idCol: String, textCol: String, threshold: Double,
-      staticPrune: Boolean = true,
       checkpointCandidates: Boolean = true): DataFrame = {
     val m = fuzzyIndexMeta(spark, path)
     val inBase =
       minHashBaseFromArrays(shingleHashArrays(incoming, idCol, textCol, m.shingleN), m.k)
     val inBands = lshBandRows(inBase, m.k, m.bands)
-      .withColumn("__shard", pmod(xxhash64(col("bucket")), lit(m.nShards.toLong)))
-    val corpusBands0 = spark.read.parquet(s"$path/bands")
-    val corpusBands =
-      if (!staticPrune) corpusBands0
-      else {
-        val shards = inBands.select("__shard").distinct().collect().map(_.getLong(0))
-        if (shards.isEmpty) corpusBands0.limit(0)
-        else corpusBands0.where(col("__shard").isin(shards.toIndexedSeq: _*))
-      }
+      .withColumn("__shard", bucketShard(m.nShards))
+    val corpusBands = bandsTable(path).readFor(spark, inBands, col("__shard"))
     val cand0 = inBands.select(col("id").as("in_id"), col("band"), col("bucket"))
       .join(corpusBands.select(col("id").as("corpus_id"), col("band"), col("bucket")),
         Seq("band", "bucket"))
@@ -726,16 +589,8 @@ object Dedup {
     val cand =
       if (checkpointCandidates) cand0.localCheckpoint()
       else cand0
-    val sets0 = spark.read.parquet(s"$path/sets")
-    val sets =
-      if (!staticPrune) sets0
-      else {
-        val idShards = cand
-          .select(pmod(col("corpus_id").cast("long"), lit(m.nShards.toLong)).as("__s"))
-          .distinct().collect().map(_.getLong(0))
-        if (idShards.isEmpty) sets0.limit(0)
-        else sets0.where(col("__idshard").isin(idShards.toIndexedSeq: _*))
-      }
+    val sets = fuzzySets(path)
+      .readFor(spark, cand, idShard(col("corpus_id"), m.nShards))
     cand
       .join(inBase.select(col("id").as("in_id"), col("hs").as("__ha")), "in_id")
       .join(sets.select(col("id").as("corpus_id"), col("hs").as("__hb")), "corpus_id")
@@ -780,27 +635,19 @@ object Dedup {
     * signed ONCE (one localCheckpointed signing job) with the index's
     * OWN parameters from `meta/` — a build/append mismatch is
     * impossible by construction and `meta/` is never rewritten — then
-    *  - its (id, hs, sig) rows append to `sets/`, and
-    *  - its band rows append to `bands/`,
-    * both via dynamic `partitionBy` appends that create files ONLY in
-    * the shard partitions the batch actually touches (a small batch
-    * appends a fraction of the layout proportional to its own id/
-    * bucket spread, never rewrites the corpus; asserted in
-    * StreamingSpec).
+    * its (id, hs, sig) rows append to `sets/` and its band rows to
+    * `bands/`, each touching only the shards the batch lands in
+    * (asserted in StreamingSpec).
     *
     * Cap contract (the drift vs build): [[buildFuzzyIndex]] drops an
-    * over-cap bucket WHOLE at build time; an append SATURATES instead —
-    * batch band rows whose bucket would exceed `maxBucketSize`
-    * (existing members, counted from a shard-pruned read of only the
-    * batch's own buckets, plus the batch's) are withheld, existing
-    * members stay probe-able. The bound that matters at scale — no
-    * bucket ever exceeds the cap, so probe fan-in stays
-    * O(cap · bands) per doc — holds under any append sequence; the
-    * difference from a fresh rebuild is only WHICH members of a
-    * boilerplate bucket are indexed (first-arrived keep their slots).
-    * Saturated docs remain fully probe-able as batch members and keep
-    * their `sets/` rows (future verification side); they are just not
-    * candidate-generators for that one bucket.
+    * over-cap bucket WHOLE at build time; an append SATURATES instead
+    * ([[IndexTable#appendCapped]]) — batch band rows whose bucket
+    * would exceed `maxBucketSize` are withheld, existing members stay
+    * probe-able. The difference from a fresh rebuild is only WHICH
+    * members of a boilerplate bucket are indexed (first-arrived keep
+    * their slots). Saturated docs remain fully probe-able as batch
+    * members and keep their `sets/` rows (future verification side);
+    * they are just not candidate-generators for that one bucket.
     *
     * Re-running the same append (a replayed foreachBatch) duplicates
     * index rows; the probe's dup DECISION is idempotent to that
@@ -824,48 +671,24 @@ object Dedup {
       path: String, batch: DataFrame, idCol: String, textCol: String)
       : FuzzyAppendReport = {
     val m = fuzzyIndexMeta(spark, path)
-    val report = {
-      // one signing job; both table writes consume the checkpoint blocks
-      val base =
-        minHashBaseFromArrays(
-            shingleHashArrays(batch, idCol, textCol, m.shingleN), m.k)
-          .withColumn("__idshard", pmod(col("id").cast("long"), lit(m.nShards.toLong)))
-          .localCheckpoint()
-      val setsRows = base.count()
-      if (setsRows == 0L)
-        FuzzyAppendReport(0L, 0L, 0L, Nil, Nil)
-      else {
-        base.write.mode(org.apache.spark.sql.SaveMode.Append)
-          .partitionBy("__idshard").parquet(s"$path/sets")
-        val setsShards = base.select("__idshard").distinct()
-          .collect().map(_.getLong(0)).sorted
-        val nb =
-          lshBandRows(base.select("id", "hs", "sig"), m.k, m.bands)
-            .withColumn("__shard", pmod(xxhash64(col("bucket")), lit(m.nShards.toLong)))
-            .localCheckpoint()
-        // existing membership of ONLY the batch's buckets: static
-        // shard prune (bounded id list), then a semi-join on the
-        // batch's distinct buckets before anything is counted
-        val shards = nb.select("__shard").distinct().collect().map(_.getLong(0)).sorted
-        val existingCounts = spark.read.parquet(s"$path/bands")
-          .where(col("__shard").isin(shards.toIndexedSeq: _*))
-          .join(nb.select("band", "bucket").distinct(), Seq("band", "bucket"), "left_semi")
-          .groupBy("band", "bucket").agg(count(lit(1)).as("__ex"))
-        val overCap = nb.groupBy("band", "bucket").agg(count(lit(1)).as("__new"))
-          .join(existingCounts, Seq("band", "bucket"), "left")
-          .where(coalesce(col("__ex"), lit(0L)) + col("__new") > m.maxBucketSize)
-          .select("band", "bucket")
-        val appendable = nb.join(overCap, Seq("band", "bucket"), "left_anti")
-        appendable.write.mode(org.apache.spark.sql.SaveMode.Append)
-          .partitionBy("__shard").parquet(s"$path/bands")
-        val bandRows = appendable.count()
-        val bandShards = appendable.select("__shard").distinct()
-          .collect().map(_.getLong(0)).sorted
-        FuzzyAppendReport(setsRows, bandRows, nb.count() - bandRows,
-          setsShards.toIndexedSeq, bandShards.toIndexedSeq)
-      }
+    // one signing job; both table writes consume the checkpoint blocks
+    val base =
+      minHashBaseFromArrays(shingleHashArrays(batch, idCol, textCol, m.shingleN), m.k)
+        .withColumn("__idshard", idShard(col("id"), m.nShards))
+        .localCheckpoint()
+    val setsRows = base.count()
+    if (setsRows == 0L) FuzzyAppendReport(0L, 0L, 0L, Nil, Nil)
+    else {
+      fuzzySets(path).write(base, org.apache.spark.sql.SaveMode.Append)
+      val nb = lshBandRows(base.select("id", "hs", "sig"), m.k, m.bands)
+        .withColumn("__shard", bucketShard(m.nShards))
+        .localCheckpoint()
+      val appended = bandsTable(path).appendCapped(spark, nb, m.maxBucketSize)
+      val bandRows = appended.count()
+      FuzzyAppendReport(setsRows, bandRows, nb.count() - bandRows,
+        IndexTable.shards(base, col("__idshard")),
+        IndexTable.shards(appended, col("__shard")))
     }
-    report
   }
 
   /** One incremental-intake step against a persisted fuzzy index,
@@ -1414,12 +1237,27 @@ object Dedup {
   final case class HammingIndexMeta(bands: Int, bandBits: Int,
       nShards: Int, maxBucketSize: Int)
 
+  /** Read the meta table of a persisted Hamming index (cached per path,
+    * [[IndexTable]]'s META rule). */
   def hammingIndexMeta(spark: org.apache.spark.sql.SparkSession,
       path: String): HammingIndexMeta = {
-    val r = spark.read.parquet(s"$path/meta").collect().head
+    val r = metaRow(spark, path)
     HammingIndexMeta(r.getAs[Int]("bands"), r.getAs[Int]("band_bits"),
       r.getAs[Int]("n_shards"), r.getAs[Int]("max_bucket"))
   }
+
+  /** The `sigs/` table of a [[buildHammingIndex]] layout. */
+  private def hammingSigs(path: String) =
+    IndexTable(s"$path/sigs", "__idshard", s"$path/meta", "sigs_ddl")
+
+  /** The (band, bucket) shard of the Hamming `bands/` table. */
+  private def hammingBucketShard(nShards: Int): Column =
+    pmod(xxhash64(col("band"), col("bucket")), lit(nShards.toLong))
+
+  /** `(media_id, sig)` with both cast to BIGINT. */
+  private def longSigs(sigs: DataFrame): DataFrame =
+    sigs.select(col("media_id").cast("long").as("media_id"),
+      col("sig").cast("long").as("sig"))
 
   private def hammingBandRows(sigs: DataFrame, bands: Int,
       bandBits: Int): DataFrame = {
@@ -1435,80 +1273,58 @@ object Dedup {
     * `(media_id, sig)` relation lands id-shard-partitioned under
     * `sigs/` (the exact-verify source), its band rows bucket-shard-
     * partitioned under `bands/` (degenerate over-cap buckets dropped
-    * at build, the LSH skew rule), and the parameters under `meta/`.
-    * Incremental media intake then probes batches against ALL history
-    * without rescanning payloads — the fingerprint tier of the
-    * persisted-index family (exact digests, MinHash sets, IVF cells,
-    * PQ codes... and now perceptual/loudness hashes). */
+    * at build, [[IndexTable.dropOverCap]]), and the parameters under
+    * `meta/`. Incremental media intake then probes batches against
+    * ALL history without rescanning payloads — the fingerprint tier of
+    * the persisted-index family (exact digests, MinHash sets, IVF
+    * cells, PQ codes... and now perceptual/loudness hashes). */
   def buildHammingIndex(sigs: DataFrame, path: String, bands: Int = 8,
       bandBits: Int = 8, nShards: Int = 64,
       maxBucketSize: Int = 1000): Unit = {
     val spark = sigs.sparkSession
-    sigs.select(col("media_id").cast("long").as("media_id"),
-        col("sig").cast("long").as("sig"))
-      .withColumn("__idshard", pmod(col("media_id"), lit(nShards.toLong)))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("__idshard").parquet(s"$path/sigs")
-    val banded = hammingBandRows(
-      spark.read.parquet(s"$path/sigs"), bands, bandBits)
-    val overCap = banded.groupBy("band", "bucket")
-      .agg(count(lit(1)).as("__n")).where(col("__n") > maxBucketSize)
-      .select("band", "bucket")
-    banded.join(overCap, Seq("band", "bucket"), "left_anti")
-      .withColumn("__shard",
-        pmod(xxhash64(col("band"), col("bucket")), lit(nShards.toLong)))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("__shard").parquet(s"$path/bands")
-    spark.range(1).select(lit(bands).as("bands"),
+    val sigsT = hammingSigs(path)
+    val sigRows = longSigs(sigs)
+      .withColumn("__idshard", idShard(col("media_id"), nShards))
+    sigsT.write(sigRows, org.apache.spark.sql.SaveMode.Overwrite)
+    val bandRows = IndexTable.dropOverCap(
+        hammingBandRows(sigsT.readAll(spark), bands, bandBits), maxBucketSize)
+      .withColumn("__shard", hammingBucketShard(nShards))
+    bandsTable(path).write(bandRows, org.apache.spark.sql.SaveMode.Overwrite)
+    IndexTable.writeMeta(spark.range(1).select(lit(bands).as("bands"),
         lit(bandBits).as("band_bits"), lit(nShards).as("n_shards"),
-        lit(maxBucketSize).as("max_bucket"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$path/meta")
-    ()
+        lit(maxBucketSize).as("max_bucket"),
+        sigsT.ddl(sigRows), bandsTable(path).ddl(bandRows)),
+      s"$path/meta")
   }
 
   /** Probe a [[buildHammingIndex]] index with a batch of
     * fingerprints: `(in_id, corpus_id, hamming <= maxHamming)` pairs
     * between batch and corpus, WITHOUT rescanning media. The batch's
-    * band rows equi-join the persisted `bands/`; with `staticPrune`
-    * the batch's distinct bucket-shard set (≤ nShards ints — the
-    * model-sized driver artifact of every probe in this engine) is
-    * pushed as a static partition filter, and the candidates' id
-    * shards likewise prune `sigs/` — probe I/O is proportional to the
-    * batch's own bucket spread, never the corpus. */
+    * band rows equi-join the persisted `bands/`, read pruned to the
+    * batch's bucket shards, and the candidates' id shards likewise
+    * prune `sigs/` ([[IndexTable]]'s PRUNE rule) — probe I/O is
+    * proportional to the batch's own bucket spread, never the
+    * corpus. */
   def probeHammingIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, batchSigs: DataFrame, maxHamming: Int = 2,
-      staticPrune: Boolean = true): DataFrame = {
+      path: String, batchSigs: DataFrame, maxHamming: Int = 2): DataFrame = {
     val m = hammingIndexMeta(spark, path)
-    val nb = hammingBandRows(
-      batchSigs.select(col("media_id").cast("long").as("media_id"),
-        col("sig").cast("long").as("sig")), m.bands, m.bandBits)
-      .withColumn("__shard",
-        pmod(xxhash64(col("band"), col("bucket")), lit(m.nShards.toLong)))
-    val bandsTable0 = spark.read.parquet(s"$path/bands")
-    val bandsTable = if (staticPrune) {
-      val shards = nb.select("__shard").distinct()
-        .collect().map(_.getLong(0)).toIndexedSeq
-      bandsTable0.where(col("__shard").isin(shards: _*))
-    } else bandsTable0
+    val batch = longSigs(batchSigs)
+    val nb = hammingBandRows(batch, m.bands, m.bandBits)
+      .withColumn("__shard", hammingBucketShard(m.nShards))
     val cand = nb.select(col("media_id").as("in_id"),
         col("band"), col("bucket"))
-      .join(bandsTable.select(col("media_id").as("corpus_id"),
-        col("band"), col("bucket")), Seq("band", "bucket"))
+      .join(bandsTable(path).readFor(spark, nb, col("__shard"))
+        .select(col("media_id").as("corpus_id"), col("band"), col("bucket")),
+        Seq("band", "bucket"))
       .where(col("in_id") =!= col("corpus_id"))
       .select("in_id", "corpus_id").distinct()
-    val sigsTable0 = spark.read.parquet(s"$path/sigs")
-    val sigsTable = if (staticPrune) {
-      val idShards = cand
-        .select(pmod(col("corpus_id"), lit(m.nShards.toLong)).as("__s"))
-        .distinct().collect().map(_.getLong(0)).toIndexedSeq
-      sigsTable0.where(col("__idshard").isin(idShards: _*))
-    } else sigsTable0
     cand
-      .join(batchSigs.select(col("media_id").cast("long").as("in_id"),
-        col("sig").cast("long").as("__sa")), Seq("in_id"))
-      .join(sigsTable.select(col("media_id").as("corpus_id"),
-        col("sig").as("__sb")), Seq("corpus_id"))
+      .join(batch.select(col("media_id").as("in_id"), col("sig").as("__sa")),
+        Seq("in_id"))
+      .join(hammingSigs(path)
+        .readFor(spark, cand, idShard(col("corpus_id"), m.nShards))
+        .select(col("media_id").as("corpus_id"), col("sig").as("__sb")),
+        Seq("corpus_id"))
       .withColumn("hamming",
         expr("CAST(bit_count(__sa ^ __sb) AS BIGINT)"))
       .where(col("hamming") <= maxHamming)
@@ -1516,9 +1332,8 @@ object Dedup {
   }
 
   /** Grow a Hamming index in place: append the batch's sigs and band
-    * rows, dropping band rows whose bucket would exceed the build's
-    * cap COUNTING existing membership (checked via a static-pruned,
-    * semi-joined read of only the batch's own buckets — the
+    * rows, withholding band rows whose bucket would exceed the build's
+    * cap COUNTING existing membership ([[IndexTable#appendCapped]], the
     * [[appendToFuzzyIndex]] rule). Returns (sig rows appended, band
     * rows dropped as over-cap). Grown index == one-shot build over
     * the concatenated corpus, up to the cap tie cases, and the probe
@@ -1526,46 +1341,19 @@ object Dedup {
   def appendToHammingIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, batchSigs: DataFrame): (Long, Long) = {
     val m = hammingIndexMeta(spark, path)
-    val result = {
-      val base = batchSigs
-        .select(col("media_id").cast("long").as("media_id"),
-          col("sig").cast("long").as("sig"))
-        .withColumn("__idshard",
-          pmod(col("media_id"), lit(m.nShards.toLong)))
+    val base = longSigs(batchSigs)
+      .withColumn("__idshard", idShard(col("media_id"), m.nShards))
+      .localCheckpoint()
+    val n = base.count()
+    if (n == 0L) (0L, 0L)
+    else {
+      hammingSigs(path).write(base, org.apache.spark.sql.SaveMode.Append)
+      val nb = hammingBandRows(base.select("media_id", "sig"), m.bands, m.bandBits)
+        .withColumn("__shard", hammingBucketShard(m.nShards))
         .localCheckpoint()
-      val n = base.count()
-      if (n == 0L) (0L, 0L)
-      else {
-        base.write.mode(org.apache.spark.sql.SaveMode.Append)
-          .partitionBy("__idshard").parquet(s"$path/sigs")
-        val nb =
-          hammingBandRows(base.select("media_id", "sig"),
-            m.bands, m.bandBits)
-          .withColumn("__shard",
-            pmod(xxhash64(col("band"), col("bucket")),
-              lit(m.nShards.toLong)))
-          .localCheckpoint()
-        val shards = nb.select("__shard").distinct()
-          .collect().map(_.getLong(0)).toIndexedSeq
-        val existing = spark.read.parquet(s"$path/bands")
-          .where(col("__shard").isin(shards: _*))
-          .join(nb.select("band", "bucket").distinct(),
-            Seq("band", "bucket"), "left_semi")
-          .groupBy("band", "bucket").agg(count(lit(1)).as("__ex"))
-        val overCap = nb.groupBy("band", "bucket")
-          .agg(count(lit(1)).as("__new"))
-          .join(existing, Seq("band", "bucket"), "left")
-          .where(coalesce(col("__ex"), lit(0L)) + col("__new") >
-            m.maxBucketSize)
-          .select("band", "bucket")
-        val appendable = nb.join(overCap, Seq("band", "bucket"),
-          "left_anti")
-        appendable.write.mode(org.apache.spark.sql.SaveMode.Append)
-          .partitionBy("__shard").parquet(s"$path/bands")
-        (n, nb.count() - appendable.count())
-      }
+      (n, nb.count() -
+        bandsTable(path).appendCapped(spark, nb, m.maxBucketSize).count())
     }
-    result
   }
 
   /** One incremental media-intake step against a persisted Hamming
@@ -1588,9 +1376,7 @@ object Dedup {
       batchSigs: DataFrame, path: String, bands: Int = 8,
       bandBits: Int = 8, maxHamming: Int = 2)
       : (DataFrame, Long, Long) = {
-    val sigs = batchSigs
-      .select(col("media_id").cast("long").as("media_id"),
-        col("sig").cast("long").as("sig"))
+    val sigs = longSigs(batchSigs)
     val metaExists = {
       val p = new org.apache.hadoop.fs.Path(s"$path/meta")
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
@@ -1601,12 +1387,9 @@ object Dedup {
       // dropped on identity (the probe excludes self-id pairs, so
       // without this a redelivered item would re-append); the read
       // prunes to the batch's own id shards
-      val m = hammingIndexMeta(spark, path)
-      val idShards = sigs
-        .select(pmod(col("media_id"), lit(m.nShards.toLong)).as("__s"))
-        .distinct().collect().map(_.getLong(0)).toIndexedSeq
-      val seenIds = spark.read.parquet(s"$path/sigs")
-        .where(col("__idshard").isin(idShards: _*))
+      val seenIds = hammingSigs(path)
+        .readFor(spark, sigs,
+          idShard(col("media_id"), hammingIndexMeta(spark, path).nShards))
         .select("media_id")
       val unseen = sigs.join(seenIds, Seq("media_id"), "left_anti")
       val matched = probeHammingIndex(spark, path, unseen, maxHamming)
@@ -1618,9 +1401,9 @@ object Dedup {
       hammingNearDupPairs(fresh, bands, bandBits,
         maxHamming = maxHamming))
     val nSurv = survivors.count()
-    // an empty partitioned write leaves an unreadable sigs/ (no
-    // partitions to infer a schema from), so an empty FIRST batch
-    // must not create the index — the next non-empty batch will
+    // an empty FIRST batch does not create the index: the build reads
+    // its sigs/ back, and an empty write leaves no schema to infer
+    // before meta/ exists. The next non-empty batch founds it
     if (metaExists) appendToHammingIndex(spark, path, survivors)
     else if (nSurv > 0) buildHammingIndex(survivors, path, bands, bandBits)
     (survivors, n - nFresh, nFresh - nSurv)
@@ -1629,52 +1412,26 @@ object Dedup {
   /** Retention/takedown on the fingerprint tier: delete ids from a
     * Hamming index by rewriting ONLY the shards they live in — id
     * shards of `sigs/` directly, and the band shards the doomed ids'
-    * own STORED signatures band to (no rescan of anything else; the
-    * [[deleteFromFuzzyIndex]] rule). Near-copies of deleted media are
-    * admitted by later probes; copies of still-indexed media keep
-    * matching. */
+    * own STORED signatures band to ([[IndexTable]]'s TAKEDOWN rule,
+    * located as in [[deleteFromFuzzyIndex]]). Near-copies of deleted
+    * media are admitted by later probes; copies of still-indexed media
+    * keep matching. */
   def deleteFromHammingIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, ids: DataFrame, idCol: String)
       : Map[String, IndexDeleteReport] = {
     val m = hammingIndexMeta(spark, path)
-    val doomed = ids.select(col(idCol).cast("long").as("media_id"))
-      .distinct()
-    val idShards = doomed
-      .select(pmod(col("media_id"), lit(m.nShards.toLong)).as("__s"))
-      .distinct().collect().map(_.getLong(0)).sorted.toIndexedSeq
-    if (idShards.isEmpty)
-      return Map("sigs" -> IndexDeleteReport(0L, Nil),
-        "bands" -> IndexDeleteReport(0L, Nil))
-    val sigsPruned = spark.read.parquet(s"$path/sigs")
-      .where(col("__idshard").isin(idShards: _*))
-    val bandShards = {
-      val doomedSigs =
-        sigsPruned.join(doomed, Seq("media_id"), "left_semi")
-          .localCheckpoint()
-      hammingBandRows(doomedSigs, m.bands, m.bandBits)
-        .select(pmod(xxhash64(col("band"), col("bucket")),
-          lit(m.nShards.toLong)).as("__s"))
-        .distinct().collect().map(_.getLong(0)).sorted.toIndexedSeq
-    }
-    val sigsBefore = sigsPruned.count()
-    rewriteShards(spark, s"$path/sigs", "__idshard", idShards,
-      sigsPruned.join(doomed, Seq("media_id"), "left_anti"))
-    val sigsAfter = spark.read.parquet(s"$path/sigs")
-      .where(col("__idshard").isin(idShards: _*)).count()
-    val bandsReport =
-      if (bandShards.isEmpty) IndexDeleteReport(0L, Nil)
-      else {
-        val bandsPruned = spark.read.parquet(s"$path/bands")
-          .where(col("__shard").isin(bandShards: _*))
-        val bandsBefore = bandsPruned.count()
-        rewriteShards(spark, s"$path/bands", "__shard", bandShards,
-          bandsPruned.join(doomed, Seq("media_id"), "left_anti"))
-        val bandsAfter = spark.read.parquet(s"$path/bands")
-          .where(col("__shard").isin(bandShards: _*)).count()
-        IndexDeleteReport(bandsBefore - bandsAfter, bandShards)
-      }
-    Map("sigs" -> IndexDeleteReport(sigsBefore - sigsAfter, idShards),
-      "bands" -> bandsReport)
+    val doomed = ids.select(col(idCol).cast("long").as("media_id")).distinct()
+    val sigs = hammingSigs(path)
+    val idShards = IndexTable.shards(doomed, idShard(col("media_id"), m.nShards))
+    // collected before the sigs/ rewrite below replaces them
+    val bandShards = IndexTable.shards(
+      hammingBandRows(sigs.read(spark, idShards)
+        .join(doomed, Seq("media_id"), "left_semi"), m.bands, m.bandBits),
+      hammingBucketShard(m.nShards))
+    Map("sigs" -> sigs.takedown(spark, idShards)(
+        _.join(doomed, Seq("media_id"), "left_anti")),
+      "bands" -> bandsTable(path).takedown(spark, bandShards)(
+        _.join(doomed, Seq("media_id"), "left_anti")))
   }
 
   /** Survivors after fuzzy dedup: every id in `df` keeps itself unless
@@ -1917,17 +1674,19 @@ object Dedup {
 
   // ------------------------------------------------- growing span index
 
-  private val spanMetaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Int, Int)]()
-
-  /** (nShards, gramN) of a [[buildSpanIndex]] layout (cached per
-    * path — the fuzzy-meta immutability argument). */
+  /** (nShards, gramN) of a [[buildSpanIndex]] layout. */
   private def spanIndexMeta(spark: org.apache.spark.sql.SparkSession,
-      path: String): (Int, Int) =
-    spanMetaCache.computeIfAbsent(path, _ => {
-      val r = spark.read.parquet(s"$path/meta").collect()(0)
-      (r.getAs[Int]("n_shards"), r.getAs[Int]("gram_n"))
-    })
+      path: String): (Int, Int) = {
+    val r = metaRow(spark, path)
+    (r.getAs[Int]("n_shards"), r.getAs[Int]("gram_n"))
+  }
+
+  /** The `grams/` table of a [[buildSpanIndex]] layout. */
+  private def gramsTable(path: String) =
+    IndexTable(s"$path/grams", "__shard", s"$path/meta", "grams_ddl")
+
+  private def gramShard(nShards: Int): Column =
+    pmod(xxhash64(col("g")), lit(nShards.toLong))
 
   /** PERSIST the span tier's growing state: the DISTINCT gram-hash
     * set of the corpus, shard-partitioned by gram hash, plus the
@@ -1944,23 +1703,21 @@ object Dedup {
     * fixed. The x46/x50 growing-tier algebra, at span granularity. */
   def buildSpanIndex(corpus: DataFrame, idCol: String, textCol: String,
       n: Int, path: String, nShards: Int = 64): Unit = {
-    val spark = corpus.sparkSession
-    val base = corpus.select(col(idCol).as("id"), col(textCol).as("__text"))
-    spanOccurrences(base, n)
+    val grams = gramsTable(path)
+    val rows = spanOccurrences(
+        corpus.select(col(idCol).as("id"), col(textCol).as("__text")), n)
       .groupBy("g").agg(min(col("id")).as("owner"))
-      .withColumn("__shard", pmod(xxhash64(col("g")), lit(nShards.toLong)))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("__shard").parquet(s"$path/grams")
-    spark.range(1).select(lit(nShards).as("n_shards"), lit(n).as("gram_n"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$path/meta")
-    spanMetaCache.remove(path)
-    ()
+      .withColumn("__shard", gramShard(nShards))
+    grams.write(rows, org.apache.spark.sql.SaveMode.Overwrite)
+    IndexTable.writeMeta(corpus.sparkSession.range(1).select(
+        lit(nShards).as("n_shards"), lit(n).as("gram_n"), grams.ddl(rows)),
+      grams.metaDir)
   }
 
   /** One incremental SPAN-intake step, first-wins: rewrite the batch
     * with every span occurrence cut whose keeper is already settled —
-    * in the index (shard-pruned membership probe: only the shard
-    * partitions the batch's own grams hash to are read) or earlier in
+    * in the index (a membership probe pruned to the shards the batch's
+    * own grams hash to, [[IndexTable]]'s PRUNE rule) or earlier in
     * the batch (the within-batch min-(id,pos) rule of
     * [[stripDuplicateSpans]]) — then append the batch's NEW grams to
     * the state and return the rewritten docs
@@ -1980,12 +1737,8 @@ object Dedup {
     val base = Rebalance(batch.select(col(idCol).as("id"), col(textCol).as("__text")))
     val occ = spanOccurrences(base, n)
     val batchGrams = occ.groupBy("g").agg(min(col("id")).as("owner"))
-      .withColumn("__shard", pmod(xxhash64(col("g")), lit(nShards.toLong)))
-    val idx0 = spark.read.parquet(s"$path/grams")
-    val shards = batchGrams.select("__shard").distinct().collect().map(_.getLong(0))
-    val idx =
-      if (shards.isEmpty) idx0.limit(0)
-      else idx0.where(col("__shard").isin(shards.toIndexedSeq: _*))
+      .withColumn("__shard", gramShard(nShards))
+    val idx = gramsTable(path).readFor(spark, batchGrams, col("__shard"))
     val batchIds = base.select(col("id").as("__bid")).distinct()
     val hits = idx.select("g", "owner")
       .join(batchIds, col("owner") === col("__bid"), "left_anti")
@@ -2000,9 +1753,8 @@ object Dedup {
       .select(col("id"), col("pos"))
     val out =
       rewriteDropSpans(base, marked, n, idCol).localCheckpoint()
-    batchGrams.join(hits, Seq("g"), "left_anti")
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .partitionBy("__shard").parquet(s"$path/grams")
+    gramsTable(path).write(batchGrams.join(hits, Seq("g"), "left_anti"),
+      org.apache.spark.sql.SaveMode.Append)
     out
   }
 
@@ -2049,29 +1801,18 @@ object Dedup {
     * their (retained) founder and stay blocked. Needs the doc's TEXT
     * (like [[deleteFromExactIndex]]): the doc's own grams locate the
     * shards, and every row it founded lives in one of them — the
-    * rewrite touches only those shard partitions, never the corpus.
-    * Same quiesce rule as the other tiers. */
+    * rewrite touches only those shards ([[IndexTable]]'s TAKEDOWN
+    * rule). */
   def deleteFromSpanIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, docs: DataFrame, idCol: String, textCol: String)
       : IndexDeleteReport = {
     val (nShards, n) = spanIndexMeta(spark, path)
     val doomed = docs.select(col(idCol).cast("long").as("__did")).distinct()
     val targets = Rebalance(docs.select(col(idCol).as("id"), col(textCol).as("__text")))
-    val shards = spanOccurrences(targets, n)
-      .select(pmod(xxhash64(col("g")), lit(nShards.toLong)).as("__shard"))
-      .distinct().collect().map(_.getLong(0)).sorted.toIndexedSeq
-    if (shards.isEmpty) return IndexDeleteReport(0L, Nil)
-    val pruned = spark.read.parquet(s"$path/grams")
-      .where(col("__shard").isin(shards: _*))
-    val before = pruned.count()
-    val remaining = pruned.join(doomed, col("owner") === col("__did"), "left_anti")
-    rewriteShards(spark, s"$path/grams", "__shard", shards, remaining)
-    val after = spark.read.parquet(s"$path/grams")
-      .where(col("__shard").isin(shards: _*)).count()
-    IndexDeleteReport(before - after, shards)
+    gramsTable(path).takedown(spark,
+        IndexTable.shards(spanOccurrences(targets, n), gramShard(nShards)))(
+      _.join(doomed, col("owner") === col("__did"), "left_anti"))
   }
-
-  // ------------------------------------------------- embedding near-dup
 
   // ------------------------------------------------- embedding near-dup
 

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   *    matrix, `nlist × dim` doubles, which is broadcast as a literal;
   *  - ASSIGN is a map-only scan (argmin over centroid distances, all
   *    column algebra) — at scale this materializes as a partitioned
-  *    parquet write, i.e. the "index";
+  *    parquet write, i.e. the "index" (an [[IndexTable]]);
   *  - SEARCH explodes each query into its `nprobe` cells and
   *    equi-joins on cell id, so the candidate scan is
   *    `nprobe/nlist` of the corpus per query instead of all of it.
@@ -158,68 +158,83 @@ object IvfAnn {
   // ----------------------------------------------- persisted index path
 
   /** Build the PERSISTED IVF index: one map-only pass assigns every
-    * corpus row its cell and precomputes its norm, written to the lake
-    * `partitionBy(__cell)`. This is the 100 TB shape: the index build
-    * is a single scan, and a search that probes `nprobe` of `nlist`
-    * cells READS only those partitions — the corpus is never rescanned
-    * per query batch ([[topKInt]] assigns at query time; use it when
-    * the corpus is not worth indexing). */
+    * corpus row its cell and precomputes its norm, written as an
+    * [[IndexTable]] at `path` partitioned by `__cell`. This is the
+    * 100 TB shape: the index build is a single scan, and a search that
+    * probes `nprobe` of `nlist` cells READS only those partitions —
+    * the corpus is never rescanned per query batch ([[topKInt]]
+    * assigns at query time; use it when the corpus is not worth
+    * indexing). */
   def buildIndexInt(corpus: DataFrame, corpusId: String, corpusVec: String,
       cents: Array[IntCentroid], path: String): Unit = {
-    Rebalance(corpus.select(col(corpusId), col(corpusVec)))
+    val rows = Rebalance(corpus.select(col(corpusId), col(corpusVec)))
       .withColumn("__cell", cellIdInt(col(corpusVec), cents))
       .withColumn("__cn", Similarity.norm(col(corpusVec)))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("__cell").parquet(path)
-    writeCentroids(corpus.sparkSession, cents, path)
+    cellTable(path).write(rows, org.apache.spark.sql.SaveMode.Overwrite)
+    writeCentroids(corpus.sparkSession, cents, cellTable(path).ddl(rows), path)
   }
+
+  /** The cell table of a [[buildIndexInt]] or
+    * [[Pq.buildIndexIvfPq]] layout: the data sits at `path` itself, and
+    * `_centroids/` is its meta. */
+  private[operators] def cellTable(path: String) =
+    IndexTable(path, "__cell", s"$path/_centroids", "data_ddl")
 
   /** The frozen centroid model, persisted INSIDE the index layout at
     * `_centroids/` (the underscore prefix hides it from the data
-    * read, like `_SUCCESS`) — written AFTER the data overwrite so a
-    * rebuild replaces both atomically-enough for the quiesce rule.
-    * Self-describing layout = probe/append callers cannot pair the
-    * index with the wrong model, the same mismatch-impossible
-    * property the fuzzy index gets from `meta/`. */
+    * read, like `_SUCCESS`) with the cell table's `ddl` on every row —
+    * written AFTER the data overwrite so a rebuild replaces both
+    * atomically-enough for the quiesce rule. Self-describing layout =
+    * probe/append callers cannot pair the index with the wrong model,
+    * the same mismatch-impossible property the fuzzy index gets from
+    * `meta/`. */
   private[operators] def writeCentroids(spark: org.apache.spark.sql.SparkSession,
-      cents: Array[IntCentroid], path: String): Unit = {
+      cents: Array[IntCentroid], ddl: Column, path: String): Unit = {
     import spark.implicits._
-    cents.toSeq.map(c => (c.cell, c.c.toSeq)).toDF("cell", "c")
-      .coalesce(1)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$path/_centroids")
-    centroidCache.remove(path)
-    ()
+    IndexTable.writeMeta(cents.toSeq.map(c => (c.cell, c.c.toSeq))
+      .toDF("cell", "c").select(col("cell"), col("c"), ddl),
+      s"$path/_centroids")
   }
-
-  /** Per-path cache of the persisted centroid model (build-time-
-    * immutable, same single-process caveat as Dedup's meta caches). */
-  private val centroidCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[IntCentroid]]()
 
   /** Read the frozen centroid model back from a [[buildIndexInt]]
     * layout (cached per path — nlist × dim longs, model-sized). */
   def loadCentroidsInt(spark: org.apache.spark.sql.SparkSession,
       path: String): Array[IntCentroid] =
-    centroidCache.computeIfAbsent(path, _ =>
-      spark.read.parquet(s"$path/_centroids").collect()
-        .map(r => IntCentroid(r.getAs[Int]("cell"), r.getSeq[Long](1).toArray))
-        .sortBy(_.cell))
+    IndexTable.meta(spark, s"$path/_centroids")
+      .map(r => IntCentroid(r.getAs[Int]("cell"), r.getSeq[Long](1).toArray))
+      .sortBy(_.cell)
 
   /** Drop the in-process cache entry so the next [[loadCentroidsInt]]
     * re-reads the layout (test/maintenance hook — proves on-disk
     * state rather than cache state). */
-  private[graft] def invalidateCentroidCache(path: String): Unit = {
-    centroidCache.remove(path)
-    ()
+  private[graft] def invalidateCentroidCache(path: String): Unit =
+    IndexTable.forget(s"$path/_centroids")
+
+  /** TAKEDOWN from a [[buildIndexInt]] layout — the ANN-tier sibling
+    * of [[graft.operators.Dedup.deleteFromExactIndex]]: remove the
+    * given vectors' rows so a removed document stops surfacing as
+    * anyone's neighbor (retention/licensing). Takes the docs (id +
+    * vector): with the FROZEN build centroids the cell is a pure
+    * function of the vector, so the doomed rows are located without
+    * scanning the index — only the cells the removed vectors live in
+    * are rewritten ([[IndexTable]]'s TAKEDOWN rule). Searches under
+    * the same pinned centroids are unaffected outside the touched
+    * cells (spec compares file listings). */
+  def deleteFromIndexInt(spark: org.apache.spark.sql.SparkSession,
+      path: String, docs: DataFrame, corpusId: String, corpusVec: String,
+      cents: Array[IntCentroid]): Dedup.IndexDeleteReport = {
+    val targets = docs.select(col(corpusId).as("__did"),
+      cellIdInt(col(corpusVec), cents).as("__cell"))
+    val doomed = targets.select(col("__did").as(corpusId)).distinct()
+    cellTable(path).takedown(spark, IndexTable.shards(targets, col("__cell")))(
+      _.join(doomed, Seq(corpusId), "left_anti"))
   }
 
   /** APPEND a batch of vectors into a persisted [[buildIndexInt]]
     * index — the incremental-ingest twin of
     * [[graft.operators.Dedup.appendToFuzzyIndex]]. Same map-only
-    * assign+norm pass as the build, written `SaveMode.Append`: only
-    * the `__cell` partitions the batch lands in gain files, the rest
-    * of the layout is untouched.
+    * assign+norm pass as the build, appended: only the `__cell`
+    * partitions the batch lands in gain files.
     *
     * Drift contract (the knob this operator deliberately does NOT
     * turn): `cents` is the FROZEN build-time model — assignment is a
@@ -235,75 +250,29 @@ object IvfAnn {
     * fresh build) when the max/median cell ratio crosses the caller's
     * tolerance — re-centering in place would silently invalidate the
     * pinned-centroid equivalence that makes the index replayable. */
-  /** TAKEDOWN from a [[buildIndexInt]] layout — the ANN-tier sibling
-    * of [[graft.operators.Dedup.deleteFromExactIndex]]: remove the
-    * given vectors' rows so a removed document stops surfacing as
-    * anyone's neighbor (retention/licensing). Takes the docs (id +
-    * vector): with the FROZEN build centroids the cell is a pure
-    * function of the vector, so the doomed rows are located without
-    * scanning the index — only the cell partitions the removed
-    * vectors actually live in are read, rewritten via dynamic-
-    * partition overwrite, and reclaimed when emptied. Searches under
-    * the same pinned centroids are unaffected outside the touched
-    * cells (spec compares file listings). Same quiesce rule as the
-    * other in-place index maintenance ops. */
-  def deleteFromIndexInt(spark: org.apache.spark.sql.SparkSession,
-      path: String, docs: DataFrame, corpusId: String, corpusVec: String,
-      cents: Array[IntCentroid]): Dedup.IndexDeleteReport = {
-    val targets = docs.select(col(corpusId).as("__did"),
-      cellIdInt(col(corpusVec), cents).as("__cell"))
-    val cells = targets.select("__cell").distinct()
-      .collect().map(_.getInt(0)).sorted.toIndexedSeq
-    if (cells.isEmpty) return Dedup.IndexDeleteReport(0L, Nil)
-    val pruned = spark.read.parquet(path)
-      .where(col("__cell").isin(cells: _*))
-    val before = pruned.count()
-    val remaining = pruned.join(
-      targets.select(col("__did").as(corpusId)).distinct(),
-      Seq(corpusId), "left_anti")
-    Dedup.rewriteShards(spark, path, "__cell", cells.map(_.toLong), remaining)
-    val after = spark.read.parquet(path)
-      .where(col("__cell").isin(cells: _*)).count()
-    Dedup.IndexDeleteReport(before - after, cells.map(_.toLong))
-  }
-
   def appendToIndexInt(batch: DataFrame, corpusId: String, corpusVec: String,
       cents: Array[IntCentroid], path: String): Unit =
-    Rebalance(batch.select(col(corpusId), col(corpusVec)))
+    cellTable(path).write(Rebalance(batch.select(col(corpusId), col(corpusVec)))
       .withColumn("__cell", cellIdInt(col(corpusVec), cents))
-      .withColumn("__cn", Similarity.norm(col(corpusVec)))
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .partitionBy("__cell").parquet(path)
+      .withColumn("__cn", Similarity.norm(col(corpusVec))),
+      org.apache.spark.sql.SaveMode.Append)
 
   /** Search a [[buildIndexInt]] index: queries explode into their
     * probe cells and equi-join on the PARTITION column, so the index
     * scan reads only the probed cells — I/O is `~nprobe/nlist` of the
-    * index, and norms come precomputed from the build pass.
-    *
-    * With `staticPrune` (the default), the distinct probe-cell set —
-    * at most `|Q| × nprobe` ints, the same model-sized class of
-    * driver artifact as the centroid matrix — is collected and pushed
-    * as a STATIC partition filter, which prunes unconditionally
-    * (asserted in the spec). Set it false for huge/streaming query
-    * sets; the equi-join then relies on dynamic partition pruning,
-    * whose benefit heuristics decide at planning time. Requires the
-    * session default `partitionColumnTypeInference` (the `__cell`
-    * dirs must read back as ints). */
+    * index ([[IndexTable]]'s PRUNE rule over the distinct probe
+    * cells, asserted in the spec), and norms come precomputed from the
+    * build pass. Requires the session default
+    * `partitionColumnTypeInference` (the `__cell` dirs must read back
+    * as ints). */
   def searchIndexInt(spark: org.apache.spark.sql.SparkSession, path: String,
       queries: DataFrame, corpusId: String, corpusVec: String,
       queryId: String, queryVec: String,
-      cents: Array[IntCentroid], k: Int, nprobe: Int,
-      staticPrune: Boolean = true): DataFrame = {
-    val idx0 = spark.read.parquet(path)
+      cents: Array[IntCentroid], k: Int, nprobe: Int): DataFrame = {
     val q = queries
       .withColumn("__cell", explode(probeCellsInt(col(queryVec), cents, nprobe)))
       .withColumn("__qn", Similarity.norm(col(queryVec)))
-    val idx =
-      if (!staticPrune) idx0
-      else {
-        val cells = q.select("__cell").distinct().collect().map(_.getInt(0))
-        idx0.where(col("__cell").isin(cells.toIndexedSeq: _*))
-      }
+    val idx = cellTable(path).readFor(spark, q, col("__cell"))
     val joined = idx.join(broadcast(q), Seq("__cell"))
       .where(col(queryId) =!= col(corpusId))
       .withColumn("cosine", Similarity.cosineWithNorms(
@@ -393,7 +362,7 @@ object IvfAnn {
   def probeCoverageIndexed(spark: org.apache.spark.sql.SparkSession,
       path: String, queries: DataFrame, queryVec: String): DataFrame = {
     val cents = loadCentroidsInt(spark, path)
-    val counts = spark.read.parquet(path)
+    val counts = cellTable(path).readAll(spark)
       .select(col("__cell").cast("long").as("cell"))
       .groupBy("cell").agg(count(lit(1)).as("__n"))
     probeCoverageFromCounts(counts, queries, queryVec, cents)
@@ -445,13 +414,13 @@ object IvfAnn {
     * operating point. */
   def searchIndexIntAtTarget(spark: org.apache.spark.sql.SparkSession,
       path: String, queries: DataFrame, corpusId: String, corpusVec: String,
-      queryId: String, queryVec: String, k: Int, targetMassPpm: Long,
-      staticPrune: Boolean = true): (DataFrame, Int) = {
+      queryId: String, queryVec: String, k: Int, targetMassPpm: Long)
+      : (DataFrame, Int) = {
     val cents = loadCentroidsInt(spark, path)
     val nprobe = nprobeForTarget(
       probeCoverageIndexed(spark, path, queries, queryVec), targetMassPpm)
     (searchIndexInt(spark, path, queries, corpusId, corpusVec,
-      queryId, queryVec, cents, k, nprobe, staticPrune), nprobe)
+      queryId, queryVec, cents, k, nprobe), nprobe)
   }
 
   /** Recall@k audit of the IVF search against the exact brute force —
@@ -503,11 +472,9 @@ object IvfAnn {
     * across a cell boundary is not surfaced — the price of making the
     * quadratic term per-cell.
     *
-    * I/O shape: with `staticPrune` (default) the batch's distinct
-    * cell set — at most nlist ints, a model-sized driver artifact —
-    * is pushed as a static partition filter, so a batch reads only
-    * the cell partitions it lands in, never the corpus. Norms come
-    * precomputed from the build pass (`__cn`).
+    * I/O shape: a batch reads only the cells it lands in, never the
+    * corpus ([[IndexTable]]'s PRUNE rule). Norms come precomputed
+    * from the build pass (`__cn`).
     *
     * Output: (in_id, corpus_id, cosine) with cosine >= threshold,
     * including self-id rows only if the index already holds the
@@ -515,58 +482,19 @@ object IvfAnn {
     * [[intakeStepAgainstIndexInt]]). */
   def probeIndexSemantic(spark: org.apache.spark.sql.SparkSession, path: String,
       batch: DataFrame, idCol: String, vecCol: String,
-      corpusId: String, corpusVec: String, threshold: Double,
-      staticPrune: Boolean = true): DataFrame = {
+      corpusId: String, corpusVec: String, threshold: Double): DataFrame = {
     val cents = loadCentroidsInt(spark, path)
     val q = batch.select(col(idCol).as("in_id"), col(vecCol).as("__qv"))
       .withColumn("__cell", cellIdInt(col("__qv"), cents))
       .withColumn("__qn", Similarity.norm(col("__qv")))
-    val idx0 = spark.read.parquet(path)
-    val idx =
-      if (!staticPrune) idx0
-      else {
-        val cells = q.select("__cell").distinct().collect().map(_.getInt(0))
-        if (cells.isEmpty) idx0.limit(0)
-        else idx0.where(col("__cell").isin(cells.toIndexedSeq: _*))
-      }
-    idx.join(broadcast(q), Seq("__cell"))
+    cellTable(path).readFor(spark, q, col("__cell"))
+      .join(broadcast(q), Seq("__cell"))
       .withColumn("cosine", Similarity.cosineWithNorms(
         col("__qv"), col(corpusVec), col("__qn"), col("__cn")))
       .where(col("cosine") >= threshold)
       .select(col("in_id"), col(corpusId).as("corpus_id"), col("cosine"))
   }
 
-  /** One incremental-intake step against a persisted semantic index —
-    * the THIRD dedup tier's growing form, completing the set
-    * ([[Dedup.intakeStepAgainstExactIndex]] digests,
-    * [[Dedup.intakeStepAgainstFuzzyIndex]] MinHash, this one
-    * embeddings). FIRST-WINS over arrival order:
-    * (1) within-batch SemDeDup ([[Dedup.semanticDupPairs]] under the
-    * index's own frozen centroids, lowest id per dup cluster
-    * survives); (2) the survivors probe the index
-    * ([[probeIndexSemantic]]) and vectors with a semantic dup already
-    * IN the corpus are dropped; (3) the accepted remainder is
-    * APPENDED ([[appendToIndexInt]]) so the NEXT batch dedups against
-    * it. Batch columns must match the index build's
-    * (corpusId/corpusVec = idCol/vecCol).
-    *
-    * Crash recovery = re-run the step (the framework-wide rule): the
-    * probe ignores index rows carrying a batch row's OWN id — with
-    * corpus-unique ids those can only be this batch's earlier crashed
-    * append — so a replay converges on the never-crashed decisions;
-    * duplicate index rows from the replayed append are harmless to
-    * dup DECISIONS (the drop set is a distinct anti-join), redundant
-    * only as verification payload.
-    *
-    * With id order == arrival order and transitively-closed dup
-    * groups, a sequence of these steps lands exactly where one-shot
-    * [[Dedup.semanticDupPairs]] + [[Dedup.clusterSurvivors]] over the
-    * concatenated corpus lands; with CHAINED groups (A~B, B~C, but
-    * A≁C — common for cosine thresholds, unlike near-identical text
-    * dups) sequential first-wins deliberately keeps MORE: C is
-    * admitted because its only in-corpus neighbor B was never
-    * accepted. The x60 oracle replays the sequential semantics
-    * exactly, so that difference is pinned, not papered over. */
   /** [[intakeStepAgainstIndexInt]] under the framework's first-batch
     * BOOTSTRAP contract ([[graft.operators.Curate.intakeStep]]'s rule
     * applied to the vector tier): if no index exists at `path`, the
@@ -603,6 +531,37 @@ object IvfAnn {
     }
   }
 
+  /** One incremental-intake step against a persisted semantic index —
+    * the THIRD dedup tier's growing form, completing the set
+    * ([[Dedup.intakeStepAgainstExactIndex]] digests,
+    * [[Dedup.intakeStepAgainstFuzzyIndex]] MinHash, this one
+    * embeddings). FIRST-WINS over arrival order:
+    * (1) within-batch SemDeDup ([[Dedup.semanticDupPairs]] under the
+    * index's own frozen centroids, lowest id per dup cluster
+    * survives); (2) the survivors probe the index
+    * ([[probeIndexSemantic]]) and vectors with a semantic dup already
+    * IN the corpus are dropped; (3) the accepted remainder is
+    * APPENDED ([[appendToIndexInt]]) so the NEXT batch dedups against
+    * it. Batch columns must match the index build's
+    * (corpusId/corpusVec = idCol/vecCol).
+    *
+    * Crash recovery = re-run the step (the framework-wide rule): the
+    * probe ignores index rows carrying a batch row's OWN id — with
+    * corpus-unique ids those can only be this batch's earlier crashed
+    * append — so a replay converges on the never-crashed decisions;
+    * duplicate index rows from the replayed append are harmless to
+    * dup DECISIONS (the drop set is a distinct anti-join), redundant
+    * only as verification payload.
+    *
+    * With id order == arrival order and transitively-closed dup
+    * groups, a sequence of these steps lands exactly where one-shot
+    * [[Dedup.semanticDupPairs]] + [[Dedup.clusterSurvivors]] over the
+    * concatenated corpus lands; with CHAINED groups (A~B, B~C, but
+    * A≁C — common for cosine thresholds, unlike near-identical text
+    * dups) sequential first-wins deliberately keeps MORE: C is
+    * admitted because its only in-corpus neighbor B was never
+    * accepted. The x60 oracle replays the sequential semantics
+    * exactly, so that difference is pinned, not papered over. */
   def intakeStepAgainstIndexInt(spark: org.apache.spark.sql.SparkSession,
       path: String, batch: DataFrame, idCol: String, vecCol: String,
       threshold: Double, maxCellSize: Int = 100000): DataFrame = {

@@ -326,36 +326,38 @@ object Pq {
   }
 
   /** Build the PERSISTED IVF-PQ index — the 100 TB serving layout:
-    * one row per vector (id, codes: array<int>) written
-    * `partitionBy(__cell)`, with the FROZEN models riding in the
-    * layout itself (`_centroids/` — the [[IvfAnn]] convention — and
-    * `_codebook/`), so the index is self-describing and a search
-    * reads only the probed cells' partitions. The stored bytes per
-    * vector are the m codes — the corpus vectors are not in the
-    * index at all. */
+    * one row per vector (id, codes: array<int>) in the [[IvfAnn]] cell
+    * table (`partitionBy(__cell)`, [[IndexTable]]), with the FROZEN
+    * models riding in the layout itself (`_centroids/` — the
+    * [[IvfAnn]] convention — and `_codebook/`), so the index is
+    * self-describing and a search reads only the probed cells'
+    * partitions. The stored bytes per vector are the m codes — the
+    * corpus vectors are not in the index at all. */
   def buildIndexIvfPq(corpus: DataFrame, idCol: String, vecCol: String,
       path: String, nlist: Int, m: Int, ncode: Int): Unit = {
     val spark = corpus.sparkSession
     val cents = IvfAnn.seedCentroidsInt(corpus, idCol, vecCol, nlist)
     val cb = trainSeededResiduals(corpus, idCol, vecCol, cents, m, ncode)
+    val rows = codeRows(corpus, idCol, vecCol, cents, cb)
+    IvfAnn.cellTable(path).write(rows, org.apache.spark.sql.SaveMode.Overwrite)
+    IvfAnn.writeCentroids(spark, cents, IvfAnn.cellTable(path).ddl(rows), path)
+    IndexTable.writeMeta(codebookRelation(spark, cb), s"$path/_codebook")
+  }
+
+  /** The cell-table rows (id, __cell, codes) of `corpus`. */
+  private def codeRows(corpus: DataFrame, idCol: String, vecCol: String,
+      cents: Array[IvfAnn.IntCentroid], cb: Codebook): DataFrame =
     ivfPqCodes(corpus, idCol, vecCol, cents, cb)
       .groupBy("id", "cell")
       .agg(transform(array_sort(collect_list(struct(col("s"), col("c")))),
         x => x.getField("c")).as("codes"))
       .withColumnRenamed("cell", "__cell")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("__cell").parquet(path)
-    IvfAnn.writeCentroids(spark, cents, path)
-    codebookRelation(spark, cb).coalesce(1)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$path/_codebook")
-  }
 
   /** Read the frozen codebook back from a [[buildIndexIvfPq]] layout
-    * (model-sized: m·ncode·subDim longs). */
+    * (model-sized: m·ncode·subDim longs; cached per path). */
   def loadCodebook(spark: org.apache.spark.sql.SparkSession,
       path: String): Codebook = {
-    val rows = spark.read.parquet(s"$path/_codebook").collect()
+    val rows = IndexTable.meta(spark, s"$path/_codebook")
     require(rows.nonEmpty, s"Pq.loadCodebook: empty model at $path")
     val m = rows.iterator.map(_.getAs[Int]("s")).max + 1
     val ncode = rows.iterator.map(_.getAs[Int]("c")).max + 1
@@ -368,12 +370,11 @@ object Pq {
     Codebook(m, subDim, ncode, words)
   }
 
-  /** Search a [[buildIndexIvfPq]] layout: the queries' distinct probe
-    * cells (≤ |Q|·nprobe ints, model-sized) are pushed as a STATIC
-    * partition filter, so the index scan READS only the probed cells'
-    * directories — I/O is ~nprobe/nlist of an index that already
-    * stores only m small ints per vector. Scoring is the relational
-    * ADC of [[topKIvfPq]] over the pruned codes. */
+  /** Search a [[buildIndexIvfPq]] layout: the index scan READS only
+    * the queries' probed cells ([[IndexTable]]'s PRUNE rule) — I/O is
+    * ~nprobe/nlist of an index that already stores only m small ints
+    * per vector. Scoring is the relational ADC of [[topKIvfPq]] over
+    * the pruned codes. */
   def searchIndexIvfPq(spark: org.apache.spark.sql.SparkSession,
       path: String, queries: DataFrame, queryId: String, queryVec: String,
       k: Int, nprobe: Int): DataFrame = {
@@ -383,9 +384,7 @@ object Pq {
       quantize3(col(queryVec)).as("qv"),
       explode(IvfAnn.probeCellsInt(col(queryVec), cents, nprobe))
         .as("__cell"))
-    val cells = q.select("__cell").distinct().collect().map(_.getInt(0))
-    val codesRel = spark.read.parquet(path)
-      .where(col("__cell").isin(cells.toIndexedSeq: _*))
+    val codesRel = IvfAnn.cellTable(path).readFor(spark, q, col("__cell"))
       .select(col("id"), col("__cell"),
         posexplode(col("codes")).as(Seq("s", "c")))
     val dtab = q
@@ -415,42 +414,27 @@ object Pq {
   def appendToIndexIvfPq(spark: org.apache.spark.sql.SparkSession,
       batch: DataFrame, idCol: String, vecCol: String,
       path: String): Unit = {
-    val cents = IvfAnn.loadCentroidsInt(spark, path)
-    val cb = loadCodebook(spark, path)
-    ivfPqCodes(batch, idCol, vecCol, cents, cb)
-      .groupBy("id", "cell")
-      .agg(transform(array_sort(collect_list(struct(col("s"), col("c")))),
-        x => x.getField("c")).as("codes"))
-      .withColumnRenamed("cell", "__cell")
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .partitionBy("__cell").parquet(path)
+    IvfAnn.cellTable(path).write(codeRows(batch, idCol, vecCol,
+        IvfAnn.loadCentroidsInt(spark, path), loadCodebook(spark, path)),
+      org.apache.spark.sql.SaveMode.Append)
   }
 
   /** TAKEDOWN from a [[buildIndexIvfPq]] layout — the retention/
     * licensing obligation for the codes tier: with the frozen
     * centroids the doomed rows' cells are pure functions of their
-    * vectors, so only those cell partitions are read and rewritten
-    * (dynamic-partition overwrite via [[Dedup.rewriteShards]]);
-    * a removed vector stops surfacing as anyone's ADC neighbor. */
+    * vectors, so only those cells are rewritten ([[IndexTable]]'s
+    * TAKEDOWN rule); a removed vector stops surfacing as anyone's ADC
+    * neighbor. */
   def deleteFromIndexIvfPq(spark: org.apache.spark.sql.SparkSession,
       path: String, docs: DataFrame, idCol: String,
       vecCol: String): Dedup.IndexDeleteReport = {
     val cents = IvfAnn.loadCentroidsInt(spark, path)
     val targets = docs.select(col(idCol).as("__did"),
       IvfAnn.cellIdInt(col(vecCol), cents).as("__cell"))
-    val cells = targets.select("__cell").distinct()
-      .collect().map(_.getInt(0)).sorted.toIndexedSeq
-    if (cells.isEmpty) return Dedup.IndexDeleteReport(0L, Nil)
-    val pruned = spark.read.parquet(path)
-      .where(col("__cell").isin(cells: _*))
-    val before = pruned.count()
-    val remaining = pruned.join(
-      targets.select(col("__did").as("id")).distinct(),
-      Seq("id"), "left_anti")
-    Dedup.rewriteShards(spark, path, "__cell", cells.map(_.toLong), remaining)
-    val after = spark.read.parquet(path)
-      .where(col("__cell").isin(cells: _*)).count()
-    Dedup.IndexDeleteReport(before - after, cells.map(_.toLong))
+    val doomed = targets.select(col("__did").as("id")).distinct()
+    IvfAnn.cellTable(path).takedown(spark,
+        IndexTable.shards(targets, col("__cell")))(
+      _.join(doomed, Seq("id"), "left_anti"))
   }
 
   /** The IVF-PQ tier's MEASURED loss: two approximations compound

@@ -1337,7 +1337,7 @@ class FunctionsSpec extends SparkSpec {
     assert(s2 == Seq(21L), "cross-batch dup 20 must drop against the grown index")
     // lazy probe plan reads digests/ under a static shard filter
     val lazyProbe = Dedup.probeExactIndex(spark, s"$tmp/idx",
-      docs.where(col("doc_id") >= 10), "doc_id", col("text"), staticPrune = true)
+      docs.where(col("doc_id") >= 10), "doc_id", col("text"))
     val scans = lazyProbe.queryExecution.sparkPlan.collectLeaves().collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec => f
     }
@@ -1420,6 +1420,25 @@ class FunctionsSpec extends SparkSpec {
       "compaction must carry _centroids/ through the destroy-last swap")
     assert(semProbe() == semBefore,
       "semantic probes must be layout-invariant across compaction")
+  }
+
+  test("loading a persisted IVF / IVF-PQ model logs no ignored-paths WARN") {
+    // the models live in underscore-named dirs (_centroids/,
+    // _codebook/), which Spark's file index treats as hidden when a
+    // read names the dir itself
+    import graft.operators.Pq
+    val corpus = (0 until 40).map { i =>
+      (i.toLong, Array.tabulate(8)(j => math.sin(i * 0.7 + j).toFloat).toSeq)
+    }.toDF("id", "vec")
+    val path = java.nio.file.Files.createTempDirectory("graft_model_load")
+      .toString + "/idx"
+    Pq.buildIndexIvfPq(corpus, "id", "vec", path, nlist = 4, m = 2, ncode = 4)
+    IvfAnn.invalidateCentroidCache(path)
+    val (loaded, warnings) = CheckpointProbe.warningsDuring(
+      (IvfAnn.loadCentroidsInt(spark, path), Pq.loadCodebook(spark, path)))
+    assert(loaded._1.length == 4 && loaded._2.m == 2)
+    assert(!warnings.exists(_.contains("All paths were ignored")),
+      warnings.mkString("\n"))
   }
 
   test("gram_hashes/prune_indices: positioned grams, distinct set equals shingle_hashes, merge-walk prune") {

@@ -23,6 +23,31 @@ class TxLogSpec extends SparkSpec {
   private def docs(lo: Int, hi: Int) =
     (lo until hi).map(i => (i.toLong, s"doc-$i")).toDF("id", "text")
 
+  // persisted-index fixtures: a fresh layout path per tier; texts whose
+  // 3-token spans are unique to one doc; 64-bit fingerprints far apart
+  // in Hamming distance; 8-dim vectors (queries carry ids + 1000)
+  private def indexPath(tier: String): String = java.nio.file.Files
+    .createTempDirectory(s"graft_idx_$tier").toString + "/idx"
+
+  private def tableRows(path: String, tables: String*): Long =
+    tables.map(t => spark.read.parquet(s"$path/$t").count()).sum
+
+  private def prose(lo: Int, hi: Int, idOffset: Long = 0L) =
+    (lo until hi).map(i => (i + idOffset, s"document $i covers subject $i in depth"))
+      .toDF("id", "text")
+
+  private def fingerprints(lo: Int, hi: Int, idOffset: Long = 0L) =
+    (lo until hi).map(i => (i + idOffset, i * 0x9E3779B97F4A7C15L))
+      .toDF("media_id", "sig")
+
+  private def vectors(lo: Int, hi: Int) =
+    (lo until hi).map(i =>
+      (i.toLong, Array.tabulate(8)(j => math.sin(i * 0.7 + j).toFloat).toSeq))
+      .toDF("id", "vec")
+
+  private def vectorQueries(lo: Int, hi: Int) = vectors(lo, hi)
+    .select((col("id") + 1000).as("q_id"), col("vec").as("q_vec"))
+
   test("append/snapshot: versions are contiguous and reads are exact") {
     val root = freshRoot("basic")
     assert(TxLog.latestVersion(spark, root) === 0)
@@ -254,19 +279,128 @@ class TxLogSpec extends SparkSpec {
   test("an index emptied by takedown stays probe-able and append-able") {
     // the delete-all edge the CDC consumer hits on every rewrite
     // (physical delta = delete-all + re-insert): all shards reclaim,
-    // and reads must see an empty index, not UNABLE_TO_INFER_SCHEMA
-    import graft.operators.Dedup
-    val path = java.nio.file.Files.createTempDirectory("graft_emptyidx")
-      .toString + "/idx"
-    val all = docs(0, 50)
-    Dedup.buildExactIndex(all, "id", col("text"), path, nShards = 4)
-    val rep = Dedup.deleteFromExactIndex(spark, path, all, "id", col("text"))
-    assert(rep.rowsDeleted === 50)
-    assert(Dedup.probeExactIndex(spark, path, docs(0, 5), "id",
-      col("text")).count() === 0)
-    Dedup.appendToExactIndex(spark, path, docs(10, 20), "id", col("text"))
-    assert(Dedup.probeExactIndex(spark, path, docs(0, 50), "id",
-      col("text")).count() === 10)
+    // and every tier must read an empty index with the schema a
+    // populated read gives, not UNABLE_TO_INFER_SCHEMA. Per tier:
+    // delete every row (the report counts them all), probe for 0
+    // results under the populated probe's schema, append, match again
+    import graft.operators.{Dedup, IvfAnn, Pq}
+    def emptied(tier: String, stored: Long, deleteAll: => Long,
+        probe: () => DataFrame, append: => Unit, matches: Long): Unit = {
+      val shape = probe().schema
+      assert(deleteAll === stored, s"$tier: the report counts every row")
+      val empty = probe()
+      assert(empty.count() === 0, s"$tier: an emptied index matches nothing")
+      assert(empty.schema === shape, s"$tier: the populated probe's schema")
+      append
+      assert(probe().count() === matches, s"$tier: appended rows match again")
+    }
+
+    val ex = indexPath("exact")
+    Dedup.buildExactIndex(docs(0, 50), "id", col("text"), ex, nShards = 4)
+    emptied("exact", 50,
+      Dedup.deleteFromExactIndex(spark, ex, docs(0, 50), "id", col("text"))
+        .rowsDeleted,
+      () => Dedup.probeExactIndex(spark, ex, docs(0, 50), "id", col("text")),
+      Dedup.appendToExactIndex(spark, ex, docs(10, 20), "id", col("text")), 10)
+
+    val fz = indexPath("fuzzy")
+    Dedup.buildFuzzyIndex(prose(0, 50), "id", "text", fz, nShards = 4)
+    emptied("fuzzy", tableRows(fz, "sets", "bands"), {
+        val r = Dedup.deleteFromFuzzyIndex(spark, fz, prose(0, 50), "id")
+        r("sets").rowsDeleted + r("bands").rowsDeleted
+      },
+      () => Dedup.probeFuzzyIndex(spark, fz, prose(10, 20, 1000L), "id",
+        "text", threshold = 1.0),
+      Dedup.appendToFuzzyIndex(spark, fz, prose(10, 20), "id", "text"), 10)
+
+    val hm = indexPath("hamming")
+    Dedup.buildHammingIndex(fingerprints(0, 50), hm, nShards = 4)
+    emptied("hamming", tableRows(hm, "sigs", "bands"), {
+        val r = Dedup.deleteFromHammingIndex(spark, hm, fingerprints(0, 50),
+          "media_id")
+        r("sigs").rowsDeleted + r("bands").rowsDeleted
+      },
+      () => Dedup.probeHammingIndex(spark, hm, fingerprints(10, 20, 1000L)),
+      Dedup.appendToHammingIndex(spark, hm, fingerprints(10, 20)), 10)
+
+    // the span tier's probe is its intake step, which appends the
+    // batch's new grams: the probe of the emptied index is the append,
+    // and each probe takes fresh ids (same-owner grams never cut)
+    val sp = indexPath("span")
+    Dedup.buildSpanIndex(prose(0, 50), "id", "text", 3, sp, nShards = 4)
+    var round = 0L
+    emptied("span", tableRows(sp, "grams"),
+      Dedup.deleteFromSpanIndex(spark, sp, prose(0, 50), "id", "text")
+        .rowsDeleted,
+      () => {
+        round += 1
+        Dedup.intakeStepAgainstSpanIndex(spark, sp,
+            prose(10, 20, 1000L * round), "id", "text")
+          .where(col("n_removed") > 0)
+      }, (), 10)
+
+    val iv = indexPath("ivf")
+    val cents = IvfAnn.seedCentroidsInt(vectors(0, 50), "id", "vec", nlist = 4)
+    IvfAnn.buildIndexInt(vectors(0, 50), "id", "vec", cents, iv)
+    emptied("ivf", 50,
+      IvfAnn.deleteFromIndexInt(spark, iv, vectors(0, 50), "id", "vec", cents)
+        .rowsDeleted,
+      () => IvfAnn.searchIndexInt(spark, iv, vectorQueries(10, 20), "id", "vec",
+        "q_id", "q_vec", cents, k = 1, nprobe = 4),
+      IvfAnn.appendToIndexInt(vectors(10, 20), "id", "vec", cents, iv), 10)
+
+    val pq = indexPath("ivfpq")
+    Pq.buildIndexIvfPq(vectors(0, 50), "id", "vec", pq, nlist = 4, m = 2,
+      ncode = 4)
+    emptied("ivf-pq", 50,
+      Pq.deleteFromIndexIvfPq(spark, pq, vectors(0, 50), "id", "vec")
+        .rowsDeleted,
+      () => Pq.searchIndexIvfPq(spark, pq, vectorQueries(10, 20), "q_id",
+        "q_vec", k = 1, nprobe = 4),
+      Pq.appendToIndexIvfPq(spark, vectors(10, 20), "id", "vec", pq), 10)
+  }
+
+  test("an emptied index whose meta predates its recorded schema fails " +
+      "naming a rebuild") {
+    // layouts built before the tables' schemas were recorded: the
+    // takedown itself completes, and the emptied read names the fix
+    // instead of failing with UNABLE_TO_INFER_SCHEMA. The exact tier
+    // keeps its fixed legacy shape and stays probe-able.
+    import graft.operators.{Dedup, IvfAnn}
+    def predate(metaDir: String, cols: String*): Unit = {
+      val m = spark.read.parquet(metaDir).drop(cols: _*)
+      spark.createDataFrame(m.collectAsList(), m.schema)
+        .write.mode("overwrite").parquet(metaDir)
+    }
+    def rebuildNamed(tier: String)(read: => Any): Unit = {
+      val e = intercept[IllegalStateException](read)
+      assert(e.getMessage.contains("rebuild the index"), s"$tier: $e")
+    }
+
+    val ex = indexPath("legacy_exact")
+    Dedup.buildExactIndex(docs(0, 10), "id", col("text"), ex, nShards = 4)
+    predate(s"$ex/meta", "digest_ddl")
+    Dedup.deleteFromExactIndex(spark, ex, docs(0, 10), "id", col("text"))
+    assert(Dedup.probeExactIndex(spark, ex, docs(0, 10), "id", col("text"))
+      .count() === 0)
+
+    val fz = indexPath("legacy_fuzzy")
+    Dedup.buildFuzzyIndex(prose(0, 10), "id", "text", fz, nShards = 4)
+    predate(s"$fz/meta", "sets_ddl", "bands_ddl")
+    val stored = tableRows(fz, "bands")
+    val r = Dedup.deleteFromFuzzyIndex(spark, fz, prose(0, 10), "id")
+    assert(r("sets").rowsDeleted === 10 && r("bands").rowsDeleted === stored,
+      "both tables are taken down before anything reads them emptied")
+    rebuildNamed("fuzzy")(Dedup.probeFuzzyIndex(spark, fz, prose(0, 2), "id",
+      "text", threshold = 1.0))
+
+    val iv = indexPath("legacy_ivf")
+    val cents = IvfAnn.seedCentroidsInt(vectors(0, 10), "id", "vec", nlist = 2)
+    IvfAnn.buildIndexInt(vectors(0, 10), "id", "vec", cents, iv)
+    predate(s"$iv/_centroids", "data_ddl")
+    IvfAnn.deleteFromIndexInt(spark, iv, vectors(0, 10), "id", "vec", cents)
+    rebuildNamed("ivf")(IvfAnn.searchIndexInt(spark, iv, vectorQueries(0, 2),
+      "id", "vec", "q_id", "q_vec", cents, k = 1, nprobe = 2))
   }
 
   test("appendIdempotent: a replayed batch commits at most once, even racing") {
@@ -1212,6 +1346,52 @@ class TxLogSpec extends SparkSpec {
     // one pruned reader: the only other empty frame is changes'
     // metadata-only CDC window
     assert(usersOf("emptyRDD") === Set("prunedRead", "changes"))
+  }
+
+  test("one index table: only IndexTable writes, prunes, rewrites and " +
+      "caches the persisted index tables") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    require(java.nio.file.Files.isDirectory(root),
+      s"$root not found: the suite runs from the repository root")
+    val files = java.nio.file.Files.walk(root).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toVector
+    // (file stem, enclosing top-level member, code line) per line
+    val member = """^  (?:private(?:\[\w+\])? )?(?:def|val|lazy val) (\w+)""".r
+    val code = files.flatMap { f =>
+      val lines = scala.io.Source.fromFile(f.toFile, "UTF-8").getLines().toVector
+      val owners = lines.scanLeft("")((cur, l) =>
+        member.findFirstMatchIn(l).map(_.group(1)).getOrElse(cur)).tail
+      val stem = f.getFileName.toString.stripSuffix(".scala")
+      lines.zip(owners).collect {
+        case (l, o) if !l.trim.startsWith("*") && !l.trim.startsWith("//") =>
+          (stem, o, l)
+      }
+    }
+    val indexFiles = Set("Dedup", "IvfAnn", "Pq", "Compaction", "IndexTable")
+    def usersOf(token: String, in: Set[String] = indexFiles): Set[String] =
+      code.collect {
+        case (f, o, l) if in(f) && l.contains(token) => s"$f.$o"
+      }.toSet
+    val everywhere = files.map(_.getFileName.toString.stripSuffix(".scala")).toSet
+    Seq("__shard", "__idshard", "__cell").foreach { c =>
+      assert(usersOf(s"""partitionBy("$c")""", everywhere) === Set.empty, c)
+    }
+    assert(usersOf(".partitionBy(shardCol)") ===
+      Set("IndexTable.write", "IndexTable.rewriteShards"))
+    assert(usersOf("rewriteShards(") ===
+      Set("IndexTable.takedown", "IndexTable.rewriteShards"))
+    assert(usersOf(".isin(") === Set("IndexTable.read"))
+    assert(usersOf("ConcurrentHashMap") === Set("IndexTable.metaCache"))
+    assert(usersOf("emptyRDD") === Set("IndexTable.readAll"))
+    // the removed pruning knob stays gone, from tests too
+    val knob = "static" + "Prune"
+    val src = java.nio.file.Paths.get("src")
+    val knobUsers = java.nio.file.Files.walk(src).iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter(f => scala.io.Source.fromFile(f.toFile, "UTF-8").mkString
+        .contains(knob)).toVector
+    assert(knobUsers.isEmpty, knobUsers.mkString(", "))
   }
 }
 
