@@ -368,7 +368,10 @@ class TxLogSpec extends SparkSpec {
     // keeps its fixed legacy shape and stays probe-able.
     import graft.operators.{Dedup, IvfAnn}
     def predate(metaDir: String, cols: String*): Unit = {
-      val m = spark.read.parquet(metaDir).drop(cols: _*)
+      // part files by name: `_centroids/` read as a dir is a hidden path
+      val parts = new java.io.File(metaDir).listFiles()
+        .map(_.getPath).filter(_.endsWith(".parquet"))
+      val m = spark.read.parquet(parts.toIndexedSeq: _*).drop(cols: _*)
       spark.createDataFrame(m.collectAsList(), m.schema)
         .write.mode("overwrite").parquet(metaDir)
     }
